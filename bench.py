@@ -378,7 +378,8 @@ def _steal_jiffies() -> "int | None":
     hour in bursts finer than the in-section probe spacing, so probes
     alone under-attribute; a per-region delta cannot miss."""
     try:
-        fields = open("/proc/stat").readline().split()
+        with open("/proc/stat") as fh:
+            fields = fh.readline().split()
         return int(fields[8]) if fields and fields[0] == "cpu" else None
     except (OSError, ValueError, IndexError):
         return None

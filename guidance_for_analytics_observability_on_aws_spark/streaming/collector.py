@@ -45,23 +45,6 @@ from ..sources.telemetry import task_metrics
 NEW_DOC_BOUNDARY = 1_000_000
 
 
-def _collected_and_cleaned(
-    spark: SparkSession, df: DataFrame, work: str | None
-) -> DataFrame:
-    """Materialize a SMALL result, then delete the runner's scratch dir.
-
-    The availableNow runners write sinks/checkpoints under a mkdtemp dir;
-    returning a lazy DataFrame over those files would leak the dir (it
-    must outlive the return). Every runner's result is an aggregate
-    (route counts, stage rows, top-k), so collecting it first lets the
-    scratch dir go immediately.
-    """
-    rows = df.collect()
-    if work:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, df.schema)
-
-
 #: Target bytes of source input per streaming state/shuffle partition —
 #: the stream twin of the CC loops' CC_EDGE_ROWS_PER_PARTITION rule (one
 #: ~input-split of work per state task).
@@ -157,6 +140,89 @@ def _scaled_state_shuffle(spark: SparkSession, sf_dir: str, glob: str = "*.parqu
             spark.conf.set(key, old)
 
 
+class _AvailableNow:
+    """The one lifecycle of an availableNow streaming run.
+
+    ``with _AvailableNow(spark, src, glob, out_dir) as run:`` owns
+
+    * the state width: each run goes start → ``awaitTermination``
+      under :func:`_scaled_state_shuffle` sized from ``src``/``glob``, so
+      result reads after it keep the session width;
+    * the scratch dir ``run.dir``: the caller's ``out_dir`` (kept), else a
+      mkdtemp dir created on first use and removed on exit;
+    * the memory-sink name: unique per run, so sequential or concurrent
+      runs never share (or silently overwrite) a sink;
+
+    and on exit, failure included, stops a still-active query, drops the
+    memory view and removes the owned dir. Results read from scratch FILES
+    must therefore be collected inside the block (:meth:`collected`);
+    results over a memory sink stay lazy — :meth:`memory` returns the
+    resolved sink table, which keeps its data after the view is dropped.
+
+    A caller-owned ``out_dir`` that already holds a checkpoint is refused:
+    the availableNow run would be a no-op while the stale sink files are
+    re-read (or appended to) as fresh results.
+    """
+
+    def __init__(
+        self, spark: SparkSession, src: str, glob: str, out_dir: str | None = None
+    ) -> None:
+        if out_dir and os.path.exists(os.path.join(out_dir, "_chk")):
+            raise ValueError(
+                f"out_dir {out_dir!r} already holds a streaming checkpoint "
+                "(_chk); pass a fresh directory per run or delete it first"
+            )
+        self.spark, self._src, self._glob = spark, src, glob
+        self._dir, self._owned_dir, self._name = out_dir, None, None
+        self._query = None
+        self.progress: list[dict] = []
+
+    def __enter__(self) -> "_AvailableNow":
+        return self
+
+    @property
+    def dir(self) -> str:
+        if self._dir is None:
+            self._dir = self._owned_dir = tempfile.mkdtemp(prefix="gfaooa_stream_")
+        return self._dir
+
+    def _run(self, writer) -> list[dict]:
+        with _scaled_state_shuffle(self.spark, self._src, self._glob):
+            self._query = writer.trigger(availableNow=True).start()
+            self._query.awaitTermination()
+        self.progress = self._query.recentProgress
+        return self.progress
+
+    def start(self, writer) -> list[dict]:
+        """Run ``writer``, checkpointed at ``<run.dir>/_chk``, to
+        completion; returns the finished query's ``recentProgress``."""
+        return self._run(writer.option("checkpointLocation", f"{self.dir}/_chk"))
+
+    def foreach_batch(self, df: DataFrame, fn) -> list[dict]:
+        return self.start(df.writeStream.foreachBatch(fn))
+
+    def memory(self, df: DataFrame, mode: str) -> DataFrame:
+        """Run ``df`` into the run's memory sink; returns the resolved sink
+        table (its ``recentProgress`` is left in ``run.progress``)."""
+        self._name = f"gfaooa_sink_{uuid.uuid4().hex}"
+        writer = df.writeStream.format("memory").queryName(self._name)
+        self._run(writer.outputMode(mode))
+        return self.spark.table(self._name)
+
+    def collected(self, df: DataFrame) -> DataFrame:
+        return self.spark.createDataFrame(df.collect(), df.schema)
+
+    def __exit__(self, *exc) -> None:
+        try:
+            if self._query is not None and self._query.isActive:
+                self._query.stop()
+        finally:
+            if self._name is not None:
+                self.spark.catalog.dropTempView(self._name)
+            if self._owned_dir is not None:
+                shutil.rmtree(self._owned_dir, ignore_errors=True)
+
+
 def events_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -202,26 +268,20 @@ def run_collector_pipeline(
     metrics-pipeline routing in ``deployment/infra/resources/pipelines/
     metrics-pipeline.yaml``.
     """
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_stream_")
-    out = out_dir or work
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        run.start(
             tm.writeStream.format("parquet")
-            .option("path", f"{out}/routed")
-            .option("checkpointLocation", f"{out}/_chk")
+            .option("path", f"{run.dir}/routed")
             .partitionBy("metrics_type")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    routed = spark.read.parquet(f"{out}/routed")
-    summary = (
-        routed.groupBy("metrics_type")
-        .agg(F.count(F.lit(1)).alias("n_records"))
-        .orderBy("metrics_type")
-    )
-    return _collected_and_cleaned(spark, summary, work)
+        routed = spark.read.parquet(f"{run.dir}/routed")
+        summary = (
+            routed.groupBy("metrics_type")
+            .agg(F.count(F.lit(1)).alias("n_records"))
+            .orderBy("metrics_type")
+        )
+        return run.collected(summary)
 
 
 def run_streaming_stage_agg(
@@ -243,28 +303,18 @@ def run_streaming_stage_agg(
     """
     from ..operators.observability import stage_agg_skewness
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_stageagg_")
-    out = out_dir or work
     tm = task_metrics(events_stream(spark, sf_dir))
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
 
-    def _close_stages(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            stage_agg_skewness(batch_df)
-            .write.mode("append")
-            .parquet(f"{out}/stage_agg")
-        )
+        def _close_stages(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                stage_agg_skewness(batch_df)
+                .write.mode("append")
+                .parquet(f"{run.dir}/stage_agg")
+            )
 
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_close_stages)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _collected_and_cleaned(
-        spark, spark.read.parquet(f"{out}/stage_agg"), work
-    )
+        run.foreach_batch(tm, _close_stages)
+        return run.collected(spark.read.parquet(f"{run.dir}/stage_agg"))
 
 
 def run_windowed_rollup(
@@ -277,19 +327,9 @@ def run_windowed_rollup(
     windows (the watermark never advances past end-of-stream); complete
     mode emits the full window table, which is what the batch twin computes.
     """
-    name = "gfaooa_rollup_sink"
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            windowed_rollup(tm)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    with _AvailableNow(spark, sf_dir, "events.parquet") as run:
+        return run.memory(windowed_rollup(tm), "complete")
 
 
 def run_streaming_sessions(
@@ -308,7 +348,6 @@ def run_streaming_sessions(
     :func:`run_windowed_rollup`; update mode is rejected for session
     windows and append withholds trailing open sessions.
     """
-    name = "gfaooa_sessions_sink"
     tm = task_metrics(events_stream(spark, sf_dir))
     sess = (
         tm.withWatermark("metric_time", "30 minutes")
@@ -329,16 +368,8 @@ def run_streaming_sessions(
             (F.col("session_end_ms") - F.col("session_start_ms")).alias("duration_ms"),
         )
     )
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    with _AvailableNow(spark, sf_dir, "events.parquet") as run:
+        return run.memory(sess, "complete")
 
 
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,7 +394,6 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event-time column in the key also lets Spark evict a key's state
     as soon as it falls behind the watermark.
     """
-    name = "gfaooa_dedup_sink"
     doubled = events_stream(spark, sf_dir).unionAll(events_stream(spark, sf_dir))
     dedup = (
         task_metrics(doubled)
@@ -371,16 +401,8 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["task_id", "app_id", "metric_time"])
         .select("task_id", "app_id", "metrics_type", "metric_time_ms", "value")
     )
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    with _AvailableNow(spark, sf_dir, "events.parquet") as run:
+        return run.memory(dedup, "append")
 
 
 def run_streaming_alerts(
@@ -394,26 +416,17 @@ def run_streaming_alerts(
     """
     from ..operators.observability import alert_rollup, alert_violations
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_alerts_")
-    out = out_dir or work
-
-    def _check_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist raw violation rows: counts/distincts then roll up exactly
-        # across batches (aggregated partials would not merge distincts)
-        alert_violations(batch_df).write.mode("append").parquet(f"{out}/alerts")
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_check_batch)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _collected_and_cleaned(
-        spark, alert_rollup(spark.read.parquet(f"{out}/alerts")), work
-    )
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        alerts = f"{run.dir}/alerts"
+
+        def _check_batch(batch_df: DataFrame, batch_id: int) -> None:
+            # persist raw violation rows: counts/distincts then roll up exactly
+            # across batches (aggregated partials would not merge distincts)
+            alert_violations(batch_df).write.mode("append").parquet(alerts)
+
+        run.foreach_batch(tm, _check_batch)
+        return run.collected(alert_rollup(spark.read.parquet(alerts)))
 
 
 def run_streaming_incremental_dedup(
@@ -434,10 +447,6 @@ def run_streaming_incremental_dedup(
     """
     from ..functions.text import corpus, tokens
 
-    # Unique per invocation: a fixed queryName would fail on a second
-    # concurrent run (duplicate active query) and silently overwrite the
-    # memory table on sequential reruns.
-    name = f"gfaooa_incdedup_sink_{uuid.uuid4().hex}"
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(docs_schema)
@@ -468,25 +477,13 @@ def run_streaming_incremental_dedup(
     kept = new_stream.join(F.broadcast(exact_dict), "exact_fp", "left_anti").join(
         F.broadcast(content_dict), "content_fp", "left_anti"
     )
-    with _scaled_state_shuffle(spark, sf_dir, "documents.parquet"):
-        q = (
-            kept.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    result = _collected_and_cleaned(
-        spark,
-        spark.table(name)
-        .groupBy("source")
+    with _AvailableNow(spark, sf_dir, "documents.parquet") as run:
+        kept = run.memory(kept, "append")
+    return (
+        kept.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_kept"))
-        .orderBy("source"),
-        None,
+        .orderBy("source")
     )
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def run_streaming_media_dedup(
@@ -513,7 +510,6 @@ def run_streaming_media_dedup(
     from ..functions.text import corpus
     from ..operators.multimodal import media_fingerprints
 
-    name = f"gfaooa_mediadedup_sink_{uuid.uuid4().hex}"
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(docs_schema)
@@ -536,28 +532,16 @@ def run_streaming_media_dedup(
     kept = new_fp.join(
         F.broadcast(static_dict), ["modality", "payload_md5"], "left_anti"
     )
-    with _scaled_state_shuffle(spark, sf_dir, "documents.parquet"):
-        q = (
-            kept.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    result = _collected_and_cleaned(
-        spark,
-        spark.table(name)
-        .groupBy("modality")
+    with _AvailableNow(spark, sf_dir, "documents.parquet") as run:
+        kept = run.memory(kept, "append")
+    return (
+        kept.groupBy("modality")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
             F.sum("byte_len").cast("long").alias("kept_bytes"),
         )
-        .orderBy("modality"),
-        None,
+        .orderBy("modality")
     )
-    spark.catalog.dropTempView(name)
-    return result
 
 
 def run_streaming_heavy_hitters(
@@ -575,24 +559,15 @@ def run_streaming_heavy_hitters(
     """
     from ..operators.observability import cms_key_buckets, cms_topk
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_cms_")
-    out = out_dir or work
-
-    def _sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_key_buckets(batch_df).write.mode("append").parquet(f"{out}/partials")
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_sketch_batch)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return _collected_and_cleaned(
-        spark, cms_topk(spark.read.parquet(f"{out}/partials")), work
-    )
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
+
+        def _sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
+            cms_key_buckets(batch_df).write.mode("append").parquet(partials)
+
+        run.foreach_batch(tm, _sketch_batch)
+        return run.collected(cms_topk(spark.read.parquet(partials)))
 
 
 def run_streaming_metric_log_join(
@@ -624,17 +599,6 @@ def run_streaming_metric_log_join(
     one minute's rows, and took the same sf0.1 run to ~10 s — same
     output, state cardinality |executors|·minutes instead of |executors|.
     """
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_ssjoin_")
-    out = out_dir or work
-    if out_dir and os.path.exists(os.path.join(out_dir, "_chk")):
-        # A pre-existing checkpoint would make the availableNow run a
-        # no-op while stale files under pairs/ are silently re-read as
-        # "results" — refuse instead (same reuse hazard the uuid
-        # queryName fix closed for run_streaming_incremental_dedup).
-        raise ValueError(
-            f"out_dir {out_dir!r} already holds a streaming checkpoint "
-            "(_chk); pass a fresh directory per run or delete it first"
-        )
     errors = (
         task_metrics(events_stream(spark, sf_dir))
         .filter(F.col("metrics_type") == "logs")
@@ -674,29 +638,23 @@ def run_streaming_metric_log_join(
         & (F.col("m_time") <= F.col("err_time"))
     )
     joined = errors.join(metrics, cond)
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", f"{out}/pairs")
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        pairs = f"{run.dir}/pairs"
+        run.start(joined.writeStream.format("parquet").option("path", pairs))
+        result = (
+            # Explicit schema: a zero-match run leaves the sink dir with only
+            # _spark_metadata, and schema inference would throw on it; the
+            # rollup must return its empty shape instead.
+            spark.read.schema(joined.schema).parquet(pairs)
+            .groupBy(F.col("e_executor_id").alias("executor_id"))
+            .agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                F.countDistinct("err_task_id").alias("n_errors_with_context"),
+                F.sum("input_bytes_read").alias("bytes_60s"),
+            )
+            .orderBy("executor_id")
         )
-        q.awaitTermination()
-    result = (
-        # Explicit schema: a zero-match run leaves the sink dir with only
-        # _spark_metadata, and schema inference would throw on it; the
-        # rollup must return its empty shape instead.
-        spark.read.schema(joined.schema).parquet(f"{out}/pairs")
-        .groupBy(F.col("e_executor_id").alias("executor_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.countDistinct("err_task_id").alias("n_errors_with_context"),
-            F.sum("input_bytes_read").alias("bytes_60s"),
-        )
-        .orderBy("executor_id")
-    )
-    return _collected_and_cleaned(spark, result, work)
+        return run.collected(result)
 
 
 def run_streaming_rolling_wau(
@@ -741,7 +699,6 @@ def run_streaming_rolling_wau(
     """
     from ..sources.telemetry import normalize_events
 
-    name = f"gfaooa_wau_sink_{uuid.uuid4().hex}"
     ev = normalize_events(
         events_stream(
             spark,
@@ -765,18 +722,10 @@ def run_streaming_rolling_wau(
         ).dropDuplicatesWithinWatermark(["user_id", "report_day"])
     else:
         firsts = covered.dropDuplicates(["user_id", "report_day"])
-    with _scaled_state_shuffle(spark, sf_dir, events_glob):
-        q = (
-            firsts.drop("ts")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    with _AvailableNow(spark, sf_dir, events_glob) as run:
+        emitted = run.memory(firsts.drop("ts"), "append")
     if progress_out is not None:
-        for p in q.recentProgress:
+        for p in run.progress:
             for op in p.get("stateOperators", []):
                 progress_out.append((p["batchId"], op["numRowsTotal"]))
     # Clip to the data's last day (T42's "every emitted day fully defined"
@@ -790,9 +739,8 @@ def run_streaming_rolling_wau(
         .agg(F.max(F.expr("unix_millis(ts) DIV 86400000")).alias("d"))
         .collect()[0]["d"]
     )
-    result = (
-        spark.table(name)
-        .filter(F.col("report_day") <= last_day)
+    return (
+        emitted.filter(F.col("report_day") <= last_day)
         .groupBy("report_day")
         .agg(F.count(F.lit(1)).alias("rolling_active_users"))
         .select(
@@ -801,9 +749,6 @@ def run_streaming_rolling_wau(
         )
         .orderBy("report_day_ms")
     )
-    out = _collected_and_cleaned(spark, result, None)
-    spark.catalog.dropTempView(name)
-    return out
 
 
 def run_streaming_tail_sampling(
@@ -823,67 +768,63 @@ def run_streaming_tail_sampling(
     """
     from ..operators import observability as obs
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_tail_")
-    out = out_dir or work
     static_tm = task_metrics(
         spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     )
     thresholds = obs.tail_thresholds(static_tm).localCheckpoint(eager=True)
-
-    def _classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            obs.tail_classified(batch_df, thresholds)
-            .groupBy("event_type", "reason")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("p99_value").alias("p99_value"))
-            .write.mode("append")
-            .parquet(f"{out}/partials")
-        )
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_classify_batch)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    partials = spark.read.parquet(f"{out}/partials")
-    kept = lambda r: F.sum(  # noqa: E731
-        F.when(F.col("reason") == r, F.col("n")).otherwise(0)
-    ).cast("long")
-    rollup = (
-        partials.groupBy("event_type")
-        .agg(
-            F.sum("n").cast("long").alias("n_total"),
-            kept("error").alias("n_error_kept"),
-            kept("tail").alias("n_tail_kept"),
-            kept("baseline").alias("n_baseline_kept"),
-            F.max("p99_value").alias("p99_value"),
-        )
-        .select(
-            "event_type",
-            "n_total",
-            "n_error_kept",
-            "n_tail_kept",
-            "n_baseline_kept",
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
+
+        def _classify_batch(batch_df: DataFrame, batch_id: int) -> None:
             (
-                F.col("n_error_kept")
-                + F.col("n_tail_kept")
-                + F.col("n_baseline_kept")
-            ).alias("n_kept"),
-            "p99_value",
-            (
+                obs.tail_classified(batch_df, thresholds)
+                .groupBy("event_type", "reason")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.max("p99_value").alias("p99_value"),
+                )
+                .write.mode("append")
+                .parquet(partials)
+            )
+
+        run.foreach_batch(tm, _classify_batch)
+        kept = lambda r: F.sum(  # noqa: E731
+            F.when(F.col("reason") == r, F.col("n")).otherwise(0)
+        ).cast("long")
+        rollup = (
+            spark.read.parquet(partials)
+            .groupBy("event_type")
+            .agg(
+                F.sum("n").cast("long").alias("n_total"),
+                kept("error").alias("n_error_kept"),
+                kept("tail").alias("n_tail_kept"),
+                kept("baseline").alias("n_baseline_kept"),
+                F.max("p99_value").alias("p99_value"),
+            )
+            .select(
+                "event_type",
+                "n_total",
+                "n_error_kept",
+                "n_tail_kept",
+                "n_baseline_kept",
                 (
                     F.col("n_error_kept")
                     + F.col("n_tail_kept")
                     + F.col("n_baseline_kept")
-                )
-                / F.col("n_total")
-            ).alias("kept_share"),
+                ).alias("n_kept"),
+                "p99_value",
+                (
+                    (
+                        F.col("n_error_kept")
+                        + F.col("n_tail_kept")
+                        + F.col("n_baseline_kept")
+                    )
+                    / F.col("n_total")
+                ).alias("kept_share"),
+            )
         )
-    )
-    return _collected_and_cleaned(spark, rollup, work)
+        return run.collected(rollup)
 
 
 def run_streaming_near_dedup(
@@ -926,7 +867,6 @@ def run_streaming_near_dedup(
         ).filter(F.size("toks") >= 3)
 
     k = len(MINHASH_AB)
-    work = tempfile.mkdtemp(prefix="gfaooa_neardedup_")
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(docs_schema)
@@ -954,40 +894,6 @@ def run_streaming_near_dedup(
         term = F.when(F.col(f"mh{i}") == F.col(f"o{i}"), 1).otherwise(0)
         n_matching = term if n_matching is None else n_matching + term
 
-    def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_docs = corpus(batch_df).filter(F.col("doc_id") >= corpus_boundary)
-        new_sig = minhash_signatures(
-            None, base=shingle_base(new_docs)
-        ).localCheckpoint(eager=True)
-        cand = (
-            band_buckets(new_sig)
-            .join(F.broadcast(old_bands), ["band_id", "band_hash"])
-            .select("doc_id", "old_id")
-            .distinct()
-        )
-        confirmed = (
-            cand.join(new_sig, "doc_id")
-            .join(F.broadcast(old_sig_b), "old_id")
-            .withColumn("n_matching", n_matching)
-            .filter(F.col("n_matching") >= min_matching)
-            .select("doc_id")
-            .distinct()
-        )
-        (
-            new_docs.select("doc_id", "source")
-            .join(confirmed, "doc_id", "left_anti")
-            .write.mode("append")
-            .parquet(f"{work}/kept")
-        )
-
-    with _scaled_state_shuffle(spark, sf_dir, "documents.parquet"):
-        q = (
-            stream.writeStream.foreachBatch(_gate_batch)
-            .option("checkpointLocation", f"{work}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     # Explicit schema: if no micro-batch carried any doc past the
     # boundary, the kept sink has no parquet footers and a schema-less
     # read raises AnalysisException instead of yielding the correct
@@ -998,14 +904,44 @@ def run_streaming_near_dedup(
             T.StructField("source", T.StringType()),
         ]
     )
-    result = (
-        spark.read.schema(kept_schema)
-        .parquet(f"{work}/kept")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-        .orderBy("source")
-    )
-    return _collected_and_cleaned(spark, result, work)
+    with _AvailableNow(spark, sf_dir, "documents.parquet") as run:
+        kept = f"{run.dir}/kept"
+
+        def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
+            new_docs = corpus(batch_df).filter(F.col("doc_id") >= corpus_boundary)
+            new_sig = minhash_signatures(
+                None, base=shingle_base(new_docs)
+            ).localCheckpoint(eager=True)
+            cand = (
+                band_buckets(new_sig)
+                .join(F.broadcast(old_bands), ["band_id", "band_hash"])
+                .select("doc_id", "old_id")
+                .distinct()
+            )
+            confirmed = (
+                cand.join(new_sig, "doc_id")
+                .join(F.broadcast(old_sig_b), "old_id")
+                .withColumn("n_matching", n_matching)
+                .filter(F.col("n_matching") >= min_matching)
+                .select("doc_id")
+                .distinct()
+            )
+            (
+                new_docs.select("doc_id", "source")
+                .join(confirmed, "doc_id", "left_anti")
+                .write.mode("append")
+                .parquet(kept)
+            )
+
+        run.foreach_batch(stream, _gate_batch)
+        result = (
+            spark.read.schema(kept_schema)
+            .parquet(kept)
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n_kept"))
+            .orderBy("source")
+        )
+        return run.collected(result)
 
 
 def run_streaming_trend_regression(
@@ -1023,8 +959,6 @@ def run_streaming_trend_regression(
     """
     from ..operators import observability as obs
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_trend_")
-    out = out_dir or work
     static_tm = task_metrics(
         spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     )
@@ -1034,51 +968,6 @@ def run_streaming_trend_regression(
         .localCheckpoint(eager=True)
     )
     dec = "decimal(38,0)"
-
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        base = batch_df.select(
-            "event_type",
-            "metric_time_ms",
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
-        ).join(F.broadcast(t0), "event_type")
-        wt = base.withColumn("t", F.expr("(metric_time_ms - t0_ms) DIV 1000"))
-        (
-            wt.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.col("t").cast(dec)).alias("st"),
-                F.sum(F.col("x").cast(dec)).alias("sx"),
-                F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
-                F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
-                F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-                F.max("t0_ms").alias("t0_ms"),
-            )
-            .write.mode("append")
-            .parquet(f"{out}/partials")
-        )
-
-    tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    totals = (
-        spark.read.parquet(f"{out}/partials")
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("st").cast(dec).alias("st"),
-            F.sum("sx").cast(dec).alias("sx"),
-            F.sum("stx").cast(dec).alias("stx"),
-            F.sum("stt").cast(dec).alias("stt"),
-            F.sum("sxx").cast(dec).alias("sxx"),
-            F.max("t0_ms").alias("t0_ms"),
-        )
-    )
     n = F.col("n").cast("double")
     st = F.col("st").cast("double")
     sx = F.col("sx").cast("double")
@@ -1088,17 +977,57 @@ def run_streaming_trend_regression(
     cov_n = n * stx - st * sx
     var_t = n * stt - st * st
     var_x = n * sxx - sx * sx
-    result = totals.select(
-        "event_type",
-        F.col("n").alias("n_events"),
-        "t0_ms",
-        F.try_divide(cov_n, var_t).alias("slope_cents_per_s"),
-        F.try_divide(sx - F.try_divide(cov_n, var_t) * st, n).alias(
-            "intercept_cents"
-        ),
-        F.try_divide(cov_n * cov_n, var_t * var_x).alias("r2"),
-    )
-    return _collected_and_cleaned(spark, result, work)
+    tm = task_metrics(events_stream(spark, sf_dir))
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
+
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            base = batch_df.select(
+                "event_type",
+                "metric_time_ms",
+                F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
+            ).join(F.broadcast(t0), "event_type")
+            wt = base.withColumn("t", F.expr("(metric_time_ms - t0_ms) DIV 1000"))
+            (
+                wt.groupBy("event_type")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n"),
+                    F.sum(F.col("t").cast(dec)).alias("st"),
+                    F.sum(F.col("x").cast(dec)).alias("sx"),
+                    F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
+                    F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
+                    F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
+                    F.max("t0_ms").alias("t0_ms"),
+                )
+                .write.mode("append")
+                .parquet(partials)
+            )
+
+        run.foreach_batch(tm, _partials)
+        totals = (
+            spark.read.parquet(partials)
+            .groupBy("event_type")
+            .agg(
+                F.sum("n").cast("long").alias("n"),
+                F.sum("st").cast(dec).alias("st"),
+                F.sum("sx").cast(dec).alias("sx"),
+                F.sum("stx").cast(dec).alias("stx"),
+                F.sum("stt").cast(dec).alias("stt"),
+                F.sum("sxx").cast(dec).alias("sxx"),
+                F.max("t0_ms").alias("t0_ms"),
+            )
+        )
+        result = totals.select(
+            "event_type",
+            F.col("n").alias("n_events"),
+            "t0_ms",
+            F.try_divide(cov_n, var_t).alias("slope_cents_per_s"),
+            F.try_divide(sx - F.try_divide(cov_n, var_t) * st, n).alias(
+                "intercept_cents"
+            ),
+            F.try_divide(cov_n * cov_n, var_t * var_x).alias("r2"),
+        )
+        return run.collected(result)
 
 
 def run_streaming_error_budget(
@@ -1116,48 +1045,40 @@ def run_streaming_error_budget(
     """
     from ..operators.observability import error_budget_tail
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_budget_")
-    out = out_dir or work
-
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy(
-                "app_name",
-                (
-                    F.col("metric_time_ms")
-                    - F.pmod(F.col("metric_time_ms"), F.lit(86400000))
-                ).alias("day_ms"),
-            )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_logs"),
-                F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-                .cast("long")
-                .alias("n_errors"),
-            )
-            .write.mode("append")
-            .parquet(f"{out}/partials")
-        )
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
+
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                batch_df.groupBy(
+                    "app_name",
+                    (
+                        F.col("metric_time_ms")
+                        - F.pmod(F.col("metric_time_ms"), F.lit(86400000))
+                    ).alias("day_ms"),
+                )
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_logs"),
+                    F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+                    .cast("long")
+                    .alias("n_errors"),
+                )
+                .write.mode("append")
+                .parquet(partials)
+            )
+
+        run.foreach_batch(tm, _partials)
+        per_day = (
+            spark.read.parquet(partials)
+            .groupBy("app_name", "day_ms")
+            .agg(
+                F.sum("n_logs").cast("long").alias("n_logs"),
+                F.sum("n_errors").cast("long").alias("n_errors"),
+            )
         )
-        q.awaitTermination()
-    per_day = (
-        spark.read.parquet(f"{out}/partials")
-        .groupBy("app_name", "day_ms")
-        .agg(
-            F.sum("n_logs").cast("long").alias("n_logs"),
-            F.sum("n_errors").cast("long").alias("n_errors"),
-        )
-    )
-    # the IDENTICAL batch tail — single definition, zero drift possible
-    result = error_budget_tail(per_day)
-    return _collected_and_cleaned(spark, result, work)
+        # the IDENTICAL batch tail — single definition, zero drift possible
+        return run.collected(error_budget_tail(per_day))
 
 
 def run_streaming_burn_rate(
@@ -1175,47 +1096,39 @@ def run_streaming_burn_rate(
     """
     from ..operators.observability import burn_rate_multiwindow_tail
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_burn_")
-    out = out_dir or work
-
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy(
-                "app_name",
-                (
-                    F.col("metric_time_ms")
-                    - F.pmod(F.col("metric_time_ms"), F.lit(3600000))
-                ).alias("hour_ms"),
-            )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_logs"),
-                F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-                .cast("long")
-                .alias("n_errors"),
-            )
-            .write.mode("append")
-            .parquet(f"{out}/partials")
-        )
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
+
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            (
+                batch_df.groupBy(
+                    "app_name",
+                    (
+                        F.col("metric_time_ms")
+                        - F.pmod(F.col("metric_time_ms"), F.lit(3600000))
+                    ).alias("hour_ms"),
+                )
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_logs"),
+                    F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+                    .cast("long")
+                    .alias("n_errors"),
+                )
+                .write.mode("append")
+                .parquet(partials)
+            )
+
+        run.foreach_batch(tm, _partials)
+        per_hour = (
+            spark.read.parquet(partials)
+            .groupBy("app_name", "hour_ms")
+            .agg(
+                F.sum("n_logs").cast("long").alias("n_logs"),
+                F.sum("n_errors").cast("long").alias("n_errors"),
+            )
         )
-        q.awaitTermination()
-    per_hour = (
-        spark.read.parquet(f"{out}/partials")
-        .groupBy("app_name", "hour_ms")
-        .agg(
-            F.sum("n_logs").cast("long").alias("n_logs"),
-            F.sum("n_errors").cast("long").alias("n_errors"),
-        )
-    )
-    result = burn_rate_multiwindow_tail(per_hour)
-    return _collected_and_cleaned(spark, result, work)
+        return run.collected(burn_rate_multiwindow_tail(per_hour))
 
 
 def run_streaming_histogram_rollup(
@@ -1240,30 +1153,21 @@ def run_streaming_histogram_rollup(
         histogram_percentile_tail,
     )
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_histo_")
-    out = out_dir or work
-
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        histogram_minute_partials(batch_df).write.mode("append").parquet(
-            f"{out}/partials"
-        )
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
+
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            histogram_minute_partials(batch_df).write.mode("append").parquet(partials)
+
+        run.foreach_batch(tm, _partials)
+        minute = (
+            spark.read.parquet(partials)
+            .groupBy("event_type", "bucket_ms", "bin")
+            .agg(F.sum("n").cast("long").alias("n"))
         )
-        q.awaitTermination()
-    minute = (
-        spark.read.parquet(f"{out}/partials")
-        .groupBy("event_type", "bucket_ms", "bin")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
-    result = histogram_percentile_tail(histogram_levels_from_minutes(minute))
-    return _collected_and_cleaned(spark, result, work)
+        levels = histogram_levels_from_minutes(minute)
+        return run.collected(histogram_percentile_tail(levels))
 
 
 def run_streaming_alert_flap(
@@ -1285,30 +1189,20 @@ def run_streaming_alert_flap(
     """
     from ..operators.observability import alert_flap_tail, alert_minute_states
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_flap_")
-    out = out_dir or work
-
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        alert_minute_states(batch_df).write.mode("append").parquet(
-            f"{out}/partials"
-        )
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
+
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            alert_minute_states(batch_df).write.mode("append").parquet(partials)
+
+        run.foreach_batch(tm, _partials)
+        minute = (
+            spark.read.parquet(partials)
+            .groupBy("rule_id", "metric", "threshold", "app_id", "minute_ms")
+            .agg(F.max("firing").cast("int").alias("firing"))
         )
-        q.awaitTermination()
-    minute = (
-        spark.read.parquet(f"{out}/partials")
-        .groupBy("rule_id", "metric", "threshold", "app_id", "minute_ms")
-        .agg(F.max("firing").cast("int").alias("firing"))
-    )
-    result = alert_flap_tail(minute)
-    return _collected_and_cleaned(spark, result, work)
+        return run.collected(alert_flap_tail(minute))
 
 
 def run_streaming_red_panel(
@@ -1354,66 +1248,6 @@ def run_streaming_red_panel(
     """
     from ..operators.observability import histogram_percentile_tail
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_red_")
-    out = out_dir or work
-
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        hour = (
-            F.col("metric_time_ms")
-            - F.pmod(F.col("metric_time_ms"), F.lit(3600000))
-        ).alias("hour_ms")
-        (
-            batch_df.groupBy("app_id", hour)
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_logs"),
-                F.sum((F.col("event_type") == "error").cast("long"))
-                .cast("long")
-                .alias("n_errors"),
-            )
-            .write.mode("append")
-            .parquet(f"{out}/counts")
-        )
-        # integer DIV bin index — the repo-wide convention (double
-        # division only matches // while values stay below 2^53)
-        bin_idx = F.least(
-            F.expr(f"run_time_ms DIV {int(bin_width_ms)}"), F.lit(int(n_bins) - 1)
-        ).cast("long")
-        (
-            batch_df.groupBy("app_id", hour, bin_idx.alias("bin"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .write.mode("append")
-            .parquet(f"{out}/bins")
-        )
-
-    tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    counts = (
-        spark.read.parquet(f"{out}/counts")
-        .groupBy("app_id", "hour_ms")
-        .agg(
-            F.sum("n_logs").cast("long").alias("n_logs"),
-            F.sum("n_errors").cast("long").alias("n_errors"),
-        )
-    )
-    bins = (
-        spark.read.parquet(f"{out}/bins")
-        .groupBy("app_id", "hour_ms", "bin")
-        .agg(F.sum("n").cast("long").alias("n"))
-        .select(
-            F.lit("hour").alias("level"),
-            F.col("app_id").alias("event_type"),  # tail's generic key slot
-            F.col("hour_ms").alias("bucket_ms"),
-            "bin",
-            "n",
-        )
-    )
     clamp_lo = (int(n_bins) - 1) * int(bin_width_ms)
     err_bounds = [
         F.when(F.col(f"p{p}_lo") < F.lit(clamp_lo), F.lit(int(bin_width_ms) - 1))
@@ -1421,32 +1255,85 @@ def run_streaming_red_panel(
         .alias(f"p{p}_err_bound_ms")
         for p in (50, 95, 99)
     ]
-    dur = histogram_percentile_tail(bins, width=bin_width_ms).select(
-        F.col("event_type").alias("app_id"),
-        F.col("bucket_ms").alias("hour_ms"),
-        "p50_lo",
-        "p95_lo",
-        "p99_lo",
-        *err_bounds,
-    )
-    result = counts.join(dur, ["app_id", "hour_ms"]).select(
-        "app_id",
-        "hour_ms",
-        "n_logs",
-        "n_errors",
-        F.try_divide(F.col("n_logs"), F.lit(60)).alias("rate_per_min"),
-        F.try_divide(F.col("n_errors"), F.col("n_logs")).alias("err_share"),
-        (F.col("n_errors") * 100 > 5 * F.col("n_logs"))
-        .cast("int")
-        .alias("err_breach"),
-        "p50_lo",
-        "p50_err_bound_ms",
-        "p95_lo",
-        "p95_err_bound_ms",
-        "p99_lo",
-        "p99_err_bound_ms",
-    )
-    return _collected_and_cleaned(spark, result, work)
+    tm = task_metrics(events_stream(spark, sf_dir))
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        out = run.dir
+
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            hour = (
+                F.col("metric_time_ms")
+                - F.pmod(F.col("metric_time_ms"), F.lit(3600000))
+            ).alias("hour_ms")
+            (
+                batch_df.groupBy("app_id", hour)
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_logs"),
+                    F.sum((F.col("event_type") == "error").cast("long"))
+                    .cast("long")
+                    .alias("n_errors"),
+                )
+                .write.mode("append")
+                .parquet(f"{out}/counts")
+            )
+            # integer DIV bin index — the repo-wide convention (double
+            # division only matches // while values stay below 2^53)
+            bin_idx = F.least(
+                F.expr(f"run_time_ms DIV {int(bin_width_ms)}"), F.lit(int(n_bins) - 1)
+            ).cast("long")
+            (
+                batch_df.groupBy("app_id", hour, bin_idx.alias("bin"))
+                .agg(F.count(F.lit(1)).cast("long").alias("n"))
+                .write.mode("append")
+                .parquet(f"{out}/bins")
+            )
+
+        run.foreach_batch(tm, _partials)
+        counts = (
+            spark.read.parquet(f"{out}/counts")
+            .groupBy("app_id", "hour_ms")
+            .agg(
+                F.sum("n_logs").cast("long").alias("n_logs"),
+                F.sum("n_errors").cast("long").alias("n_errors"),
+            )
+        )
+        bins = (
+            spark.read.parquet(f"{out}/bins")
+            .groupBy("app_id", "hour_ms", "bin")
+            .agg(F.sum("n").cast("long").alias("n"))
+            .select(
+                F.lit("hour").alias("level"),
+                F.col("app_id").alias("event_type"),  # tail's generic key slot
+                F.col("hour_ms").alias("bucket_ms"),
+                "bin",
+                "n",
+            )
+        )
+        dur = histogram_percentile_tail(bins, width=bin_width_ms).select(
+            F.col("event_type").alias("app_id"),
+            F.col("bucket_ms").alias("hour_ms"),
+            "p50_lo",
+            "p95_lo",
+            "p99_lo",
+            *err_bounds,
+        )
+        result = counts.join(dur, ["app_id", "hour_ms"]).select(
+            "app_id",
+            "hour_ms",
+            "n_logs",
+            "n_errors",
+            F.try_divide(F.col("n_logs"), F.lit(60)).alias("rate_per_min"),
+            F.try_divide(F.col("n_errors"), F.col("n_logs")).alias("err_share"),
+            (F.col("n_errors") * 100 > 5 * F.col("n_logs"))
+            .cast("int")
+            .alias("err_breach"),
+            "p50_lo",
+            "p50_err_bound_ms",
+            "p95_lo",
+            "p95_err_bound_ms",
+            "p99_lo",
+            "p99_err_bound_ms",
+        )
+        return run.collected(result)
 
 
 def run_streaming_forecast_linear(
@@ -1466,8 +1353,6 @@ def run_streaming_forecast_linear(
     """
     from ..operators.observability import forecast_tail
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_forecast_")
-    out = out_dir or work
     static_tm = task_metrics(
         spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     )
@@ -1477,52 +1362,47 @@ def run_streaming_forecast_linear(
         .localCheckpoint(eager=True)
     )
     dec = "decimal(38,0)"
+    tm = task_metrics(events_stream(spark, sf_dir))
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        partials = f"{run.dir}/partials"
 
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        base = batch_df.select(
-            "event_type",
-            "metric_time_ms",
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
-        ).join(F.broadcast(t0), "event_type")
-        wt = base.withColumn("t", F.expr("(metric_time_ms - t0_ms) DIV 1000"))
-        (
-            wt.groupBy("event_type")
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            base = batch_df.select(
+                "event_type",
+                "metric_time_ms",
+                F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
+            ).join(F.broadcast(t0), "event_type")
+            wt = base.withColumn("t", F.expr("(metric_time_ms - t0_ms) DIV 1000"))
+            (
+                wt.groupBy("event_type")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n"),
+                    F.sum(F.col("t").cast(dec)).alias("st"),
+                    F.sum(F.col("x").cast(dec)).alias("sx"),
+                    F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
+                    F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
+                    F.max("t").cast("long").alias("t_max"),
+                    F.max("t0_ms").alias("t0_ms"),
+                )
+                .write.mode("append")
+                .parquet(partials)
+            )
+
+        run.foreach_batch(tm, _partials)
+        totals = (
+            spark.read.parquet(partials)
+            .groupBy("event_type")
             .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum(F.col("t").cast(dec)).alias("st"),
-                F.sum(F.col("x").cast(dec)).alias("sx"),
-                F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
-                F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
-                F.max("t").cast("long").alias("t_max"),
+                F.sum("n").cast("long").alias("n"),
+                F.sum("st").cast(dec).alias("st"),
+                F.sum("sx").cast(dec).alias("sx"),
+                F.sum("stx").cast(dec).alias("stx"),
+                F.sum("stt").cast(dec).alias("stt"),
+                F.max("t_max").cast("long").alias("t_max"),
                 F.max("t0_ms").alias("t0_ms"),
             )
-            .write.mode("append")
-            .parquet(f"{out}/partials")
         )
-
-    tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    totals = (
-        spark.read.parquet(f"{out}/partials")
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("st").cast(dec).alias("st"),
-            F.sum("sx").cast(dec).alias("sx"),
-            F.sum("stx").cast(dec).alias("stx"),
-            F.sum("stt").cast(dec).alias("stt"),
-            F.max("t_max").cast("long").alias("t_max"),
-            F.max("t0_ms").alias("t0_ms"),
-        )
-    )
-    return _collected_and_cleaned(spark, forecast_tail(totals), work)
+        return run.collected(forecast_tail(totals))
 
 
 def run_streaming_bloom_build(
@@ -1549,8 +1429,6 @@ def run_streaming_bloom_build(
     from ..functions.text import corpus
     from ..operators.dedup import bloom_audit, bloom_keys, bloom_words
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_bloom_")
-    out = out_dir or work
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(docs_schema)
@@ -1560,33 +1438,26 @@ def run_streaming_bloom_build(
     old_keys_stream = bloom_keys(corpus(stream)).filter(
         F.col("doc_id") < corpus_boundary
     ).select("key")
+    with _AvailableNow(spark, sf_dir, "documents.parquet", out_dir) as run:
+        words = f"{run.dir}/words"
 
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        bloom_words(batch_df).write.mode("append").parquet(f"{out}/words")
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            bloom_words(batch_df).write.mode("append").parquet(words)
 
-    with _scaled_state_shuffle(spark, sf_dir, "documents.parquet"):
-        q = (
-            old_keys_stream.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
+        run.foreach_batch(old_keys_stream, _partials)
+        merged = (
+            spark.read.parquet(words)
+            .groupBy("word_idx")
+            .agg(F.bit_or("bits").alias("bits"))
         )
-        q.awaitTermination()
-    merged = (
-        spark.read.parquet(f"{out}/words")
-        .groupBy("word_idx")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
-    static = bloom_keys(
-        corpus(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-    ).localCheckpoint(eager=True)
-    old_keys = (
-        static.filter(F.col("doc_id") < corpus_boundary).select("key").distinct()
-    )
-    new_docs = static.filter(F.col("doc_id") >= corpus_boundary)
-    return _collected_and_cleaned(
-        spark, bloom_audit(new_docs, merged, old_keys), work
-    )
+        static = bloom_keys(
+            corpus(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        ).localCheckpoint(eager=True)
+        old_keys = (
+            static.filter(F.col("doc_id") < corpus_boundary).select("key").distinct()
+        )
+        new_docs = static.filter(F.col("doc_id") >= corpus_boundary)
+        return run.collected(bloom_audit(new_docs, merged, old_keys))
 
 
 def run_streaming_metric_correlation(
@@ -1608,31 +1479,20 @@ def run_streaming_metric_correlation(
         metric_hour_buckets,
     )
 
-    work = None if out_dir else tempfile.mkdtemp(prefix="gfaooa_corr_")
-    out = out_dir or work
-
-    def _partials(batch_df: DataFrame, batch_id: int) -> None:
-        metric_hour_buckets(batch_df).write.mode("append").parquet(
-            f"{out}/buckets"
-        )
-
     tm = task_metrics(events_stream(spark, sf_dir))
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            tm.writeStream.foreachBatch(_partials)
-            .option("checkpointLocation", f"{out}/_chk")
-            .trigger(availableNow=True)
-            .start()
+    with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
+        buckets = f"{run.dir}/buckets"
+
+        def _partials(batch_df: DataFrame, batch_id: int) -> None:
+            metric_hour_buckets(batch_df).write.mode("append").parquet(buckets)
+
+        run.foreach_batch(tm, _partials)
+        merged = (
+            spark.read.parquet(buckets)
+            .groupBy("hour_ms", "event_type")
+            .agg(F.sum("v").cast("long").alias("v"))
         )
-        q.awaitTermination()
-    merged = (
-        spark.read.parquet(f"{out}/buckets")
-        .groupBy("hour_ms", "event_type")
-        .agg(F.sum("v").cast("long").alias("v"))
-    )
-    return _collected_and_cleaned(
-        spark, metric_correlation_tail(merged), work
-    )
+        return run.collected(metric_correlation_tail(merged))
 
 
 def run_streaming_repeated_spans(
@@ -1672,7 +1532,6 @@ def run_streaming_repeated_spans(
     )
 
     w = span_tokens
-    work = tempfile.mkdtemp(prefix="gfaooa_spanscrub_")
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(docs_schema)
@@ -1699,58 +1558,52 @@ def run_streaming_repeated_spans(
         corpus_boundary,
         fallback_checkpoint=True,
     )
-    index_path = f"{work}/span_index"
-    os.makedirs(index_path, exist_ok=True)
+    with _AvailableNow(spark, sf_dir, "documents.parquet") as run:
+        index_path = f"{run.dir}/span_index"
+        os.makedirs(index_path, exist_ok=True)
 
-    def _scrub_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_docs = corpus(batch_df).filter(
-            F.col("doc_id") >= corpus_boundary
-        ).localCheckpoint(eager=True)
-        spans = _span_rows(new_docs, w).localCheckpoint(eager=True)
-        # Materialize the DELTA read BEFORE this batch appends to it
-        # (the base side is already a fixed checkpoint).
-        deltas = (
-            spark.read.schema(idx0.schema)
-            .parquet(index_path)
-            .localCheckpoint(eager=True)
-        )
-        index = idx0.unionByName(deltas)
-        hits = spans.join(index, "span_hash", "left_semi").select(
-            "doc_id", "start"
-        )
-        miss = spans.join(index, "span_hash", "left_anti")
-        scrub = hits.unionByName(non_canonical_spans(miss))
-        apply_span_scrub(new_docs, scrub, w).write.mode("append").parquet(
-            f"{work}/out"
-        )
-        # Append-only index growth: this batch's hashes join the set
-        # (anti-join keeps it a set — idempotent under re-delivery).
-        spans.select("span_hash").distinct().join(
-            index, "span_hash", "left_anti"
-        ).write.mode("append").parquet(index_path)
+        def _scrub_batch(batch_df: DataFrame, batch_id: int) -> None:
+            new_docs = corpus(batch_df).filter(
+                F.col("doc_id") >= corpus_boundary
+            ).localCheckpoint(eager=True)
+            spans = _span_rows(new_docs, w).localCheckpoint(eager=True)
+            # Materialize the DELTA read BEFORE this batch appends to it
+            # (the base side is already a fixed checkpoint).
+            deltas = (
+                spark.read.schema(idx0.schema)
+                .parquet(index_path)
+                .localCheckpoint(eager=True)
+            )
+            index = idx0.unionByName(deltas)
+            hits = spans.join(index, "span_hash", "left_semi").select(
+                "doc_id", "start"
+            )
+            miss = spans.join(index, "span_hash", "left_anti")
+            scrub = hits.unionByName(non_canonical_spans(miss))
+            apply_span_scrub(new_docs, scrub, w).write.mode("append").parquet(
+                f"{run.dir}/out"
+            )
+            # Append-only index growth: this batch's hashes join the set
+            # (anti-join keeps it a set — idempotent under re-delivery).
+            spans.select("span_hash").distinct().join(
+                index, "span_hash", "left_anti"
+            ).write.mode("append").parquet(index_path)
 
-    with _scaled_state_shuffle(spark, sf_dir, "documents.parquet"):
-        q = (
-            stream.writeStream.foreachBatch(_scrub_batch)
-            .option("checkpointLocation", f"{work}/_chk")
-            .trigger(availableNow=True)
-            .start()
+        run.foreach_batch(stream, _scrub_batch)
+        out_schema = T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("n_tokens", T.LongType()),
+                T.StructField("n_scrubbed", T.LongType()),
+                T.StructField("text_clean", T.StringType()),
+            ]
         )
-        q.awaitTermination()
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("n_tokens", T.LongType()),
-            T.StructField("n_scrubbed", T.LongType()),
-            T.StructField("text_clean", T.StringType()),
-        ]
-    )
-    result = (
-        spark.read.schema(out_schema)
-        .parquet(f"{work}/out")
-        .orderBy("doc_id")
-    )
-    return _collected_and_cleaned(spark, result, work)
+        result = (
+            spark.read.schema(out_schema)
+            .parquet(f"{run.dir}/out")
+            .orderBy("doc_id")
+        )
+        return run.collected(result)
 
 
 def run_streaming_prefix_dedup(
@@ -1796,7 +1649,6 @@ def run_streaming_prefix_dedup(
     from ..functions.text import shingles
 
     pct = int(threshold_pct)
-    work = tempfile.mkdtemp(prefix="gfaooa_prefixdedup_")
     src = stream_dir if stream_dir is not None else sf_dir
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     reader = spark.readStream.schema(docs_schema).option(
@@ -1819,7 +1671,6 @@ def run_streaming_prefix_dedup(
     old_docs = corpus(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     ).filter(F.col("doc_id") < corpus_boundary)
-    arr_path, pre_path = f"{work}/index_arrays", f"{work}/index_prefix"
     # Both committed-side index tables are SPLIT like D36's span index
     # (r16, guide §5/§6): base = checkpointed shared frames (derived once
     # per session, recomputed from parquet by any fresh process), disk =
@@ -1844,120 +1695,115 @@ def run_streaming_prefix_dedup(
         corpus_boundary,
         fallback_checkpoint=True,
     )
-    os.makedirs(arr_path, exist_ok=True)
-    os.makedirs(pre_path, exist_ok=True)
+    with _AvailableNow(spark, src, docs_glob) as run:
+        arr_path, pre_path = f"{run.dir}/index_arrays", f"{run.dir}/index_prefix"
+        os.makedirs(arr_path, exist_ok=True)
+        os.makedirs(pre_path, exist_ok=True)
 
-    def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        new_docs = corpus(batch_df).filter(
-            F.col("doc_id") >= corpus_boundary
-        ).localCheckpoint(eager=True)
-        new_arrays = sorted_arrays(new_docs).localCheckpoint(eager=True)
-        # Materialize both DELTA reads BEFORE this batch appends to them
-        # (the base sides are already fixed checkpoints).
-        index_arr = arrays0.unionByName(
-            spark.read.schema(arrays0.schema)
-            .parquet(arr_path)
-            .localCheckpoint(eager=True)
-        )
-        index_pre = prefix0.unionByName(
-            spark.read.schema(prefix0.schema)
-            .parquet(pre_path)
-            .localCheckpoint(eager=True)
-        )
-        cand = (
-            lex_prefix_rows(new_arrays, pct)
-            .join(
-                index_pre.select(
-                    F.col("doc_id").alias("old_id"), "shingle"
-                ),
-                "shingle",
+        def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
+            new_docs = corpus(batch_df).filter(
+                F.col("doc_id") >= corpus_boundary
+            ).localCheckpoint(eager=True)
+            new_arrays = sorted_arrays(new_docs).localCheckpoint(eager=True)
+            # Materialize both DELTA reads BEFORE this batch appends to them
+            # (the base sides are already fixed checkpoints).
+            index_arr = arrays0.unionByName(
+                spark.read.schema(arrays0.schema)
+                .parquet(arr_path)
+                .localCheckpoint(eager=True)
             )
-            .select("doc_id", "old_id")
-            .distinct()
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
-        dropped = (
-            cand.join(
-                new_arrays.select("doc_id", F.col("sh").alias("sh_a")),
-                "doc_id",
+            index_pre = prefix0.unionByName(
+                spark.read.schema(prefix0.schema)
+                .parquet(pre_path)
+                .localCheckpoint(eager=True)
             )
-            .join(
-                index_arr.hint("shuffle_hash").select(
-                    F.col("doc_id").alias("old_id"),
-                    F.col("sh").alias("sh_b"),
-                ),
-                "old_id",
+            cand = (
+                lex_prefix_rows(new_arrays, pct)
+                .join(
+                    index_pre.select(
+                        F.col("doc_id").alias("old_id"), "shingle"
+                    ),
+                    "shingle",
+                )
+                .select("doc_id", "old_id")
+                .distinct()
             )
-            .select(
-                "doc_id",
-                inter.alias("intersection_size"),
-                F.size("sh_a").cast("long").alias("size_a"),
-                F.size("sh_b").cast("long").alias("size_b"),
+            inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
+            dropped = (
+                cand.join(
+                    new_arrays.select("doc_id", F.col("sh").alias("sh_a")),
+                    "doc_id",
+                )
+                .join(
+                    index_arr.hint("shuffle_hash").select(
+                        F.col("doc_id").alias("old_id"),
+                        F.col("sh").alias("sh_b"),
+                    ),
+                    "old_id",
+                )
+                .select(
+                    "doc_id",
+                    inter.alias("intersection_size"),
+                    F.size("sh_a").cast("long").alias("size_a"),
+                    F.size("sh_b").cast("long").alias("size_b"),
+                )
+                .withColumn("jaccard", _jaccard_col())
+                .filter(F.col("jaccard") >= pct / 100.0)
+                .select("doc_id")
+                .distinct()
+                .localCheckpoint(eager=True)
             )
-            .withColumn("jaccard", _jaccard_col())
-            .filter(F.col("jaccard") >= pct / 100.0)
-            .select("doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        kept_docs = new_docs.join(dropped, "doc_id", "left_anti")
-        kept_docs.select("doc_id", "source").write.mode("append").parquet(
-            f"{work}/kept"
-        )
-        new_docs.join(dropped, "doc_id", "left_semi").select(
-            "doc_id", "source"
-        ).write.mode("append").parquet(f"{work}/dropped")
-        # Append-only index growth: kept docs join the gate's view of the
-        # corpus (anti-join keeps both tables sets under re-delivery).
-        kept_arrays = new_arrays.join(
-            kept_docs.select("doc_id"), "doc_id", "left_semi"
-        ).join(index_arr.select("doc_id"), "doc_id", "left_anti")
-        kept_arrays.write.mode("append").parquet(arr_path)
-        lex_prefix_rows(kept_arrays, pct).write.mode("append").parquet(
-            pre_path
+            kept_docs = new_docs.join(dropped, "doc_id", "left_anti")
+            kept_docs.select("doc_id", "source").write.mode("append").parquet(
+                f"{run.dir}/kept"
+            )
+            new_docs.join(dropped, "doc_id", "left_semi").select(
+                "doc_id", "source"
+            ).write.mode("append").parquet(f"{run.dir}/dropped")
+            # Append-only index growth: kept docs join the gate's view of the
+            # corpus (anti-join keeps both tables sets under re-delivery).
+            kept_arrays = new_arrays.join(
+                kept_docs.select("doc_id"), "doc_id", "left_semi"
+            ).join(index_arr.select("doc_id"), "doc_id", "left_anti")
+            kept_arrays.write.mode("append").parquet(arr_path)
+            lex_prefix_rows(kept_arrays, pct).write.mode("append").parquet(
+                pre_path
+            )
+
+        run.foreach_batch(stream, _gate_batch)
+        route_schema = T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("source", T.StringType()),
+            ]
         )
 
-    with _scaled_state_shuffle(spark, src, docs_glob):
-        q = (
-            stream.writeStream.foreachBatch(_gate_batch)
-            .option("checkpointLocation", f"{work}/_chk")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    route_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
+        def routed(path: str, verdict: str) -> DataFrame:
+            return (
+                spark.read.schema(route_schema)
+                .parquet(path)
+                .groupBy("source")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .withColumn("verdict", F.lit(verdict))
+            )
 
-    def routed(path: str, verdict: str) -> DataFrame:
-        return (
-            spark.read.schema(route_schema)
-            .parquet(path)
+        result = (
+            routed(f"{run.dir}/kept", "kept")
+            .unionByName(routed(f"{run.dir}/dropped", "dropped"))
             .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("verdict", F.lit(verdict))
+            .agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("verdict") == "kept", F.col("n"))),
+                    F.lit(0),
+                ).cast("long").alias("n_kept"),
+                F.coalesce(
+                    F.sum(F.when(F.col("verdict") == "dropped", F.col("n"))),
+                    F.lit(0),
+                ).cast("long").alias("n_dropped"),
+            )
+            .orderBy("source")
         )
-
-    result = (
-        routed(f"{work}/kept", "kept")
-        .unionByName(routed(f"{work}/dropped", "dropped"))
-        .groupBy("source")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("verdict") == "kept", F.col("n"))),
-                F.lit(0),
-            ).cast("long").alias("n_kept"),
-            F.coalesce(
-                F.sum(F.when(F.col("verdict") == "dropped", F.col("n"))),
-                F.lit(0),
-            ).cast("long").alias("n_dropped"),
-        )
-        .orderBy("source")
-    )
-    return _collected_and_cleaned(spark, result, work)
+        return run.collected(result)
 
 
 def semantic_gate_batch(
@@ -2211,7 +2057,6 @@ def run_streaming_semantic_dedup(
     )
     from ..operators.similarity import SEMANTIC_TAU as _TAU
 
-    work = tempfile.mkdtemp(prefix="gfaooa_semdedup_")
     src = stream_dir if stream_dir is not None else sf_dir
     emb_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
     reader = spark.readStream.schema(emb_schema).option(
@@ -2248,53 +2093,47 @@ def run_streaming_semantic_dedup(
     # ingest gate paid) and the codes table re-read + re-materialized
     # per batch. The gate's view stays base ∪ deltas-before-this-batch,
     # and the crash-seam replay algebra is unchanged (deltas only).
-    codes_path, vecs_path = f"{work}/index_codes", f"{work}/index_vecs"
-    base_codes = sq8_encode(cells, mns, rngs).localCheckpoint(eager=True)
-    base_vecs = cells.select("vec_id", "qv")
-    os.makedirs(codes_path, exist_ok=True)
-    os.makedirs(vecs_path, exist_ok=True)
-    tau = float(_TAU)
+    with _AvailableNow(spark, src, emb_glob) as run:
+        codes_path, vecs_path = f"{run.dir}/index_codes", f"{run.dir}/index_vecs"
+        base_codes = sq8_encode(cells, mns, rngs).localCheckpoint(eager=True)
+        base_vecs = cells.select("vec_id", "qv")
+        os.makedirs(codes_path, exist_ok=True)
+        os.makedirs(vecs_path, exist_ok=True)
+        tau = float(_TAU)
 
-    def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        semantic_gate_batch(
-            spark,
-            batch_df,
-            batch_id,
-            centroids=centroids,
-            mns=mns,
-            rngs=rngs,
-            codes_path=codes_path,
-            vecs_path=vecs_path,
-            out_dir=f"{work}/out",
-            tau=tau,
-            base_codes=base_codes,
-            base_vecs=base_vecs,
-        )
+        def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
+            semantic_gate_batch(
+                spark,
+                batch_df,
+                batch_id,
+                centroids=centroids,
+                mns=mns,
+                rngs=rngs,
+                codes_path=codes_path,
+                vecs_path=vecs_path,
+                out_dir=f"{run.dir}/out",
+                tau=tau,
+                base_codes=base_codes,
+                base_vecs=base_vecs,
+            )
 
-    with _scaled_state_shuffle(spark, src, emb_glob):
-        q = (
-            stream.writeStream.foreachBatch(_gate_batch)
-            .option("checkpointLocation", f"{work}/_chk")
-            .trigger(availableNow=True)
-            .start()
+        run.foreach_batch(stream, _gate_batch)
+        out_schema = T.StructType(
+            [
+                T.StructField("vec_id", T.LongType()),
+                T.StructField("cell_id", T.LongType()),
+                T.StructField("keeper_id", T.LongType()),
+                T.StructField("n_dup_neighbors", T.LongType()),
+                T.StructField("max_cosine", T.DoubleType()),
+            ]
         )
-        q.awaitTermination()
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cell_id", T.LongType()),
-            T.StructField("keeper_id", T.LongType()),
-            T.StructField("n_dup_neighbors", T.LongType()),
-            T.StructField("max_cosine", T.DoubleType()),
-        ]
-    )
-    result = (
-        spark.read.schema(out_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{work}/out")
-        .orderBy("vec_id")
-    )
-    return _collected_and_cleaned(spark, result, work)
+        result = (
+            spark.read.schema(out_schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(f"{run.dir}/out")
+            .orderBy("vec_id")
+        )
+        return run.collected(result)
 
 
 def run_streaming_paragraph_decon(
@@ -2329,7 +2168,6 @@ def run_streaming_paragraph_decon(
         _train_paragraph_shingles,
     )
 
-    work = tempfile.mkdtemp(prefix="gfaooa_paradecon_")
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(docs_schema)
@@ -2340,46 +2178,40 @@ def run_streaming_paragraph_decon(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     )
 
-    def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        para = _train_paragraph_shingles(batch_df).localCheckpoint(eager=True)
-        flagged = (
-            _paragraph_leak_pairs(
-                para, bench_sh, bench_idx, pct=int(threshold_pct)
+    with _AvailableNow(spark, sf_dir, "documents.parquet") as run:
+        def _gate_batch(batch_df: DataFrame, batch_id: int) -> None:
+            para = _train_paragraph_shingles(batch_df).localCheckpoint(eager=True)
+            flagged = (
+                _paragraph_leak_pairs(
+                    para, bench_sh, bench_idx, pct=int(threshold_pct)
+                )
+                .select(
+                    F.expr(f"pid DIV {PARA_KEY}").cast("long").alias("doc_id")
+                )
+                .distinct()
             )
-            .select(
-                F.expr(f"pid DIV {PARA_KEY}").cast("long").alias("doc_id")
+            is_bench = (F.col("doc_id") < 1000000) & (F.col("doc_id") % 25 == 0)
+            (
+                corpus(batch_df)
+                .filter(~is_bench)
+                .select("doc_id", "source")
+                .join(flagged, "doc_id", "left_anti")
+                .write.mode("append")
+                .parquet(f"{run.dir}/kept")
             )
-            .distinct()
-        )
-        is_bench = (F.col("doc_id") < 1000000) & (F.col("doc_id") % 25 == 0)
-        (
-            corpus(batch_df)
-            .filter(~is_bench)
-            .select("doc_id", "source")
-            .join(flagged, "doc_id", "left_anti")
-            .write.mode("append")
-            .parquet(f"{work}/kept")
-        )
 
-    with _scaled_state_shuffle(spark, sf_dir, "documents.parquet"):
-        q = (
-            stream.writeStream.foreachBatch(_gate_batch)
-            .option("checkpointLocation", f"{work}/_chk")
-            .trigger(availableNow=True)
-            .start()
+        run.foreach_batch(stream, _gate_batch)
+        kept_schema = T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("source", T.StringType()),
+            ]
         )
-        q.awaitTermination()
-    kept_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("source", T.StringType()),
-        ]
-    )
-    result = (
-        spark.read.schema(kept_schema)
-        .parquet(f"{work}/kept")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-        .orderBy("source")
-    )
-    return _collected_and_cleaned(spark, result, work)
+        result = (
+            spark.read.schema(kept_schema)
+            .parquet(f"{run.dir}/kept")
+            .groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n_kept"))
+            .orderBy("source")
+        )
+        return run.collected(result)

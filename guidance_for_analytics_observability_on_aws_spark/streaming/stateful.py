@@ -18,11 +18,12 @@ from __future__ import annotations
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.telemetry import task_metrics
-from .collector import _scaled_state_shuffle, events_stream
+from .collector import _AvailableNow, events_stream
 
 OUTPUT_SCHEMA = (
     "executor_id string, batch_records bigint, total_records bigint, "
@@ -58,9 +59,7 @@ def _update(
     )
 
 
-def run_stateful_buffer_counter(
-    spark: SparkSession, sf_dir: str, sink_name: str = "gfaooa_stateful_sink"
-) -> DataFrame:
+def run_stateful_buffer_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful buffer counter to completion (availableNow)."""
     tm = task_metrics(events_stream(spark, sf_dir))
     counted = (
@@ -73,20 +72,8 @@ def run_stateful_buffer_counter(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    # r16: these applyInPandasWithState runners were the five start sites
-    # the r15 state-partition sizing missed (all collector.py sites were
-    # wrapped; stateful.py's were not) — each micro-batch opened the full
-    # batch-width complement of state stores regardless of rows.
-    with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-        q = (
-            counted.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name)
+    with _AvailableNow(spark, sf_dir, "events.parquet") as run:
+        return run.memory(counted, "update")
 
 
 # --- transformWithState twin (Spark 4 arbitrary-state API) -------------------
@@ -141,9 +128,7 @@ except ImportError as exc:  # pragma: no cover - older Spark / no protobuf
     TWS_MISSING = getattr(exc, "name", None) or str(exc)
 
 
-def run_tws_buffer_counter(
-    spark: SparkSession, sf_dir: str, sink_name: str = "gfaooa_tws_sink"
-) -> DataFrame:
+def run_tws_buffer_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the buffer counter on ``transformWithStateInPandas`` to
     completion (availableNow); result rows match the
     ``applyInPandasWithState`` twin (asserted in tests).
@@ -171,21 +156,13 @@ def run_tws_buffer_counter(
             outputMode="Update",
             timeMode="None",
         )
-        with _scaled_state_shuffle(spark, sf_dir, "events.parquet"):
-            q = (
-                counted.writeStream.format("memory")
-                .queryName(sink_name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        with _AvailableNow(spark, sf_dir, "events.parquet") as run:
+            return run.memory(counted, "update")
     finally:
         if prior is None:
             spark.conf.unset(prov_key)
         else:
             spark.conf.set(prov_key, prior)
-    return spark.table(sink_name)
 
 
 # --- O62: CUSUM drift ON INGEST (streaming twin of batch O59) ----------------
@@ -272,7 +249,6 @@ def run_streaming_cusum(
     sf_dir: str,
     stream_dir: str | None = None,
     max_files_per_trigger: int | None = None,
-    sink_name: str | None = None,
     progress_out: list | None = None,
 ) -> DataFrame:
     """O62 runner: train the per-type reference level on the history
@@ -281,14 +257,6 @@ def run_streaming_cusum(
     and return the LATEST drift row per type (the row carrying the
     final extremes/changepoints — identical to batch ``cusum_drift``
     when history == streamed series)."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from ..operators.observability import cusum_drift  # noqa: F401  (twin)
-    from .collector import events_stream
-
-    name = sink_name or f"gfaooa_cusum_sink_{_uuid.uuid4().hex}"
     hist_tm = task_metrics(
         spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     )
@@ -327,38 +295,24 @@ def run_streaming_cusum(
     src, glob = (
         (sf_dir, "events.parquet") if stream_dir is None else (stream_dir, "*.parquet")
     )
-    with _scaled_state_shuffle(spark, src, glob):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window
-
+    with _AvailableNow(spark, src, glob) as run:
+        updates = run.memory(out, "update")
     if progress_out is not None:
         # One update row per (type, micro-batch that saw the type) — the
         # per-type row count proves how many batches the state crossed.
         progress_out.extend(
             (r.event_type, r.n)
-            for r in spark.table(name)
-            .groupBy("event_type")
+            for r in updates.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
     w = Window.partitionBy("event_type").orderBy(F.col("n_events").desc())
-    result = (
-        spark.table(name)
-        .withColumn("_rk", F.row_number().over(w))
+    return (
+        updates.withColumn("_rk", F.row_number().over(w))
         .filter("_rk = 1")
         .drop("_rk")
         .orderBy("event_type")
     )
-    rows = result.collect()
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, result.schema)
 
 
 # --- O65: gap-fill / forward-fill ON INGEST (streaming twin of O27) ----------
@@ -431,13 +385,6 @@ def run_streaming_gap_fill(
     ``gap_fill`` under the whole-minutes-in-order contract — pinned in
     ``tests/test_streaming.py`` across a minute-aligned multi-file
     drive)."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from .collector import events_stream
-
-    name = f"gfaooa_gapfill_sink_{_uuid.uuid4().hex}"
     src = sf_dir if stream_dir is None else stream_dir
     glob = "events.parquet" if stream_dir is None else "*.parquet"
     tm = task_metrics(
@@ -457,30 +404,15 @@ def run_streaming_gap_fill(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _scaled_state_shuffle(spark, src, glob):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    grid = spark.table(name)
+    with _AvailableNow(spark, src, glob) as run:
+        grid = run.memory(out, "append")
     if progress_out is not None:
         progress_out.append(grid.count())
-    rollup = (
-        grid.groupBy("executor_id", F.expr("minute DIV 60").alias("hour"))
-        .agg(
-            F.count(F.lit(1)).alias("n_minutes"),
-            F.sum(F.col("is_observed").cast("long")).alias("n_observed"),
-            F.sum("filled_bytes").alias("sum_filled_bytes"),
-        )
+    return grid.groupBy("executor_id", F.expr("minute DIV 60").alias("hour")).agg(
+        F.count(F.lit(1)).alias("n_minutes"),
+        F.sum(F.col("is_observed").cast("long")).alias("n_observed"),
+        F.sum("filled_bytes").alias("sum_filled_bytes"),
     )
-    rows = rollup.collect()
-    schema = rollup.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
 
 
 # --- O69: EWMA smoothing ON INGEST (streaming twin of O67) -------------------
@@ -558,13 +490,6 @@ def run_streaming_ewma(
     in keyed state, emit the exact dyadic-EWMA row per minute on ingest.
     Returns every emitted row (the same panel batch ``ewma_smooth``
     computes — bit-identical under the whole-minutes-in-order contract)."""
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    from .collector import events_stream
-
-    name = f"gfaooa_ewma_sink_{_uuid.uuid4().hex}"
     src = sf_dir if stream_dir is None else stream_dir
     glob = "events.parquet" if stream_dir is None else "*.parquet"
     tm = task_metrics(
@@ -584,19 +509,8 @@ def run_streaming_ewma(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with _scaled_state_shuffle(spark, src, glob):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    panel = spark.table(name)
+    with _AvailableNow(spark, src, glob) as run:
+        panel = run.memory(out, "append")
     if progress_out is not None:
         progress_out.append(panel.count())
-    rows = panel.collect()
-    schema = panel.schema
-    spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+    return panel

@@ -33,9 +33,9 @@ FAST_ORACLE_SPOTS = {
 }
 
 
-#: test_plans.py members that sweep the ENTIRE 247-entry registry
-#: (~4 min each) — valuable, but they belong to the full gate, not the
-#: quick tier.
+#: test_plans.py members that sweep the ENTIRE 247-entry registry (the
+#: plans are built once, ~3 min, by the module fixture they share) —
+#: valuable, but they belong to the full gate, not the quick tier.
 _SLOW_PLAN_SWEEPS = {"test_no_row_python_udfs_anywhere", "test_no_cartesian_products"}
 
 

@@ -77,7 +77,18 @@ def test_hot_path_stays_in_codegen(spark, sf_dir):
     assert "*(" in plan, f"no codegen stage in final plan:\n{plan}"
 
 
-def test_no_row_python_udfs_anywhere(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """Executed plan of every registry entry, each built once for both sweeps."""
+    return {
+        name: _executed_plan(spec.builder(spark, sf_dir))
+        for name, spec in REGISTRY.items()
+        # streaming jobs run on build; covered in test_streaming
+        if name not in ("stream_collector_pipeline", "stream_stage_agg")
+    }
+
+
+def test_no_row_python_udfs_anywhere(registry_plans):
     """Row-at-a-time Python (BatchEvalPython) is banned in every query.
 
     Arrow-batched pandas plans (mm_decode_frames) are the one sanctioned
@@ -88,15 +99,18 @@ def test_no_row_python_udfs_anywhere(spark, sf_dir):
         "mm_resize",
         "dedup_embedding_cosine_blas",
     }
-    for name, spec in REGISTRY.items():
-        if name in ("stream_collector_pipeline", "stream_stage_agg"):
-            continue  # run streaming jobs on build; covered in test_streaming
-        plan = _executed_plan(spec.builder(spark, sf_dir))
+    for name, plan in registry_plans.items():
         assert "BatchEvalPython" not in plan, f"{name}: row-Python UDF in plan"
         if name not in pandas_sanctioned:
             assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan, (
                 f"{name}: unexpected pandas path"
             )
+
+
+def test_no_cartesian_products(registry_plans):
+    """No registered query may degenerate into an unconditional cross join."""
+    for name, plan in registry_plans.items():
+        assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
 
 
 def test_approx_cardinality_close_to_exact(spark, sf_dir):
@@ -149,15 +163,6 @@ def test_approx_percentiles_close_to_exact(spark, sf_dir):
             assert abs(rank - target) <= max(2, 0.01 * n), (
                 f"{et}.{p}: approx {a[p]} has rank {rank}, target {target:.0f} of {n}"
             )
-
-
-def test_no_cartesian_products(spark, sf_dir):
-    """No registered query may degenerate into an unconditional cross join."""
-    for name, spec in REGISTRY.items():
-        if name in ("stream_collector_pipeline", "stream_stage_agg"):
-            continue
-        plan = _executed_plan(spec.builder(spark, sf_dir))
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
@@ -43,12 +44,26 @@ def test_windowed_rollup_matches_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
+def test_windowed_rollup_back_to_back_runs(spark, sf_dir):
+    """Two sequential rollups in one session each get their own memory
+    sink: both still match the batch rollup after the second run, and
+    neither leaves a sink view behind."""
+    cols = ["window_start_ms", "event_type", "n_events", "sum_input_bytes"]
+    batch = stream_metrics_window(task_metrics(load_tables(spark, sf_dir)["events"]))
+    want = sorted(tuple(r) for r in batch.select(*cols).collect())
+    first = run_windowed_rollup(spark, sf_dir)
+    second = run_windowed_rollup(spark, sf_dir)
+    for got in (first, second):
+        assert sorted(tuple(r) for r in got.select(*cols).collect()) == want
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("gfaooa_")]
+
+
 def test_stateful_buffer_counter(spark, sf_dir):
     from guidance_for_analytics_observability_on_aws_spark.streaming.stateful import (
         run_stateful_buffer_counter,
     )
 
-    out = run_stateful_buffer_counter(spark, sf_dir, "stateful_test_sink")
+    out = run_stateful_buffer_counter(spark, sf_dir)
     rows = out.collect()
     assert rows
     tm = task_metrics(load_tables(spark, sf_dir)["events"])
@@ -297,20 +312,27 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     assert got and got == want
 
 
-def test_streaming_metric_log_join_refuses_stale_checkpoint(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize(
+    "runner",
+    [
+        "run_streaming_metric_log_join",
+        "run_collector_pipeline",
+        "run_streaming_stage_agg",
+    ],
+)
+def test_streaming_metric_log_join_refuses_stale_checkpoint(
+    spark, sf_dir, tmp_path, runner
+):
     """A caller-supplied out_dir with a leftover _chk checkpoint must be
     refused: the availableNow run would be a no-op while old files under
-    pairs/ are re-read as fresh results."""
-    import pytest
-
-    from guidance_for_analytics_observability_on_aws_spark.streaming.collector import (
-        run_streaming_metric_log_join,
-    )
+    the sink dir (pairs/, routed/, stage_agg/) are re-read or appended to
+    as fresh results."""
+    from guidance_for_analytics_observability_on_aws_spark.streaming import collector
 
     stale = tmp_path / "reused"
     (stale / "_chk").mkdir(parents=True)
     with pytest.raises(ValueError, match="checkpoint"):
-        run_streaming_metric_log_join(spark, sf_dir, out_dir=str(stale))
+        getattr(collector, runner)(spark, sf_dir, out_dir=str(stale))
 
 
 def test_tws_buffer_counter_matches_apws_twin(spark, sf_dir):
@@ -326,7 +348,7 @@ def test_tws_buffer_counter_matches_apws_twin(spark, sf_dir):
         import pytest
 
         pytest.skip("transformWithStateInPandas not available")
-    out = run_tws_buffer_counter(spark, sf_dir, "tws_test_sink")
+    out = run_tws_buffer_counter(spark, sf_dir)
     rows = out.collect()
     assert rows
     tm = task_metrics(load_tables(spark, sf_dir)["events"])
@@ -1677,3 +1699,39 @@ def test_stream_state_partitions_guards(spark, tmp_path, monkeypatch):
     assert spark.conf.get(key) == before
     assert _STATE_OVERRIDE_LOCK.acquire(blocking=False)
     _STATE_OVERRIDE_LOCK.release()
+
+
+def test_streaming_runner_failure_cleans_up(spark, sf_dir, tmp_path, monkeypatch):
+    """A runner that fails inside its micro-batch still releases what the
+    availableNow lifecycle owns: the mkdtemp scratch dir, the memory-sink
+    view, the query and the session's shuffle width. Driven once through
+    a foreachBatch runner and once through a memory-sink runner."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from guidance_for_analytics_observability_on_aws_spark.operators import observability
+    from guidance_for_analytics_observability_on_aws_spark.streaming import collector
+
+    def failing_stage_agg(_df):
+        raise RuntimeError("injected batch failure")
+
+    real_rollup = collector.windowed_rollup
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(observability, "stage_agg_skewness", failing_stage_agg)
+    monkeypatch.setattr(
+        collector,
+        "windowed_rollup",
+        lambda tm: real_rollup(tm).withColumn("boom", F.raise_error(F.lit("injected"))),
+    )
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    for runner in (collector.run_streaming_stage_agg, collector.run_windowed_rollup):
+        with pytest.raises(StreamingQueryException, match="injected"):
+            runner(spark, sf_dir)
+        assert not list(tmp_path.glob("gfaooa_*")), runner.__name__
+        assert not [
+            t.name for t in spark.catalog.listTables() if t.name.startswith("gfaooa_")
+        ], runner.__name__
+        assert not spark.streams.active, runner.__name__
+        assert spark.conf.get(key) == before, runner.__name__

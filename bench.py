@@ -586,10 +586,11 @@ def main() -> None:
         "n_queries": len(first),
         "methodology": "core35+rows_only fresh-process; extended shared-session",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "section_steal_per_sec": section_steal,
+        "section_steal_per_sec": dict(section_steal),
     }
     # Headline record FIRST, so a timeout/crash inside the (slower)
     # rows-only section below can never cost the round its core record.
+    # Its section_steal_per_sec intentionally omits the rows section.
     print(json.dumps({**totals, "queries": core["first"], "queries_min": best}))
 
     # Rows-only runners in their OWN fresh process (see section_rows) —
@@ -600,6 +601,7 @@ def main() -> None:
     rate = _steal_rate(s0, _steal_jiffies(), time.perf_counter() - t0)
     if rate is not None:
         section_steal["rows"] = rate
+    totals["section_steal_per_sec"] = section_steal
     rows_only: dict[str, float] = rows["rows_only_sec"]
     controls = {
         "core": core.get("control", {}),

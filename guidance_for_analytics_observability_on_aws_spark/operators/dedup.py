@@ -1420,6 +1420,9 @@ def _bloom_positions(df: DataFrame, m_bits: int) -> DataFrame:
     )
 
 
+BLOOM_WORD_OPS = {"bits": "bit_or"}
+
+
 def bloom_words(keys: DataFrame, m_bits: int = 1 << 20) -> DataFrame:
     """D32's filter-build stage: (word_idx, bits) 32-bit ``bit_or`` words
     over a ``key`` frame — split out (the tail convention) so the

@@ -24,6 +24,28 @@ from pyspark.sql import functions as F
 STAGE_KEYS = ["app_name", "app_id", "job_id", "stage_id"]
 
 
+def merge_partials(partials: DataFrame, ops: dict[str, str]) -> DataFrame:
+    """The one merge of mergeable partial rows (micro-batches, days,
+    clusters): group by every column NOT named in ``ops`` and fold each
+    named column with ``F.<op>`` (``sum``/``max``/``bit_or``), cast back
+    to the partial's own type — so a merged frame has the partial's schema
+    and any tail reads it as if one pass had produced it. Each family
+    declares its ``*_OPS`` once, next to its partial function."""
+    types = dict(partials.dtypes)
+    keys = [c for c in partials.columns if c not in ops]
+    return partials.groupBy(*keys).agg(
+        *[getattr(F, op)(c).cast(types[c]).alias(c) for c, op in ops.items()]
+    )
+
+
+def pmod_bucket(width_ms: int, name: str) -> F.Column:
+    """``metric_time_ms`` floored to a ``width_ms`` bucket via ``pmod``
+    (the SLO panels' convention; ``DIV w * w`` differs for negative
+    times, so callers keep whichever their oracle uses)."""
+    t = F.col("metric_time_ms")
+    return (t - F.pmod(t, F.lit(width_ms))).alias(name)
+
+
 def task_metrics_table(tm: DataFrame) -> DataFrame:
     """O1: the normalized task-metrics table (CustomTaskMetrics parity)."""
     from ..sources.telemetry import ID_COLUMNS, METRIC_COLUMNS
@@ -987,6 +1009,9 @@ def cms_key_buckets(tm: DataFrame) -> DataFrame:
     )
 
 
+CMS_KEY_OPS = {"exact_n": "sum"}
+
+
 def cms_topk(
     key_buckets: DataFrame, k: int = 20, distributed: bool = False
 ) -> DataFrame:
@@ -997,9 +1022,7 @@ def cms_topk(
     two-phase rank (:func:`_ranked_with_n`) instead of one global window
     sort — bit-identical top-k pinned in tests.
     """
-    merged = key_buckets.groupBy("key", "row_id", "bucket").agg(
-        F.sum("exact_n").alias("exact_n")
-    )
+    merged = merge_partials(key_buckets, CMS_KEY_OPS)
     sketch = merged.groupBy("row_id", "bucket").agg(F.sum("exact_n").alias("c"))
     est = (
         merged.join(F.broadcast(sketch), ["row_id", "bucket"])
@@ -2078,23 +2101,41 @@ def tail_sampling(tm: DataFrame, distributed: bool = False) -> DataFrame:
     Scale shape: one ranked window per type for the threshold (O8's sort
     posture), then a single narrow classify-and-aggregate pass over the
     stream with the thresholds broadcast; output is |types| rows. The
-    threshold/classify stages are shared with the streaming-on-ingest
-    twin (:func:`tail_thresholds` / :func:`tail_classified`).
+    threshold/classify stages, the (type, reason) partial and the rollup
+    tail are shared with the streaming-on-ingest twin.
     """
-    classified = tail_classified(tm, tail_thresholds(tm, distributed))
+    return tail_sampling_tail(
+        tail_sample_partials(tm, tail_thresholds(tm, distributed))
+    )
+
+
+TAIL_SAMPLE_OPS = {"n": "sum", "p99_value": "max"}
+
+
+def tail_sample_partials(tm: DataFrame, thresholds: DataFrame) -> DataFrame:
+    """O60's mergeable partial: per-(event_type, reason) record counts of
+    the classify pass (plus the type's threshold) — ADDITIVE, so the
+    streaming twin appends one per micro-batch."""
     return (
-        classified.groupBy("event_type")
+        tail_classified(tm, thresholds)
+        .groupBy("event_type", "reason")
+        .agg(F.count(F.lit(1)).alias("n"), F.max("p99_value").alias("p99_value"))
+    )
+
+
+def tail_sampling_tail(partials: DataFrame) -> DataFrame:
+    """O60's per-type keep report over (event_type, reason, n, p99_value)
+    partial rows — one definition for batch and stream."""
+    kept = lambda r: F.sum(  # noqa: E731
+        F.when(F.col("reason") == r, F.col("n")).otherwise(0)
+    ).cast("long")
+    return (
+        partials.groupBy("event_type")
         .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.when(F.col("reason") == "error", 1).otherwise(0))
-            .cast("long")
-            .alias("n_error_kept"),
-            F.sum(F.when(F.col("reason") == "tail", 1).otherwise(0))
-            .cast("long")
-            .alias("n_tail_kept"),
-            F.sum(F.when(F.col("reason") == "baseline", 1).otherwise(0))
-            .cast("long")
-            .alias("n_baseline_kept"),
+            F.sum("n").cast("long").alias("n_total"),
+            kept("error").alias("n_error_kept"),
+            kept("tail").alias("n_tail_kept"),
+            kept("baseline").alias("n_baseline_kept"),
             F.max("p99_value").alias("p99_value"),
         )
         .select(
@@ -2145,25 +2186,52 @@ def trend_regression(tm: DataFrame) -> DataFrame:
     aggregation pass (map-side combined) — no window, no sort; output is
     |types| rows.
     """
-    base = tm.select(
-        "event_type",
-        "metric_time_ms",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
-    )
-    t0 = base.groupBy("event_type").agg(F.min("metric_time_ms").alias("t0_ms"))
-    wt = base.join(F.broadcast(t0), "event_type").withColumn(
-        "t", F.expr("(metric_time_ms - t0_ms) DIV 1000")
-    )
+    return trend_tail(linear_fit_partials(tm, linear_fit_t0(tm)))
+
+
+def linear_fit_t0(tm: DataFrame) -> DataFrame:
+    """Per-type time origin ``t0_ms`` of the O63/O74 fit — the batch
+    operators train it on their own input, the streaming twins on the
+    history table."""
+    return tm.groupBy("event_type").agg(F.min("metric_time_ms").alias("t0_ms"))
+
+
+LINEAR_FIT_OPS = {
+    **{c: "sum" for c in ("n", "st", "sx", "stx", "stt", "sxx")},
+    "t_max": "max",
+    "t0_ms": "max",
+}
+
+
+def linear_fit_partials(tm: DataFrame, t0: DataFrame) -> DataFrame:
+    """O63/O74's exact sufficient statistics per type — (n, Σt, Σx, Σtx,
+    Σt², Σx²) as DECIMAL(38,0) sums plus ``t_max`` — with x in cents and t
+    in whole seconds past the broadcast ``t0``. Sums and maxima merge, so
+    the streaming twins append one partial per micro-batch."""
     dec = "decimal(38,0)"
-    stats = wt.groupBy("event_type").agg(
+    wt = (
+        tm.select(
+            "event_type",
+            "metric_time_ms",
+            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
+        )
+        .join(F.broadcast(t0), "event_type")
+        .withColumn("t", F.expr("(metric_time_ms - t0_ms) DIV 1000"))
+    )
+    return wt.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("t").cast(dec)).alias("st"),
         F.sum(F.col("x").cast(dec)).alias("sx"),
         F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
         F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
         F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
+        F.max("t").cast("long").alias("t_max"),
         F.max("t0_ms").alias("t0_ms"),
     )
+
+
+def trend_tail(stats: DataFrame) -> DataFrame:
+    """O63's slope/intercept/r² closed forms over linear-fit partials."""
     n = F.col("n").cast("double")
     st = F.col("st").cast("double")
     sx = F.col("sx").cast("double")
@@ -2202,6 +2270,9 @@ def metric_correlation(tm: DataFrame) -> DataFrame:
     avoid logs but r can keep its sqrt) so the hash compare stays exact.
     """
     return metric_correlation_tail(metric_hour_buckets(tm))
+
+
+METRIC_HOUR_OPS = {"v": "sum"}
 
 
 def metric_hour_buckets(tm: DataFrame) -> DataFrame:
@@ -2340,18 +2411,24 @@ def error_budget(tm: DataFrame, slo_error_pct: int = 20) -> DataFrame:
     Scale shape: one shuffle to the per-(app, day) rollup; the cumulative
     window runs per app over its bounded day axis.
     """
-    day_ms = F.col("metric_time_ms") - F.pmod(F.col("metric_time_ms"), F.lit(86400000))
-    per_day = (
-        tm.withColumn("day_ms", day_ms)
-        .groupBy("app_name", "day_ms")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_logs"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("long")
-            .alias("n_errors"),
-        )
-    )
+    per_day = error_count_partials(tm, "app_name", pmod_bucket(86400000, "day_ms"))
     return error_budget_tail(per_day, slo_error_pct)
+
+
+ERROR_COUNT_OPS = {"n_logs": "sum", "n_errors": "sum"}
+
+
+def error_count_partials(tm: DataFrame, key: str, bucket: F.Column) -> DataFrame:
+    """Per-(key, time bucket) BIGINT ``n_logs``/``n_errors`` — the one
+    additive partial under O68's budget, O71's burn windows and O79's RED
+    counts, and under their streaming twins. ``bucket`` is the caller's
+    own aliased bucket expression (each oracle fixes its flooring)."""
+    return tm.groupBy(key, bucket).agg(
+        F.count(F.lit(1)).cast("long").alias("n_logs"),
+        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+        .cast("long")
+        .alias("n_errors"),
+    )
 
 
 def error_budget_tail(per_day: DataFrame, slo_error_pct: int = 20) -> DataFrame:
@@ -2453,19 +2530,7 @@ def burn_rate_multiwindow(tm: DataFrame, slo_error_pct: int = 20) -> DataFrame:
     trailing windows share ONE partition/order spec (one sort), each app's
     hour axis is calendar-bounded.
     """
-    hour_ms = F.col("metric_time_ms") - F.pmod(
-        F.col("metric_time_ms"), F.lit(3600000)
-    )
-    per_hour = (
-        tm.withColumn("hour_ms", hour_ms)
-        .groupBy("app_name", "hour_ms")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_logs"),
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-            .cast("long")
-            .alias("n_errors"),
-        )
-    )
+    per_hour = error_count_partials(tm, "app_name", pmod_bucket(3600000, "hour_ms"))
     return burn_rate_multiwindow_tail(per_hour, slo_error_pct)
 
 
@@ -2542,33 +2607,13 @@ def forecast_linear(tm: DataFrame) -> DataFrame:
     per-type sufficient statistics; the forecast math runs on a
     types-sized frame.
     """
-    base = tm.select(
-        "event_type",
-        "metric_time_ms",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
-    )
-    t0 = base.groupBy("event_type").agg(F.min("metric_time_ms").alias("t0_ms"))
-    wt = base.join(F.broadcast(t0), "event_type").withColumn(
-        "t", F.expr("(metric_time_ms - t0_ms) DIV 1000")
-    )
-    dec = "decimal(38,0)"
-    stats = wt.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.col("t").cast(dec)).alias("st"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
-        F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
-        F.max("t").cast("long").alias("t_max"),
-        F.max("t0_ms").alias("t0_ms"),
-    )
-    return forecast_tail(stats)
+    return forecast_tail(linear_fit_partials(tm, linear_fit_t0(tm)))
 
 
 def forecast_tail(stats: DataFrame) -> DataFrame:
-    """O74's fit + projection tail over (event_type, n, st, sx, stx, stt,
-    t_max, t0_ms) sufficient-statistic rows — split out (the
-    O68/O71/O75 tail convention) so the streaming twin O81 applies the
-    IDENTICAL closed forms to its merged per-batch partials; the
+    """O74's fit + projection tail over linear-fit partials — split out
+    (the O68/O71/O75 tail convention) so the streaming twin O81 applies
+    the IDENTICAL closed forms to its merged per-batch partials; the
     projection arithmetic has ONE definition.
     """
     n = F.col("n").cast("double")
@@ -2642,6 +2687,9 @@ def histogram_rollup(
     return histogram_percentile_tail(
         histogram_levels_from_minutes(minute), width=width
     )
+
+
+HISTOGRAM_BIN_OPS = {"n": "sum"}
 
 
 def histogram_minute_partials(
@@ -2757,6 +2805,9 @@ def alert_flap_detect(tm: DataFrame, flap_k: int = 4) -> DataFrame:
     return alert_flap_tail(alert_minute_states(tm), flap_k=flap_k)
 
 
+ALERT_MINUTE_OPS = {"firing": "max"}
+
+
 def alert_minute_states(tm: DataFrame) -> DataFrame:
     """O77's finest-grain partial: per-(rule, app, minute) 0/1 firing
     maxima — the ONE pass over raw events. A MAX is mergeable (max of
@@ -2835,12 +2886,7 @@ def red_panel(tm: DataFrame, err_pct: int = 5, distributed: bool = False) -> Dat
         distributed,
     )
     dur = ranked.groupBy("app_id", "hour_ms").agg(*_order_stat_aggs("run_time_ms"))
-    re = base.groupBy("app_id", "hour_ms").agg(
-        F.count(F.lit(1)).cast("long").alias("n_logs"),
-        F.sum((F.col("event_type") == "error").cast("long"))
-        .cast("long")
-        .alias("n_errors"),
-    )
+    re = error_count_partials(base, "app_id", F.col("hour_ms"))
     return (
         re.join(dur, ["app_id", "hour_ms"])
         .drop("n_tasks")

@@ -11,6 +11,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: The directory holding this package, put on the Python workers' path.
+#: Workers start in the JVM's cwd with Spark's own path only, so without
+#: it a by-reference UDF (or an applyInPandasWithState function) cannot
+#: import the package unless the Spark driver's cwd or PYTHONPATH holds it.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "analytics-observability-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -43,6 +49,8 @@ def get_spark(app_name: str = "analytics-observability-spark") -> SparkSession:
         .config("spark.ui.port", "0")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        # Spark merges this with the worker's own PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()
 
@@ -52,7 +60,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The verification driver hands us its own SparkSession; only
     runtime-mutable confs may be touched here. UTC matters because oracle
-    comparisons go through naive timestamps.
+    comparisons go through naive timestamps. ``spark.executorEnv.PYTHONPATH``
+    (set by :func:`get_spark`) is NOT runtime-settable: an external session
+    must put this package on its executors' path itself, or by-reference
+    UDFs fail in the workers with ``ModuleNotFoundError``.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:

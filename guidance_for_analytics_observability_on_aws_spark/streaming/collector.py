@@ -201,6 +201,19 @@ class _AvailableNow:
     def foreach_batch(self, df: DataFrame, fn) -> list[dict]:
         return self.start(df.writeStream.foreachBatch(fn))
 
+    def appended(self, df: DataFrame, **sinks) -> list[DataFrame]:
+        """Run ``df`` once, appending every micro-batch's ``fn(batch)`` to
+        ``<run.dir>/<sub>`` for each ``sub=fn``; returns the sinks read
+        back, in argument order (collect what reads them inside the
+        block). The per-batch partial path of the additive twins."""
+
+        def _append(batch: DataFrame, batch_id: int) -> None:
+            for sub, fn in sinks.items():
+                fn(batch).write.mode("append").parquet(f"{self.dir}/{sub}")
+
+        self.foreach_batch(df, _append)
+        return [self.spark.read.parquet(f"{self.dir}/{sub}") for sub in sinks]
+
     def memory(self, df: DataFrame, mode: str) -> DataFrame:
         """Run ``df`` into the run's memory sink; returns the resolved sink
         table (its ``recentProgress`` is left in ``run.progress``)."""
@@ -305,16 +318,8 @@ def run_streaming_stage_agg(
 
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-
-        def _close_stages(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                stage_agg_skewness(batch_df)
-                .write.mode("append")
-                .parquet(f"{run.dir}/stage_agg")
-            )
-
-        run.foreach_batch(tm, _close_stages)
-        return run.collected(spark.read.parquet(f"{run.dir}/stage_agg"))
+        (stages,) = run.appended(tm, stage_agg=stage_agg_skewness)
+        return run.collected(stages)
 
 
 def run_windowed_rollup(
@@ -418,15 +423,10 @@ def run_streaming_alerts(
 
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        alerts = f"{run.dir}/alerts"
-
-        def _check_batch(batch_df: DataFrame, batch_id: int) -> None:
-            # persist raw violation rows: counts/distincts then roll up exactly
-            # across batches (aggregated partials would not merge distincts)
-            alert_violations(batch_df).write.mode("append").parquet(alerts)
-
-        run.foreach_batch(tm, _check_batch)
-        return run.collected(alert_rollup(spark.read.parquet(alerts)))
+        # raw violation rows, not aggregates: the rollup's distinct counts
+        # would not merge across batches
+        (alerts,) = run.appended(tm, alerts=alert_violations)
+        return run.collected(alert_rollup(alerts))
 
 
 def run_streaming_incremental_dedup(
@@ -561,13 +561,8 @@ def run_streaming_heavy_hitters(
 
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-            cms_key_buckets(batch_df).write.mode("append").parquet(partials)
-
-        run.foreach_batch(tm, _sketch_batch)
-        return run.collected(cms_topk(spark.read.parquet(partials)))
+        (partials,) = run.appended(tm, partials=cms_key_buckets)
+        return run.collected(cms_topk(partials))
 
 
 def run_streaming_metric_log_join(
@@ -774,57 +769,11 @@ def run_streaming_tail_sampling(
     thresholds = obs.tail_thresholds(static_tm).localCheckpoint(eager=True)
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                obs.tail_classified(batch_df, thresholds)
-                .groupBy("event_type", "reason")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max("p99_value").alias("p99_value"),
-                )
-                .write.mode("append")
-                .parquet(partials)
-            )
-
-        run.foreach_batch(tm, _classify_batch)
-        kept = lambda r: F.sum(  # noqa: E731
-            F.when(F.col("reason") == r, F.col("n")).otherwise(0)
-        ).cast("long")
-        rollup = (
-            spark.read.parquet(partials)
-            .groupBy("event_type")
-            .agg(
-                F.sum("n").cast("long").alias("n_total"),
-                kept("error").alias("n_error_kept"),
-                kept("tail").alias("n_tail_kept"),
-                kept("baseline").alias("n_baseline_kept"),
-                F.max("p99_value").alias("p99_value"),
-            )
-            .select(
-                "event_type",
-                "n_total",
-                "n_error_kept",
-                "n_tail_kept",
-                "n_baseline_kept",
-                (
-                    F.col("n_error_kept")
-                    + F.col("n_tail_kept")
-                    + F.col("n_baseline_kept")
-                ).alias("n_kept"),
-                "p99_value",
-                (
-                    (
-                        F.col("n_error_kept")
-                        + F.col("n_tail_kept")
-                        + F.col("n_baseline_kept")
-                    )
-                    / F.col("n_total")
-                ).alias("kept_share"),
-            )
+        (partials,) = run.appended(
+            tm, partials=lambda b: obs.tail_sample_partials(b, thresholds)
         )
-        return run.collected(rollup)
+        merged = obs.merge_partials(partials, obs.TAIL_SAMPLE_OPS)
+        return run.collected(obs.tail_sampling_tail(merged))
 
 
 def run_streaming_near_dedup(
@@ -962,72 +911,14 @@ def run_streaming_trend_regression(
     static_tm = task_metrics(
         spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     )
-    t0 = (
-        static_tm.groupBy("event_type")
-        .agg(F.min("metric_time_ms").alias("t0_ms"))
-        .localCheckpoint(eager=True)
-    )
-    dec = "decimal(38,0)"
-    n = F.col("n").cast("double")
-    st = F.col("st").cast("double")
-    sx = F.col("sx").cast("double")
-    stx = F.col("stx").cast("double")
-    stt = F.col("stt").cast("double")
-    sxx = F.col("sxx").cast("double")
-    cov_n = n * stx - st * sx
-    var_t = n * stt - st * st
-    var_x = n * sxx - sx * sx
+    t0 = obs.linear_fit_t0(static_tm).localCheckpoint(eager=True)
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            base = batch_df.select(
-                "event_type",
-                "metric_time_ms",
-                F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
-            ).join(F.broadcast(t0), "event_type")
-            wt = base.withColumn("t", F.expr("(metric_time_ms - t0_ms) DIV 1000"))
-            (
-                wt.groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n"),
-                    F.sum(F.col("t").cast(dec)).alias("st"),
-                    F.sum(F.col("x").cast(dec)).alias("sx"),
-                    F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
-                    F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
-                    F.sum((F.col("x") * F.col("x")).cast(dec)).alias("sxx"),
-                    F.max("t0_ms").alias("t0_ms"),
-                )
-                .write.mode("append")
-                .parquet(partials)
-            )
-
-        run.foreach_batch(tm, _partials)
-        totals = (
-            spark.read.parquet(partials)
-            .groupBy("event_type")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("st").cast(dec).alias("st"),
-                F.sum("sx").cast(dec).alias("sx"),
-                F.sum("stx").cast(dec).alias("stx"),
-                F.sum("stt").cast(dec).alias("stt"),
-                F.sum("sxx").cast(dec).alias("sxx"),
-                F.max("t0_ms").alias("t0_ms"),
-            )
+        (partials,) = run.appended(
+            tm, partials=lambda b: obs.linear_fit_partials(b, t0)
         )
-        result = totals.select(
-            "event_type",
-            F.col("n").alias("n_events"),
-            "t0_ms",
-            F.try_divide(cov_n, var_t).alias("slope_cents_per_s"),
-            F.try_divide(sx - F.try_divide(cov_n, var_t) * st, n).alias(
-                "intercept_cents"
-            ),
-            F.try_divide(cov_n * cov_n, var_t * var_x).alias("r2"),
-        )
-        return run.collected(result)
+        merged = obs.merge_partials(partials, obs.LINEAR_FIT_OPS)
+        return run.collected(obs.trend_tail(merged))
 
 
 def run_streaming_error_budget(
@@ -1043,42 +934,17 @@ def run_streaming_error_budget(
     ``tests/test_streaming.py``). In production the merged per-day panel
     is what the morning report reads; no keyed state, constant memory.
     """
-    from ..operators.observability import error_budget_tail
+    from ..operators import observability as obs
 
+    day = obs.pmod_bucket(86400000, "day_ms")
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy(
-                    "app_name",
-                    (
-                        F.col("metric_time_ms")
-                        - F.pmod(F.col("metric_time_ms"), F.lit(86400000))
-                    ).alias("day_ms"),
-                )
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_logs"),
-                    F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-                    .cast("long")
-                    .alias("n_errors"),
-                )
-                .write.mode("append")
-                .parquet(partials)
-            )
-
-        run.foreach_batch(tm, _partials)
-        per_day = (
-            spark.read.parquet(partials)
-            .groupBy("app_name", "day_ms")
-            .agg(
-                F.sum("n_logs").cast("long").alias("n_logs"),
-                F.sum("n_errors").cast("long").alias("n_errors"),
-            )
+        (partials,) = run.appended(
+            tm, partials=lambda b: obs.error_count_partials(b, "app_name", day)
         )
+        per_day = obs.merge_partials(partials, obs.ERROR_COUNT_OPS)
         # the IDENTICAL batch tail — single definition, zero drift possible
-        return run.collected(error_budget_tail(per_day))
+        return run.collected(obs.error_budget_tail(per_day))
 
 
 def run_streaming_burn_rate(
@@ -1094,41 +960,16 @@ def run_streaming_burn_rate(
     The live deployment evaluates the merged panel per trigger; paging on
     the LAST hour's flags while the AND-of-windows logic stays shared.
     """
-    from ..operators.observability import burn_rate_multiwindow_tail
+    from ..operators import observability as obs
 
+    hour = obs.pmod_bucket(3600000, "hour_ms")
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy(
-                    "app_name",
-                    (
-                        F.col("metric_time_ms")
-                        - F.pmod(F.col("metric_time_ms"), F.lit(3600000))
-                    ).alias("hour_ms"),
-                )
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_logs"),
-                    F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
-                    .cast("long")
-                    .alias("n_errors"),
-                )
-                .write.mode("append")
-                .parquet(partials)
-            )
-
-        run.foreach_batch(tm, _partials)
-        per_hour = (
-            spark.read.parquet(partials)
-            .groupBy("app_name", "hour_ms")
-            .agg(
-                F.sum("n_logs").cast("long").alias("n_logs"),
-                F.sum("n_errors").cast("long").alias("n_errors"),
-            )
+        (partials,) = run.appended(
+            tm, partials=lambda b: obs.error_count_partials(b, "app_name", hour)
         )
-        return run.collected(burn_rate_multiwindow_tail(per_hour))
+        per_hour = obs.merge_partials(partials, obs.ERROR_COUNT_OPS)
+        return run.collected(obs.burn_rate_multiwindow_tail(per_hour))
 
 
 def run_streaming_histogram_rollup(
@@ -1147,27 +988,14 @@ def run_streaming_histogram_rollup(
     is the partial files, bounded by types × minutes × n_bins regardless
     of input volume.
     """
-    from ..operators.observability import (
-        histogram_levels_from_minutes,
-        histogram_minute_partials,
-        histogram_percentile_tail,
-    )
+    from ..operators import observability as obs
 
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            histogram_minute_partials(batch_df).write.mode("append").parquet(partials)
-
-        run.foreach_batch(tm, _partials)
-        minute = (
-            spark.read.parquet(partials)
-            .groupBy("event_type", "bucket_ms", "bin")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-        levels = histogram_levels_from_minutes(minute)
-        return run.collected(histogram_percentile_tail(levels))
+        (partials,) = run.appended(tm, partials=obs.histogram_minute_partials)
+        minute = obs.merge_partials(partials, obs.HISTOGRAM_BIN_OPS)
+        levels = obs.histogram_levels_from_minutes(minute)
+        return run.collected(obs.histogram_percentile_tail(levels))
 
 
 def run_streaming_alert_flap(
@@ -1187,22 +1015,13 @@ def run_streaming_alert_flap(
     the merged panel per trigger and suppresses pages for (rule, app)
     rows currently flap-flagged.
     """
-    from ..operators.observability import alert_flap_tail, alert_minute_states
+    from ..operators import observability as obs
 
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            alert_minute_states(batch_df).write.mode("append").parquet(partials)
-
-        run.foreach_batch(tm, _partials)
-        minute = (
-            spark.read.parquet(partials)
-            .groupBy("rule_id", "metric", "threshold", "app_id", "minute_ms")
-            .agg(F.max("firing").cast("int").alias("firing"))
-        )
-        return run.collected(alert_flap_tail(minute))
+        (partials,) = run.appended(tm, partials=obs.alert_minute_states)
+        minute = obs.merge_partials(partials, obs.ALERT_MINUTE_OPS)
+        return run.collected(obs.alert_flap_tail(minute))
 
 
 def run_streaming_red_panel(
@@ -1246,7 +1065,7 @@ def run_streaming_red_panel(
     be claimed there) — a dashboard consumer sees per row whether the
     ±width guarantee holds or the panel needs more bins.
     """
-    from ..operators.observability import histogram_percentile_tail
+    from ..operators import observability as obs
 
     clamp_lo = (int(n_bins) - 1) * int(bin_width_ms)
     err_bounds = [
@@ -1255,60 +1074,30 @@ def run_streaming_red_panel(
         .alias(f"p{p}_err_bound_ms")
         for p in (50, 95, 99)
     ]
+    hour = obs.pmod_bucket(3600000, "hour_ms")
+    # integer DIV bin index — the repo-wide convention (double division
+    # only matches // while values stay below 2^53)
+    bin_idx = F.least(
+        F.expr(f"run_time_ms DIV {int(bin_width_ms)}"), F.lit(int(n_bins) - 1)
+    ).cast("long")
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        out = run.dir
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            hour = (
-                F.col("metric_time_ms")
-                - F.pmod(F.col("metric_time_ms"), F.lit(3600000))
-            ).alias("hour_ms")
-            (
-                batch_df.groupBy("app_id", hour)
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_logs"),
-                    F.sum((F.col("event_type") == "error").cast("long"))
-                    .cast("long")
-                    .alias("n_errors"),
-                )
-                .write.mode("append")
-                .parquet(f"{out}/counts")
-            )
-            # integer DIV bin index — the repo-wide convention (double
-            # division only matches // while values stay below 2^53)
-            bin_idx = F.least(
-                F.expr(f"run_time_ms DIV {int(bin_width_ms)}"), F.lit(int(n_bins) - 1)
-            ).cast("long")
-            (
-                batch_df.groupBy("app_id", hour, bin_idx.alias("bin"))
-                .agg(F.count(F.lit(1)).cast("long").alias("n"))
-                .write.mode("append")
-                .parquet(f"{out}/bins")
-            )
-
-        run.foreach_batch(tm, _partials)
-        counts = (
-            spark.read.parquet(f"{out}/counts")
-            .groupBy("app_id", "hour_ms")
-            .agg(
-                F.sum("n_logs").cast("long").alias("n_logs"),
-                F.sum("n_errors").cast("long").alias("n_errors"),
-            )
+        counts, bins = run.appended(
+            tm,
+            counts=lambda b: obs.error_count_partials(b, "app_id", hour),
+            bins=lambda b: b.groupBy("app_id", hour, bin_idx.alias("bin")).agg(
+                F.count(F.lit(1)).cast("long").alias("n")
+            ),
         )
-        bins = (
-            spark.read.parquet(f"{out}/bins")
-            .groupBy("app_id", "hour_ms", "bin")
-            .agg(F.sum("n").cast("long").alias("n"))
-            .select(
-                F.lit("hour").alias("level"),
-                F.col("app_id").alias("event_type"),  # tail's generic key slot
-                F.col("hour_ms").alias("bucket_ms"),
-                "bin",
-                "n",
-            )
+        counts = obs.merge_partials(counts, obs.ERROR_COUNT_OPS)
+        bins = obs.merge_partials(bins, obs.HISTOGRAM_BIN_OPS).select(
+            F.lit("hour").alias("level"),
+            F.col("app_id").alias("event_type"),  # tail's generic key slot
+            F.col("hour_ms").alias("bucket_ms"),
+            "bin",
+            "n",
         )
-        dur = histogram_percentile_tail(bins, width=bin_width_ms).select(
+        dur = obs.histogram_percentile_tail(bins, width=bin_width_ms).select(
             F.col("event_type").alias("app_id"),
             F.col("bucket_ms").alias("hour_ms"),
             "p50_lo",
@@ -1351,58 +1140,19 @@ def run_streaming_forecast_linear(
     slope/intercept/threshold/crossing/verdict — is BIT-identical to
     batch O74 (pinned in ``tests/test_streaming.py``).
     """
-    from ..operators.observability import forecast_tail
+    from ..operators import observability as obs
 
     static_tm = task_metrics(
         spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     )
-    t0 = (
-        static_tm.groupBy("event_type")
-        .agg(F.min("metric_time_ms").alias("t0_ms"))
-        .localCheckpoint(eager=True)
-    )
-    dec = "decimal(38,0)"
+    t0 = obs.linear_fit_t0(static_tm).localCheckpoint(eager=True)
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        partials = f"{run.dir}/partials"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            base = batch_df.select(
-                "event_type",
-                "metric_time_ms",
-                F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
-            ).join(F.broadcast(t0), "event_type")
-            wt = base.withColumn("t", F.expr("(metric_time_ms - t0_ms) DIV 1000"))
-            (
-                wt.groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n"),
-                    F.sum(F.col("t").cast(dec)).alias("st"),
-                    F.sum(F.col("x").cast(dec)).alias("sx"),
-                    F.sum((F.col("t") * F.col("x")).cast(dec)).alias("stx"),
-                    F.sum((F.col("t") * F.col("t")).cast(dec)).alias("stt"),
-                    F.max("t").cast("long").alias("t_max"),
-                    F.max("t0_ms").alias("t0_ms"),
-                )
-                .write.mode("append")
-                .parquet(partials)
-            )
-
-        run.foreach_batch(tm, _partials)
-        totals = (
-            spark.read.parquet(partials)
-            .groupBy("event_type")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("st").cast(dec).alias("st"),
-                F.sum("sx").cast(dec).alias("sx"),
-                F.sum("stx").cast(dec).alias("stx"),
-                F.sum("stt").cast(dec).alias("stt"),
-                F.max("t_max").cast("long").alias("t_max"),
-                F.max("t0_ms").alias("t0_ms"),
-            )
+        (partials,) = run.appended(
+            tm, partials=lambda b: obs.linear_fit_partials(b, t0)
         )
-        return run.collected(forecast_tail(totals))
+        merged = obs.merge_partials(partials, obs.LINEAR_FIT_OPS)
+        return run.collected(obs.forecast_tail(merged))
 
 
 def run_streaming_bloom_build(
@@ -1427,7 +1177,8 @@ def run_streaming_bloom_build(
     volume bounded by m/32 words per batch.
     """
     from ..functions.text import corpus
-    from ..operators.dedup import bloom_audit, bloom_keys, bloom_words
+    from ..operators.dedup import BLOOM_WORD_OPS, bloom_audit, bloom_keys, bloom_words
+    from ..operators.observability import merge_partials
 
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
@@ -1439,17 +1190,8 @@ def run_streaming_bloom_build(
         F.col("doc_id") < corpus_boundary
     ).select("key")
     with _AvailableNow(spark, sf_dir, "documents.parquet", out_dir) as run:
-        words = f"{run.dir}/words"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            bloom_words(batch_df).write.mode("append").parquet(words)
-
-        run.foreach_batch(old_keys_stream, _partials)
-        merged = (
-            spark.read.parquet(words)
-            .groupBy("word_idx")
-            .agg(F.bit_or("bits").alias("bits"))
-        )
+        (words,) = run.appended(old_keys_stream, words=bloom_words)
+        merged = merge_partials(words, BLOOM_WORD_OPS)
         static = bloom_keys(
             corpus(spark.read.parquet(f"{sf_dir}/documents.parquet"))
         ).localCheckpoint(eager=True)
@@ -1474,25 +1216,13 @@ def run_streaming_metric_correlation(
     including the IEEE sqrt-based pearson_r — is BIT-identical to batch
     O64 (pinned in ``tests/test_streaming.py``).
     """
-    from ..operators.observability import (
-        metric_correlation_tail,
-        metric_hour_buckets,
-    )
+    from ..operators import observability as obs
 
     tm = task_metrics(events_stream(spark, sf_dir))
     with _AvailableNow(spark, sf_dir, "events.parquet", out_dir) as run:
-        buckets = f"{run.dir}/buckets"
-
-        def _partials(batch_df: DataFrame, batch_id: int) -> None:
-            metric_hour_buckets(batch_df).write.mode("append").parquet(buckets)
-
-        run.foreach_batch(tm, _partials)
-        merged = (
-            spark.read.parquet(buckets)
-            .groupBy("hour_ms", "event_type")
-            .agg(F.sum("v").cast("long").alias("v"))
-        )
-        return run.collected(metric_correlation_tail(merged))
+        (buckets,) = run.appended(tm, buckets=obs.metric_hour_buckets)
+        merged = obs.merge_partials(buckets, obs.METRIC_HOUR_OPS)
+        return run.collected(obs.metric_correlation_tail(merged))
 
 
 def run_streaming_repeated_spans(

@@ -1086,29 +1086,134 @@ def test_streaming_bloom_build_matches_batch(spark, sf_dir):
 def test_bloom_words_merge_idempotent(spark, sf_dir):
     """D33's stated stronger-than-additive property: bit_or partials from
     the corpus UNIONED WITH ITSELF (at-least-once re-delivery) merge to
-    the identical word table."""
+    the identical word table — and so do the partials of three disjoint
+    slices (a three-batch ingest)."""
+    from functools import reduce
+
     from pyspark.sql import functions as F
 
     from guidance_for_analytics_observability_on_aws_spark.functions.text import (
         corpus,
     )
     from guidance_for_analytics_observability_on_aws_spark.operators.dedup import (
+        BLOOM_WORD_OPS,
         bloom_words,
     )
+    from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
+        merge_partials,
+    )
 
-    keys = (
-        corpus(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-        .filter(F.col("doc_id") < 1_000_000)
-        .select(F.md5("text").alias("key"))
+    docs = corpus(spark.read.parquet(f"{sf_dir}/documents.parquet")).filter(
+        F.col("doc_id") < 1_000_000
     )
+    keys = docs.select(F.md5("text").alias("key"))
     once = {(r.word_idx, r.bits) for r in bloom_words(keys).collect()}
-    redelivered = (
-        bloom_words(keys.unionAll(keys))
-        .groupBy("word_idx")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
+    redelivered = merge_partials(bloom_words(keys.unionAll(keys)), BLOOM_WORD_OPS)
     twice = {(r.word_idx, r.bits) for r in redelivered.collect()}
     assert once == twice and once
+    slices = [
+        bloom_words(docs.filter(F.col("doc_id") % 3 == i).select(F.md5("text").alias("key")))
+        for i in range(3)
+    ]
+    union = reduce(lambda a, b: a.unionByName(b), slices)
+    merged = merge_partials(union, BLOOM_WORD_OPS)
+    assert {(r.word_idx, r.bits) for r in merged.collect()} == once
+    assert union.count() > len(once)  # the slices really overlapped
+
+
+def _merge_cases(family: str, tm):
+    """(partial, ops, [(tail, batch operator), ...]) cases of one
+    mergeable-partial family, as its streaming twin uses them: thresholds
+    and t0 trained on the whole table, partials per slice."""
+    from guidance_for_analytics_observability_on_aws_spark.operators import (
+        observability as obs,
+    )
+
+    if family == "linear_fit":
+        t0 = obs.linear_fit_t0(tm)
+        return [(
+            lambda d: obs.linear_fit_partials(d, t0),
+            obs.LINEAR_FIT_OPS,
+            [(obs.trend_tail, obs.trend_regression),
+             (obs.forecast_tail, obs.forecast_linear)],
+        )]
+    if family == "error_counts":
+        day = obs.pmod_bucket(86400000, "day_ms")
+        hour = obs.pmod_bucket(3600000, "hour_ms")
+        return [
+            (lambda d: obs.error_count_partials(d, "app_name", day),
+             obs.ERROR_COUNT_OPS, [(obs.error_budget_tail, obs.error_budget)]),
+            (lambda d: obs.error_count_partials(d, "app_name", hour),
+             obs.ERROR_COUNT_OPS,
+             [(obs.burn_rate_multiwindow_tail, obs.burn_rate_multiwindow)]),
+        ]
+    if family == "tail_sampling":
+        thresholds = obs.tail_thresholds(tm)
+        return [(
+            lambda d: obs.tail_sample_partials(d, thresholds),
+            obs.TAIL_SAMPLE_OPS,
+            [(obs.tail_sampling_tail, obs.tail_sampling)],
+        )]
+    if family == "histogram_minutes":
+        return [(
+            obs.histogram_minute_partials,
+            obs.HISTOGRAM_BIN_OPS,
+            [(lambda m: obs.histogram_percentile_tail(
+                obs.histogram_levels_from_minutes(m)), obs.histogram_rollup)],
+        )]
+    if family == "alert_minute_states":
+        return [(obs.alert_minute_states, obs.ALERT_MINUTE_OPS,
+                 [(obs.alert_flap_tail, obs.alert_flap_detect)])]
+    if family == "metric_hour_buckets":
+        return [(obs.metric_hour_buckets, obs.METRIC_HOUR_OPS,
+                 [(obs.metric_correlation_tail, obs.metric_correlation)])]
+    assert family == "cms_key_buckets"
+    return [(obs.cms_key_buckets, obs.CMS_KEY_OPS,
+             [(obs.cms_topk, obs.heavy_hitters_cms)])]
+
+
+@pytest.mark.parametrize(
+    "family",
+    [
+        "linear_fit",
+        "error_counts",
+        "tail_sampling",
+        "histogram_minutes",
+        "alert_minute_states",
+        "metric_hour_buckets",
+        "cms_key_buckets",
+    ],
+)
+def test_partials_merge_across_batches(spark, sf_dir, family):
+    """Every testdata table is one row group, so each streaming twin's
+    parity test runs ONE micro-batch and never merges two partials. Here
+    the task table is split into three disjoint slices (task_id % 3):
+    ``merge_partials`` over the union of the slice partials must equal
+    the partial of the whole table, and each tail over the merge must
+    equal its batch operator — the multi-batch twin, without a stream."""
+    from functools import reduce
+
+    from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
+        merge_partials,
+    )
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.select(sorted(df.columns)).collect()), key=str)
+
+    tm = task_metrics(load_tables(spark, sf_dir)["events"])
+    for partial, ops, tails in _merge_cases(family, tm):
+        union = reduce(
+            lambda a, b: a.unionByName(b),
+            [partial(tm.filter(F.col("task_id") % 3 == i)) for i in range(3)],
+        )
+        merged = merge_partials(union, ops)
+        whole = rows(partial(tm))
+        assert rows(merged) == whole and whole
+        if family != "histogram_minutes":  # one event per minute-bin key here
+            assert union.count() > len(whole), "no key was split across slices"
+        assert merged.dtypes == partial(tm).select(merged.columns).dtypes
+        for tail, batch in tails:
+            assert rows(tail(merged)) == rows(batch(tm))
 
 
 def test_streaming_metric_correlation_matches_batch(spark, sf_dir):
@@ -1735,3 +1840,40 @@ def test_streaming_runner_failure_cleans_up(spark, sf_dir, tmp_path, monkeypatch
         ], runner.__name__
         assert not spark.streams.active, runner.__name__
         assert spark.conf.get(key) == before, runner.__name__
+
+
+def test_executors_import_package_from_foreign_cwd(sf_dir, tmp_path):
+    """Python workers must import the package wherever the Spark driver
+    runs: a fresh JVM started from a foreign cwd with PYTHONPATH unset,
+    whose Python side finds the package only through ``sys.path``, runs
+    a stateful runner whose state function lives in the package (by
+    reference)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from guidance_for_analytics_observability_on_aws_spark.plans.registry import REGISTRY
+from guidance_for_analytics_observability_on_aws_spark.session import get_spark
+spark = get_spark("foreign-cwd")
+spark.sparkContext.setLogLevel("ERROR")
+print("ROWS", len(REGISTRY["stream_ewma_smooth"].builder(spark, {sf_dir!r}).collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "SPARK_MASTER")}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    errors = [line for line in proc.stderr.splitlines() if "Error" in line]
+    assert proc.returncode == 0, "\n".join(errors[-20:]) or proc.stderr[-3000:]
+    rows = [line for line in proc.stdout.splitlines() if line.startswith("ROWS ")]
+    assert rows and int(rows[0].split()[1]) > 0, proc.stdout[-2000:]

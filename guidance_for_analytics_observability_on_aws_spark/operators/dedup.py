@@ -1087,7 +1087,6 @@ def dedup_sorted_neighborhood(
     documents: DataFrame,
     window: int = 8,
     threshold_pct: int = 80,
-    distributed: bool = True,
     base: DataFrame | None = None,
 ) -> DataFrame:
     """D30: SORTED-NEIGHBORHOOD near-dup detection — the classic blocking
@@ -1101,17 +1100,15 @@ def dedup_sorted_neighborhood(
     SNM) a curation team A/Bs against LSH.
 
     Scale shape: the global order is the family's shared two-phase rank
-    (``distributed=True`` — the DEFAULT here, since the "group" is the
-    whole corpus — routes ``_ranked_with_n`` through O44's
-    range-partition prefix sum; no single-task global sort; bit-equal to
-    the window path, pinned in tests). The rank-band self-join is
-    rewritten as an EQUI-join: docs bucket by ``(rn−1) DIV window`` and
-    each left row probes exactly its own and the next bucket, so the
-    neighborhood condition ``0 < rn_b − rn_a < window`` never plans a
-    non-equi join. Each candidate is scored by one JVM-side
-    ``array_intersect`` over the two distinct-shingle arrays — D2's exact
-    Jaccard arithmetic (identical intersection/union algebra), threshold
-    applied as the cross-multiplied integer inequality
+    (``_ranked_with_n`` through O44's range-partition prefix sum, since
+    the "group" is the whole corpus; no single-task global sort). The
+    rank-band self-join is rewritten as an EQUI-join: docs bucket by
+    ``(rn−1) DIV window`` and each left row probes exactly its own and the
+    next bucket, so the neighborhood condition ``0 < rn_b − rn_a <
+    window`` never plans a non-equi join. Each candidate is scored by one
+    JVM-side ``array_intersect`` over the two distinct-shingle arrays —
+    D2's exact Jaccard arithmetic (identical intersection/union algebra),
+    threshold applied as the cross-multiplied integer inequality
     ``inter·100 ≥ pct·union``. All-integer until the final reported
     ratio; full hash-exact DuckDB oracle.
 
@@ -1133,9 +1130,9 @@ def dedup_sorted_neighborhood(
     # three times below (rank input + both scoring sides), and folding the
     # shingle construction into it halves the array-build work vs
     # rebuilding shingles per join side (measured ~2.3 s/side at 10×
-    # sf0.1). distributed=True is the DEFAULT: the global order has no
-    # small-group argument (the group is the whole corpus), so the window
-    # path's single-task sort is exactly the 1000× straggler.
+    # sf0.1). The rank is two-phase: the global order has no small-group
+    # argument (the group is the whole corpus), so a window's single-task
+    # sort is exactly the 1000× straggler.
     pre = base if base is not None else _shingle_base(documents)
     base = pre.select(
         "doc_id",
@@ -1146,7 +1143,7 @@ def dedup_sorted_neighborhood(
         base.select("doc_id", "skey").withColumn("_g", F.lit(0)),
         "_g",
         ["skey", "doc_id"],
-        distributed,
+        distributed=True,
     ).select("doc_id", "rn")
     bkt = F.floor((F.col("rn") - 1) / window).cast("long")
     left = ranked.select(

@@ -40,10 +40,19 @@ def merge_partials(partials: DataFrame, ops: dict[str, str]) -> DataFrame:
 
 def pmod_bucket(width_ms: int, name: str) -> F.Column:
     """``metric_time_ms`` floored to a ``width_ms`` bucket via ``pmod``
-    (the SLO panels' convention; ``DIV w * w`` differs for negative
+    (the SLO panels' convention; :func:`div_bucket` differs for negative
     times, so callers keep whichever their oracle uses)."""
     t = F.col("metric_time_ms")
     return (t - F.pmod(t, F.lit(width_ms))).alias(name)
+
+
+def div_bucket(width_ms: int, name: str) -> F.Column:
+    """``metric_time_ms`` truncated toward zero to a ``width_ms`` bucket
+    (``DIV w * w``) — the O54/O79 hour convention, shared by the RED
+    panel and its streaming twin so a pre-1970 time lands in the same
+    bucket in both."""
+    w = int(width_ms)
+    return F.expr(f"metric_time_ms DIV {w} * {w}").alias(name)
 
 
 def task_metrics_table(tm: DataFrame) -> DataFrame:
@@ -303,19 +312,21 @@ def _ranked_with_n(
     """Attach ``rn`` (1-based rank of the row within its ``part_col`` group
     under the total order ``order_cols`` — which must make rows unique) and
     ``n`` (group size) — the input contract of :func:`_order_stat_aggs`,
-    factored out so EVERY order-statistic operator (O8/O42/O44/O54/O58/O60,
-    T45) shares one rank definition AND one scale escape hatch.
+    the one rank primitive every order-statistic and ranking operator
+    shares. Each operator picks its formulation in code; none exposes it.
 
     ``distributed=False``: one ranked window per group — a whole group
-    sorts in one task. Fine while groups are bounded (5 event types); at
-    100× a single hot metric class becomes one straggler task.
+    sorts in one task. The choice for bounded groups (event types, hours,
+    sources, priorities).
 
     ``distributed=True``: O44's two-phase prefix sum over unit counts
     (range-partition on the sort key → slice-local ranks → cumulated slice
     offsets broadcast back) + a broadcast group-count join — the heaviest
-    task holds one range slice regardless of group size. Rank assignment
-    is bit-identical to the window path (same total order, same 1-based
-    dense positions), pinned per family member in ``tests/test_plans.py``.
+    task holds one range slice regardless of group size. The choice where
+    one group can outgrow a task: O44, and the whole-corpus orders of P21,
+    D30 and P26/P29. Rank assignment is bit-identical to the window (same
+    total order, same 1-based dense positions), pinned per family member
+    in ``tests/test_plans.py``.
 
     ``part_col`` may be a LIST of columns for a composite group key
     (e.g. O79's (app_id, hour_ms)) — ranked on the columns directly, not
@@ -342,11 +353,8 @@ def _global_desc_ranked(
 ) -> DataFrame:
     """Global rank 1..N by ``value_col`` DESC (``tiebreak_col`` asc)
     through the distributed two-phase rank — the shared adapter the
-    top-k leaderboard operators (O30/O57) route instead of each
-    repeating the constant-group + negated-key + rn→rank boilerplate
-    (T39/P14 instead use the multi-value :func:`~..pipeline._prefix_sum`
-    directly, which IS their shared path — they also need a running sum
-    in the same pass)."""
+    corpus-wide top-k selections (P26/P29) use instead of each repeating
+    the constant-group + negated-key + rn→rank boilerplate."""
     ranked = _ranked_with_n(
         df.withColumn("_g", F.lit(1)).withColumn("_negv", -F.col(value_col)),
         "_g",
@@ -358,12 +366,12 @@ def _global_desc_ranked(
 
 def _ntile_from_rank(k: int):
     """Spark's ``ntile(k)`` recomputed from the :func:`_ranked_with_n`
-    contract columns ``rn``/``n`` in pure integer arithmetic — so NTILE
-    operators (T40) can route the distributed two-phase rank instead of
-    one global window sort, bit-identically: with ``q = n DIV k`` and
-    ``r = n % k``, the first ``r`` tiles hold ``q+1`` rows and the rest
-    ``q`` (exactly Spark's split), hence tile = ``ceil(rn/(q+1))`` up to
-    the boundary ``r·(q+1)`` and ``r + ceil((rn-boundary)/q)`` past it
+    contract columns ``rn``/``n`` in pure integer arithmetic — the
+    two-phase counterpart of one global NTILE window sort (T40's scores),
+    bit-identical: with ``q = n DIV k`` and ``r = n % k``, the first
+    ``r`` tiles hold ``q+1`` rows and the rest ``q`` (exactly Spark's
+    split), hence tile = ``ceil(rn/(q+1))`` up to the boundary
+    ``r·(q+1)`` and ``r + ceil((rn-boundary)/q)`` past it
     (``greatest(q,1)`` guards the n < k case, where the boundary covers
     every row and the ELSE branch is unreachable).
     """
@@ -376,16 +384,13 @@ def _ntile_from_rank(k: int):
     ).cast("long")
 
 
-def task_percentiles(tm: DataFrame, distributed: bool = False) -> DataFrame:
+def task_percentiles(tm: DataFrame) -> DataFrame:
     """O8: p25/50/75/99 per event_type via explicit lower order statistics
-    (:func:`_order_stat_aggs`); ``distributed=True`` swaps the per-group
-    window sort for the O44 two-phase rank (:func:`_ranked_with_n`) with
-    bit-identical results."""
+    (:func:`_order_stat_aggs`), one ranked window per type."""
     ranked = _ranked_with_n(
         tm.select("event_type", "value", "task_id"),
         "event_type",
         ["value", "task_id"],
-        distributed,
     )
     return ranked.groupBy("event_type").agg(*_order_stat_aggs("value"))
 
@@ -1012,16 +1017,9 @@ def cms_key_buckets(tm: DataFrame) -> DataFrame:
 CMS_KEY_OPS = {"exact_n": "sum"}
 
 
-def cms_topk(
-    key_buckets: DataFrame, k: int = 20, distributed: bool = False
-) -> DataFrame:
-    """Estimate + rank stage over (possibly merged) key-bucket partials.
-
-    The ranked KEY table grows with the corpus (every distinct key, not
-    the fixed-size sketch), so ``distributed=True`` routes the shared
-    two-phase rank (:func:`_ranked_with_n`) instead of one global window
-    sort — bit-identical top-k pinned in tests.
-    """
+def cms_topk(key_buckets: DataFrame, k: int = 20) -> DataFrame:
+    """Estimate + rank stage over (possibly merged) key-bucket partials:
+    one global window ranks the estimated keys."""
     merged = merge_partials(key_buckets, CMS_KEY_OPS)
     sketch = merged.groupBy("row_id", "bucket").agg(F.sum("exact_n").alias("c"))
     est = (
@@ -1029,19 +1027,14 @@ def cms_topk(
         .groupBy("key", "exact_n")
         .agg(F.min("c").alias("est_n"))
     )
-    if distributed:
-        ranked = _global_desc_ranked(est, "est_n", "key")
-    else:
-        w = Window.orderBy(F.col("est_n").desc(), F.col("key"))
-        ranked = est.withColumn("rank", F.row_number().over(w).cast("long"))
+    w = Window.orderBy(F.col("est_n").desc(), F.col("key"))
+    ranked = est.withColumn("rank", F.row_number().over(w).cast("long"))
     return ranked.filter(F.col("rank") <= k).select(
         "rank", "key", "est_n", "exact_n"
     )
 
 
-def heavy_hitters_cms(
-    tm: DataFrame, k: int = 20, distributed: bool = False
-) -> DataFrame:
+def heavy_hitters_cms(tm: DataFrame, k: int = 20) -> DataFrame:
     """O30: top-k heavy hitters via a Count-Min sketch (Cormode &
     Muthukrishnan '05) — the fixed-memory scale path for "top talkers"
     dashboard tiles.
@@ -1054,7 +1047,7 @@ def heavy_hitters_cms(
     md5-derived hashing keeps the sketch deterministic and engine-portable
     (exact DuckDB oracle), unlike RNG-seeded implementations.
     """
-    return cms_topk(cms_key_buckets(tm), k, distributed=distributed)
+    return cms_topk(cms_key_buckets(tm), k)
 
 
 def error_rate_moving_avg(tm: DataFrame, window_hours: int = 7) -> DataFrame:
@@ -1374,12 +1367,15 @@ def task_percentiles_distributed(tm: DataFrame) -> DataFrame:
     back), so the heaviest task holds one range slice regardless of group
     size. Selection is the same engine-portable order statistic (value at
     row floor((n-1)·p)); result-identical to O8, shares its oracle.
-
-    Since r8 this IS ``task_percentiles(distributed=True)`` — the
-    two-phase rank lives in :func:`_ranked_with_n`, shared by the whole
-    order-statistic family (O8/O42/O54/O58/O60/T45).
+    The two-phase rank is :func:`_ranked_with_n`'s, shared with P21/D30.
     """
-    return task_percentiles(tm, distributed=True)
+    ranked = _ranked_with_n(
+        tm.select("event_type", "value", "task_id"),
+        "event_type",
+        ["value", "task_id"],
+        distributed=True,
+    )
+    return ranked.groupBy("event_type").agg(*_order_stat_aggs("value"))
 
 
 def executor_concurrency(tm: DataFrame) -> DataFrame:
@@ -1676,7 +1672,7 @@ def job_critical_stage(tm: DataFrame) -> DataFrame:
     )
 
 
-def percentile_timeline(tm: DataFrame, distributed: bool = False) -> DataFrame:
+def percentile_timeline(tm: DataFrame) -> DataFrame:
     """O54: hourly latency-band timeline — p25/50/75/99 of task run time
     per hour bucket, the "latency bands over time" dashboard panel (O8
     gives the global distribution per metric class; O52 the full heatmap;
@@ -1684,18 +1680,11 @@ def percentile_timeline(tm: DataFrame, distributed: bool = False) -> DataFrame:
 
     Same engine-portable order-statistic selection as O8/O42/O44
     (:func:`_order_stat_aggs` — single source of the rank convention).
-    Default: one window sort per hour partition; hours parallelize. At
-    full 100 TB firehose volume an hour of tasks lands in ONE partition,
-    so ``distributed=True`` routes the rank through the O44 two-phase
-    prefix sum (:func:`_ranked_with_n` — same result bit-for-bit, no
-    single-partition sort; pinned in ``tests/test_plans.py``), or use the
-    O22 KLL sketch per hour when approximation is acceptable.
+    One window sort per hour partition; hours parallelize. The O22 KLL
+    sketch per hour is the scale path when approximation is acceptable.
     """
-    hour = F.expr("metric_time_ms DIV 3600000 * 3600000")
-    base = tm.select(hour.alias("hour_ms"), "run_time_ms", "task_id")
-    ranked = _ranked_with_n(
-        base, "hour_ms", ["run_time_ms", "task_id"], distributed
-    )
+    base = tm.select(div_bucket(3600000, "hour_ms"), "run_time_ms", "task_id")
+    ranked = _ranked_with_n(base, "hour_ms", ["run_time_ms", "task_id"])
     return ranked.groupBy("hour_ms").agg(*_order_stat_aggs("run_time_ms"))
 
 
@@ -1804,9 +1793,7 @@ def seasonal_baseline(tm: DataFrame) -> DataFrame:
     )
 
 
-def top_movers(
-    tm: DataFrame, top_n: int = 10, distributed: bool = False
-) -> DataFrame:
+def top_movers(tm: DataFrame, top_n: int = 10) -> DataFrame:
     """O57: biggest half-over-half movers — which executors' run-time
     totals changed most between the two halves of the timeline (the
     "what regressed since last week" leaderboard every ops dashboard
@@ -1817,10 +1804,7 @@ def top_movers(
     totals as conditional sums (no self-join, no second scan), and the
     leaderboard ranks by absolute BIGINT delta with a deterministic
     executor tie-break. ``pct_change`` is one final division, NULL for
-    executors new in the second half (try_divide). The ranked EXECUTOR
-    table grows with the fleet, so ``distributed=True`` routes the
-    shared two-phase rank (:func:`_ranked_with_n`) instead of one global
-    window sort — bit-identical top-n pinned in tests.
+    executors new in the second half (try_divide).
     """
     span = tm.agg(
         F.min("metric_time_ms").alias("t0"), F.max("metric_time_ms").alias("t1")
@@ -1838,14 +1822,9 @@ def top_movers(
         F.count(F.lit(1)).alias("n_tasks"),
     )
     delta = F.col("second_half_ms") - F.col("first_half_ms")
-    with_delta = agg.withColumn("delta_ms", delta).withColumn(
-        "_abs_delta", F.abs(F.col("delta_ms"))
-    )
-    if distributed:
-        ranked = _global_desc_ranked(with_delta, "_abs_delta", "executor_id")
-    else:
-        w = Window.orderBy(F.abs(F.col("delta_ms")).desc(), "executor_id")
-        ranked = with_delta.withColumn("rank", F.row_number().over(w).cast("long"))
+    with_delta = agg.withColumn("delta_ms", delta)
+    w = Window.orderBy(F.abs(F.col("delta_ms")).desc(), "executor_id")
+    ranked = with_delta.withColumn("rank", F.row_number().over(w).cast("long"))
     return (
         ranked.filter(F.col("rank") <= top_n)
         .select(
@@ -1869,7 +1848,7 @@ MAD_K_NUM = 44478
 MAD_K_DEN = 10000
 
 
-def anomaly_mad(tm: DataFrame, distributed: bool = False) -> DataFrame:
+def anomaly_mad(tm: DataFrame) -> DataFrame:
     """O58: robust per-type outlier detection — median + MAD (median
     absolute deviation), the estimator family that SURVIVES the condition
     it exists to detect: O28's mean/stddev z-score is dragged toward the
@@ -1886,16 +1865,14 @@ def anomaly_mad(tm: DataFrame, distributed: bool = False) -> DataFrame:
 
     Scale shape: two ranked passes per event_type (the same sort posture
     as O8) and two broadcast joins of per-type 1-row aggregates back onto
-    the task stream; ``distributed=True`` routes BOTH ranks through the
-    O44 two-phase prefix sum (:func:`_ranked_with_n`) — bit-identical
-    medians, no single-partition group sort.
+    the task stream.
     """
     base = tm.select(
         "event_type",
         "task_id",
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v"),
     )
-    r1 = _ranked_with_n(base, "event_type", ["v", "task_id"], distributed)
+    r1 = _ranked_with_n(base, "event_type", ["v", "task_id"])
     med = r1.groupBy("event_type").agg(
         F.max(
             F.when(F.col("rn") - 1 == F.floor((F.col("n") - 1) * 0.5), F.col("v"))
@@ -1904,9 +1881,7 @@ def anomaly_mad(tm: DataFrame, distributed: bool = False) -> DataFrame:
     dev = base.join(F.broadcast(med), "event_type").withColumn(
         "abs_dev", F.abs(F.col("v") - F.col("med_cents"))
     )
-    r2 = _ranked_with_n(
-        dev, "event_type", ["abs_dev", "task_id"], distributed
-    )
+    r2 = _ranked_with_n(dev, "event_type", ["abs_dev", "task_id"])
     mad = r2.groupBy("event_type").agg(
         F.max(
             F.when(
@@ -1938,7 +1913,7 @@ def anomaly_mad(tm: DataFrame, distributed: bool = False) -> DataFrame:
     )
 
 
-def cusum_drift(tm: DataFrame, distributed: bool = False) -> DataFrame:
+def cusum_drift(tm: DataFrame) -> DataFrame:
     """O59: CUSUM drift localization per metric type — "did this metric's
     LEVEL shift, and when": the peak of the cumulative deviation from the
     series mean marks the changepoint (Page's CUSUM statistic / the first
@@ -1967,9 +1942,8 @@ def cusum_drift(tm: DataFrame, distributed: bool = False) -> DataFrame:
     the engines diverge exactly where the claim breaks. Past the bound,
     switch to the two-phase formulation: bucket the series, hold per-
     bucket partial sums Σx and counts, and form S at bucket granularity
-    (the O44 prefix-sum shape) so no single term exceeds bucket_n²·spread.
-    ``distributed=True`` (r8) already moves the RANKED window to bucket
-    slices; the same bucketing bounds the term growth.
+    (the O44 prefix-sum shape, :func:`~.pipeline._prefix_sum`) so no
+    single term exceeds bucket_n²·spread.
     """
     base = tm.select(
         "event_type",
@@ -1983,22 +1957,12 @@ def cusum_drift(tm: DataFrame, distributed: bool = False) -> DataFrame:
     deved = base.join(F.broadcast(tot), "event_type").withColumn(
         "dev", F.col("n_events") * F.col("x") - F.col("sum_x")
     )
-    if distributed:
-        # Two-phase prefix sum of dev over the (time, task) order — the
-        # running S without a whole-type window partition; bit-identical
-        # (integer addition is associative), pinned in tests/test_plans.py.
-        from .pipeline import _prefix_sum
-
-        cum = _prefix_sum(
-            deved, "event_type", ["metric_time_ms", "task_id"], "dev", "s"
-        )
-    else:
-        w = (
-            Window.partitionBy("event_type")
-            .orderBy("metric_time_ms", "task_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = deved.withColumn("s", F.sum("dev").over(w))
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("metric_time_ms", "task_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = deved.withColumn("s", F.sum("dev").over(w))
     extremes = cum.groupBy("event_type").agg(
         F.max("n_events").alias("n_events"),
         F.max("s").alias("cum_peak"),
@@ -2042,19 +2006,16 @@ def cusum_drift(tm: DataFrame, distributed: bool = False) -> DataFrame:
     )
 
 
-def tail_thresholds(tm: DataFrame, distributed: bool = False) -> DataFrame:
+def tail_thresholds(tm: DataFrame) -> DataFrame:
     """Per-type p99 tail thresholds (the shared O8 lower-order-statistic)
     — the TRAINED half of the O60 sampling policy. In production these
     come from the history table and are broadcast against the live
     stream; here one definition serves the batch report and the
-    streaming runner so the policy cannot drift between them.
-    ``distributed=True`` = the O44 two-phase rank (:func:`_ranked_with_n`),
-    bit-identical, for history tables whose types outgrow a partition."""
+    streaming runner so the policy cannot drift between them."""
     ranked = _ranked_with_n(
         tm.select("event_type", "value", "task_id"),
         "event_type",
         ["value", "task_id"],
-        distributed,
     )
     return ranked.groupBy("event_type").agg(
         F.max(
@@ -2084,7 +2045,7 @@ def tail_classified(tm: DataFrame, thresholds: DataFrame) -> DataFrame:
     )
 
 
-def tail_sampling(tm: DataFrame, distributed: bool = False) -> DataFrame:
+def tail_sampling(tm: DataFrame) -> DataFrame:
     """O60: TAIL-BASED sampling policy report — the trace-volume answer at
     100 TB/day: keep EVERY error, every tail-latency record (value ≥ the
     type's p99), and a deterministic 1% uniform baseline; drop the rest.
@@ -2104,9 +2065,7 @@ def tail_sampling(tm: DataFrame, distributed: bool = False) -> DataFrame:
     threshold/classify stages, the (type, reason) partial and the rollup
     tail are shared with the streaming-on-ingest twin.
     """
-    return tail_sampling_tail(
-        tail_sample_partials(tm, tail_thresholds(tm, distributed))
-    )
+    return tail_sampling_tail(tail_sample_partials(tm, tail_thresholds(tm)))
 
 
 TAIL_SAMPLE_OPS = {"n": "sum", "p99_value": "max"}
@@ -2856,17 +2815,17 @@ def alert_flap_tail(minute: DataFrame, flap_k: int = 4) -> DataFrame:
     )
 
 
-def red_panel(tm: DataFrame, err_pct: int = 5, distributed: bool = False) -> DataFrame:
+def red_panel(tm: DataFrame, err_pct: int = 5) -> DataFrame:
     """O79: RED-method panel per (app, hour) — the Rate/Errors/Duration
     triple every service dashboard leads with (Weaveworks RED; the
     Grafana default): request rate, error share with a budget-breach
     verdict, and duration percentiles — composed entirely from this
     repo's shared conventions so nothing here can drift from the
     operators that own them: percentiles are the O8/O44 explicit lower
-    order statistics via ``_ranked_with_n`` (``distributed=True`` routes
-    the two-phase rank — a hot app-hour cannot straggle) +
-    ``_order_stat_aggs``; the breach verdict is the O68-style
-    cross-multiplied integer inequality ``n_errors·100 > pct·n_logs``;
+    order statistics via ``_ranked_with_n`` + ``_order_stat_aggs``; the
+    hour is :func:`div_bucket`, shared with the O80 twin; the breach
+    verdict is the O68-style cross-multiplied integer inequality
+    ``n_errors·100 > pct·n_logs``;
     the only divisions are try_divide display ratios. The rank group is
     the COMPOSITE (app_id, hour_ms) key directly — never a string
     concatenation, which could alias two (app, hour) groups when an
@@ -2874,7 +2833,7 @@ def red_panel(tm: DataFrame, err_pct: int = 5, distributed: bool = False) -> Dat
     """
     base = tm.select(
         "app_id",
-        F.expr("metric_time_ms DIV 3600000 * 3600000").alias("hour_ms"),
+        div_bucket(3600000, "hour_ms"),
         "event_type",
         "run_time_ms",
         "task_id",
@@ -2883,7 +2842,6 @@ def red_panel(tm: DataFrame, err_pct: int = 5, distributed: bool = False) -> Dat
         base.select("app_id", "hour_ms", "run_time_ms", "task_id"),
         ["app_id", "hour_ms"],
         ["run_time_ms", "task_id"],
-        distributed,
     )
     dur = ranked.groupBy("app_id", "hour_ms").agg(*_order_stat_aggs("run_time_ms"))
     re = error_count_partials(base, "app_id", F.col("hour_ms"))

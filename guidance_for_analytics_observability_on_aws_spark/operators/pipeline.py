@@ -562,9 +562,10 @@ def _prefix_sum(
     n_slices: int | None = None,
 ) -> DataFrame:
     """TWO-PHASE distributed prefix sum of ``value_col`` over the total
-    order (``part_col``, ``*order_cols``) — the 100 TB replacement for a
-    single ``Window.partitionBy(part_col)`` cumulative sum, which puts an
-    entire partition key in one task.
+    order (``part_col``, ``*order_cols``) — the shared primitive an
+    operator calls in place of a single ``Window.partitionBy(part_col)``
+    cumulative sum, which puts an entire partition key in one task
+    (P7/P9/M7/M9; O44/P21/D30 through ``_ranked_with_n``).
 
     Phase 1: range-partition on the sort key (preserves the total order
     across slice boundaries; ``order_cols`` must make rows unique) and
@@ -845,20 +846,16 @@ def filter_ablation(documents: DataFrame) -> DataFrame:
 VOCAB_POINTS = [5, 10, 20, 30]
 
 
-def vocab_coverage(documents: DataFrame, distributed: bool = False) -> DataFrame:
+def vocab_coverage(documents: DataFrame) -> DataFrame:
     """P14: tokenizer vocabulary coverage curve — what share of all token
     OCCURRENCES the top-k most frequent types cover, for the standard
     vocab sizes ("how large a vocabulary do we need").
 
     One token aggregation (the only corpus-sized shuffle), then the
     curve is computed on the type-frequency table: rank types by count,
-    running occurrence total, report at each k in :data:`VOCAB_POINTS`.
-    Counts stay BIGINT, coverage is one division per point. The TYPE
-    table grows with the corpus (Heaps' law — X16 measures exactly
-    that), so ``distributed=True`` routes the shared two-phase prefix
-    sum (multi-value: rank and running occurrences in ONE
-    range-partitioned pass) instead of one global window sort —
-    bit-identical output pinned in tests.
+    running occurrence total (one global window), report at each k in
+    :data:`VOCAB_POINTS`. Counts stay BIGINT, coverage is one division
+    per point.
     """
     from ..functions.text import corpus, tokens
 
@@ -868,24 +865,11 @@ def vocab_coverage(documents: DataFrame, distributed: bool = False) -> DataFrame
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
-    if distributed:
-        ranked = _prefix_sum(
-            freq.withColumn("_g", F.lit(1))
-            .withColumn("_neg_occ", -F.col("n_occ"))
-            .withColumn("_one", F.lit(1)),
-            "_g",
-            ["_neg_occ", "token"],
-            ["_one", "n_occ"],
-            ["rnk", "cum_occ"],
-        ).withColumn("rnk", F.col("rnk").cast("long"))
-    else:
-        w = Window.orderBy(F.col("n_occ").desc(), "token")
-        ranked = freq.withColumn(
-            "rnk", F.row_number().over(w).cast("long")
-        ).withColumn(
-            "cum_occ",
-            F.sum("n_occ").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
+    w = Window.orderBy(F.col("n_occ").desc(), "token")
+    ranked = freq.withColumn("rnk", F.row_number().over(w).cast("long")).withColumn(
+        "cum_occ",
+        F.sum("n_occ").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
     totals = freq.agg(
         F.sum("n_occ").alias("total_occ"),
         F.count(F.lit(1)).alias("n_types"),
@@ -2039,23 +2023,20 @@ def mixture_temperature_plan(
     )
 
 
-def export_order_plan(
-    documents: DataFrame, shard_docs: int = 256, distributed: bool = True
-) -> DataFrame:
+def export_order_plan(documents: DataFrame, shard_docs: int = 256) -> DataFrame:
     """P21: deterministic GLOBAL training order + shard/offset plan — the
     export step after curation: training wants the corpus in a shuffled
     order that is (a) uniform, (b) reproducible run-to-run, and (c)
     resumable mid-epoch by (shard, offset). The order key is the md5
-    permutation of ``doc_id`` (content-independent — the P1/P2
-    determinism contract: re-crawls and re-runs place every doc at the
-    same position), the global rank comes from the SHARED two-phase
-    ``_ranked_with_n`` (``distributed=True`` default — the whole corpus
-    is one order group, the D30 argument; no single-task sort), and
-    ``shard = (rank−1) DIV shard_docs`` / ``offset = (rank−1) %
+    permutation of ``doc_id`` (content-independent — the P1/P2 determinism
+    contract: re-crawls and re-runs place every doc at the same position),
+    the global rank comes from the SHARED two-phase ``_ranked_with_n``
+    (the whole corpus is one order group, the D30 argument; no single-task
+    sort), and ``shard = (rank−1) DIV shard_docs`` / ``offset = (rank−1) %
     shard_docs`` are pure integer arithmetic. A trainer resumes from any
-    (shard, offset) without re-deriving anything; writers consume the
-    plan sorted by (shard_id, offset). Full hash-exact oracle (md5 hex
-    sorts identically in ASCII in both engines).
+    (shard, offset) without re-deriving anything; writers consume the plan
+    sorted by (shard_id, offset). Full hash-exact oracle (md5 hex sorts
+    identically in ASCII in both engines).
     """
     from .observability import _ranked_with_n
 
@@ -2069,7 +2050,7 @@ def export_order_plan(
         keyed.withColumn("_g", F.lit(0)),
         "_g",
         ["sample_key", "doc_id"],
-        distributed,
+        distributed=True,
     )
     return ranked.select(
         "doc_id",

@@ -815,7 +815,6 @@ def bigram_lift(
 
 def length_percentiles(
     documents: DataFrame,
-    distributed: bool = False,
     lo: int = 30,
     hi: int = 80,
 ) -> DataFrame:
@@ -835,8 +834,7 @@ def length_percentiles(
     on.
 
     Scale shape: one narrow (source, n_tokens) projection, one ranked
-    window per source (``distributed=True`` routes through the shared
-    two-phase prefix sum when one source dominates the corpus).
+    window per source.
     """
     from .observability import _ranked_with_n
 
@@ -845,7 +843,7 @@ def length_percentiles(
         "doc_id",
         F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
-    ranked = _ranked_with_n(base, "source", ["n_tokens", "doc_id"], distributed)
+    ranked = _ranked_with_n(base, "source", ["n_tokens", "doc_id"])
 
     def pick(p, name):
         return F.max(
@@ -880,9 +878,7 @@ def length_percentiles(
     )
 
 
-def vocab_growth(
-    documents: DataFrame, n_buckets: int = 10, distributed: bool = False
-) -> DataFrame:
+def vocab_growth(documents: DataFrame, n_buckets: int = 10) -> DataFrame:
     """X16: VOCABULARY-GROWTH (Heaps-law) panel per source — the curve a
     team reads before sizing a tokenizer vocab or deciding a source is
     saturated: docs are ordered by ``doc_id`` within each source and cut
@@ -894,9 +890,8 @@ def vocab_growth(
     flattening `cum_types` means more data from this source buys few new
     words.
 
-    Scale shape: doc ranks come from the SHARED ``_ranked_with_n``
-    (``distributed=True`` → O44's two-phase range-partition rank, bit
-    equal, no single-task sort); the explode is one linear pass with the
+    Scale shape: doc ranks come from the SHARED ``_ranked_with_n`` window
+    per source; the explode is one linear pass with the
     (source, token) min-bucket reduction map-side combined; the
     cumulative windows run over ≤ ``n_buckets`` rows per source —
     bounded, never data-sized. All-BIGINT until the final try_divide
@@ -906,7 +901,7 @@ def vocab_growth(
 
     base = documents.select("doc_id", "source", tokens(F.col("text")).alias("toks"))
     ranked = _ranked_with_n(
-        base.select("source", "doc_id"), "source", ["doc_id"], distributed
+        base.select("source", "doc_id"), "source", ["doc_id"]
     ).withColumn(
         "bucket", F.expr(f"(rn - 1) * {int(n_buckets)} DIV n").cast("long")
     )

@@ -1217,7 +1217,7 @@ def q11_important_parts(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     )
 
 
-def customers_abc_pareto(orders: DataFrame, distributed: bool = False) -> DataFrame:
+def customers_abc_pareto(orders: DataFrame) -> DataFrame:
     """T39: ABC / Pareto classification of customers by revenue — the
     warehouse "80/15/5" cut: rank customers by total order value, take
     running revenue share, class A while cumulative ≤ 80% of total, B to
@@ -1225,45 +1225,24 @@ def customers_abc_pareto(orders: DataFrame, distributed: bool = False) -> DataFr
 
     Shape lesson: the classification needs a GLOBAL total (broadcast
     1-row frame, like T38) and a cumulative sum over the revenue-ranked
-    customer list. ``distributed=False`` orders one window over ALL
-    customers — fine while the per-customer aggregate fits one task, but
-    customers GROW with the corpus, so ``distributed=True`` routes the
-    shared two-phase prefix sum (``_prefix_sum``, multi-value: rank and
-    running revenue in ONE range-partitioned pass — no task ever holds
-    the whole customer list), bit-identical output pinned in tests. The
-    class cut is integer-exact via cross-multiplication (`5·cum ≤
-    4·total`, `20·cum ≤ 19·total`), no float boundary anywhere.
+    customer list, one window over ALL customers. The class cut is
+    integer-exact via cross-multiplication (`5·cum ≤ 4·total`, `20·cum ≤
+    19·total`), no float boundary anywhere.
     """
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
         F.count(F.lit(1)).alias("n_orders"),
     )
     total = per_cust.agg(F.sum("revenue_cents").alias("total_cents"))
-    if distributed:
-        from .pipeline import _prefix_sum
-
-        ranked = _prefix_sum(
-            per_cust.join(F.broadcast(total))
-            .withColumn("_g", F.lit(1))
-            .withColumn("_neg_rev", -F.col("revenue_cents"))
-            .withColumn("_one", F.lit(1)),
-            "_g",
-            ["_neg_rev", "o_custkey"],
-            ["_one", "revenue_cents"],
-            ["revenue_rank", "cum_cents"],
-        ).withColumn("revenue_rank", F.col("revenue_rank").cast("long"))
-    else:
-        w = Window.orderBy(F.col("revenue_cents").desc(), "o_custkey")
-        ranked = (
-            per_cust.join(F.broadcast(total))
-            .withColumn("revenue_rank", F.row_number().over(w).cast("long"))
-            .withColumn(
-                "cum_cents",
-                F.sum("revenue_cents").over(
-                    w.rowsBetween(Window.unboundedPreceding, 0)
-                ),
-            )
+    w = Window.orderBy(F.col("revenue_cents").desc(), "o_custkey")
+    ranked = (
+        per_cust.join(F.broadcast(total))
+        .withColumn("revenue_rank", F.row_number().over(w).cast("long"))
+        .withColumn(
+            "cum_cents",
+            F.sum("revenue_cents").over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
+    )
     return ranked.select(
         "o_custkey",
         "n_orders",
@@ -1280,7 +1259,7 @@ def customers_abc_pareto(orders: DataFrame, distributed: bool = False) -> DataFr
     )
 
 
-def customers_rfm_segments(orders: DataFrame, distributed: bool = False) -> DataFrame:
+def customers_rfm_segments(orders: DataFrame) -> DataFrame:
     """T40: RFM customer segmentation — the classic recency / frequency /
     monetary scoring: per-customer last-order date, order count and
     revenue, each scored into quintiles (NTILE with full deterministic
@@ -1290,50 +1269,24 @@ def customers_rfm_segments(orders: DataFrame, distributed: bool = False) -> Data
     Shape lesson: three NTILE windows over the PER-CUSTOMER aggregate
     (orders ≫ customers), revenue in exact integer cents, recency
     ordered so quintile 5 = most recent; segment rules are
-    data-independent CASE logic on the scores. Customers GROW with the
-    corpus, so ``distributed=True`` replaces each global NTILE sort with
-    the shared two-phase rank (``_ranked_with_n``) + the integer
-    ``_ntile_from_rank`` reconstruction of Spark's tile split —
-    bit-identical output pinned in tests, no task ever holds the whole
-    customer list.
+    data-independent CASE logic on the scores.
     """
     per_cust = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
     )
-    if distributed:
-        from .observability import _ntile_from_rank, _ranked_with_n
-
-        base = per_cust.withColumn("_g", F.lit(1))
-        scored = per_cust.select("o_custkey", "n_orders", "revenue_cents")
-        for key_col, out in (
-            ("last_order", "r_score"),
-            ("n_orders", "f_score"),
-            ("revenue_cents", "m_score"),
-        ):
-            ranked = _ranked_with_n(
-                base.select("_g", "o_custkey", key_col),
-                "_g",
-                [key_col, "o_custkey"],
-                distributed=True,
-            )
-            scored = scored.join(
-                ranked.select("o_custkey", _ntile_from_rank(5).alias(out)),
-                "o_custkey",
-            )
-    else:
-        r_w = Window.orderBy("last_order", "o_custkey")
-        f_w = Window.orderBy("n_orders", "o_custkey")
-        m_w = Window.orderBy("revenue_cents", "o_custkey")
-        scored = per_cust.select(
-            "o_custkey",
-            "n_orders",
-            "revenue_cents",
-            F.ntile(5).over(r_w).cast("long").alias("r_score"),
-            F.ntile(5).over(f_w).cast("long").alias("f_score"),
-            F.ntile(5).over(m_w).cast("long").alias("m_score"),
-        )
+    r_w = Window.orderBy("last_order", "o_custkey")
+    f_w = Window.orderBy("n_orders", "o_custkey")
+    m_w = Window.orderBy("revenue_cents", "o_custkey")
+    scored = per_cust.select(
+        "o_custkey",
+        "n_orders",
+        "revenue_cents",
+        F.ntile(5).over(r_w).cast("long").alias("r_score"),
+        F.ntile(5).over(f_w).cast("long").alias("f_score"),
+        F.ntile(5).over(m_w).cast("long").alias("m_score"),
+    )
     return scored.select(
         "*",
         (F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score")).alias(
@@ -1532,9 +1485,7 @@ def orders_market_basket(
     )
 
 
-def orders_ship_latency(
-    lineitem: DataFrame, orders: DataFrame, distributed: bool = False
-) -> DataFrame:
+def orders_ship_latency(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """T45: order→ship latency distribution per order priority — the
     fulfillment-SLA panel (does '1-URGENT' actually ship faster, and how
     heavy is the tail): p25/p50/p75/p99 of days-to-ship plus the share
@@ -1552,11 +1503,7 @@ def orders_ship_latency(
     Scale shape: one fact⋈fact equi-join on orderkey (co-partitioned
     shuffle; the bucketed-table layout in sources/bucketed.py makes it
     zero-Exchange when pre-bucketed), one ranked pass per priority
-    (5 groups), one rollup. ``distributed=True`` routes the rank through
-    the shared O44 two-phase prefix sum (`_ranked_with_n`) — bit-identical
-    percentiles with no single-partition priority sort (a hot priority at
-    100× otherwise becomes one straggler task); pinned in
-    ``tests/test_plans.py``.
+    (5 groups, the shared `_ranked_with_n` window), one rollup.
     """
     from .observability import _ranked_with_n
     j = lineitem.select("l_orderkey", "l_linenumber", "l_shipdate").join(
@@ -1575,7 +1522,6 @@ def orders_ship_latency(
         base,
         "o_orderpriority",
         ["lat_days", "l_orderkey", "l_linenumber"],
-        distributed,
     )
 
     def pick(p, name):

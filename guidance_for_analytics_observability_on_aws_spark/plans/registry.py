@@ -1497,7 +1497,7 @@ _register(
 
 
 # P21 (r8): deterministic export order + shard/offset plan — md5(doc_id)
-# permutation rank via the shared two-phase rank (distributed default),
+# permutation rank via the shared two-phase rank (fixed in the operator),
 # integer shard arithmetic; the resumable training-order export step.
 # Beyond the finalized r8 window; r9 never-checked list.
 _register(

@@ -1074,7 +1074,7 @@ def run_streaming_red_panel(
         .alias(f"p{p}_err_bound_ms")
         for p in (50, 95, 99)
     ]
-    hour = obs.pmod_bucket(3600000, "hour_ms")
+    hour = obs.div_bucket(3600000, "hour_ms")
     # integer DIV bin index — the repo-wide convention (double division
     # only matches // while values stay below 2^53)
     bin_idx = F.least(

@@ -61,3 +61,45 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def two_phase_equal(monkeypatch):
+    """``check(win, dist)`` asserts that a window and an O44 two-phase
+    rank formulation give the same rows and that only the two-phase plan
+    carries the ``_pid`` slice column. ``check.swap(build, two_phase)``
+    builds an operator with its own formulation (``two_phase`` says
+    which one that is) and again with ``_ranked_with_n`` forced to the
+    other, then checks the pair. Both return the rows."""
+    from guidance_for_analytics_observability_on_aws_spark.operators import (
+        observability,
+    )
+
+    original = observability._ranked_with_n
+
+    def check(win, dist):
+        rows_w = sorted((tuple(r) for r in win.collect()), key=str)
+        rows_d = sorted((tuple(r) for r in dist.collect()), key=str)
+        assert rows_w == rows_d, "two-phase formulation diverged from the window"
+        assert rows_w, "empty result"
+        plan_w, plan_d = (
+            df._jdf.queryExecution().executedPlan().toString() for df in (win, dist)
+        )
+        assert "_pid" in plan_d, "two-phase plan lacks slice ranks"
+        assert "_pid" not in plan_w, "window plan unexpectedly sliced"
+        return rows_w
+
+    def swap(build, two_phase=False):
+        own = build()
+        monkeypatch.setattr(
+            observability,
+            "_ranked_with_n",
+            lambda df, part_col, order_cols, **_: original(
+                df, part_col, order_cols, not two_phase
+            ),
+        )
+        other = build()
+        return check(other, own) if two_phase else check(own, other)
+
+    check.swap = swap
+    return check

@@ -2434,9 +2434,9 @@ def test_forecast_linear_crossing_regimes(spark):
     assert falling.will_cross_ahead == 0 and falling.cross_t_s is None
 
 
-def test_length_percentiles_distributed_bit_equal(spark, sf_dir):
-    """X15: the distributed two-phase rank path must reproduce the window
-    path bit-for-bit (the family convention every _ranked_with_n consumer
+def test_length_percentiles_distributed_bit_equal(spark, sf_dir, two_phase_equal):
+    """X15: the two-phase rank must reproduce the operator's window rank
+    bit-for-bit (the family convention every _ranked_with_n consumer
     pins)."""
     from guidance_for_analytics_observability_on_aws_spark.operators.textops import (
         length_percentiles,
@@ -2446,12 +2446,7 @@ def test_length_percentiles_distributed_bit_equal(spark, sf_dir):
     )
 
     docs = load_tables(spark, sf_dir)["documents"]
-    a = sorted((tuple(r) for r in length_percentiles(docs).collect()), key=str)
-    b = sorted(
-        (tuple(r) for r in length_percentiles(docs, distributed=True).collect()),
-        key=str,
-    )
-    assert a == b and a
+    two_phase_equal.swap(lambda: length_percentiles(docs))
 
 
 def test_histogram_rollup_merge_identity(spark, sf_dir):
@@ -2532,9 +2527,9 @@ def test_histogram_rollup_percentile_semantics(spark):
     assert (h.p50_lo, h.p95_lo, h.p99_lo) == (d.p50_lo, d.p95_lo, d.p99_lo)
 
 
-def test_sorted_neighborhood_distributed_bit_equal(spark, sf_dir):
-    """D30: the two-phase distributed global rank must reproduce the
-    single-window rank path bit-for-bit (the _ranked_with_n family
+def test_sorted_neighborhood_distributed_bit_equal(spark, sf_dir, two_phase_equal):
+    """D30: the operator's two-phase global rank must reproduce a
+    single-window rank bit-for-bit (the _ranked_with_n family
     convention) — same candidates, same scores."""
     from guidance_for_analytics_observability_on_aws_spark.operators.dedup import (
         dedup_sorted_neighborhood,
@@ -2544,21 +2539,7 @@ def test_sorted_neighborhood_distributed_bit_equal(spark, sf_dir):
     )
 
     docs = load_tables(spark, sf_dir)["documents"]
-    a = sorted(
-        (
-            tuple(r)
-            for r in dedup_sorted_neighborhood(docs, distributed=False).collect()
-        ),
-        key=str,
-    )
-    b = sorted(
-        (
-            tuple(r)
-            for r in dedup_sorted_neighborhood(docs, distributed=True).collect()
-        ),
-        key=str,
-    )
-    assert a == b and a
+    two_phase_equal.swap(lambda: dedup_sorted_neighborhood(docs), two_phase=True)
 
 
 def test_sorted_neighborhood_finds_planted_exact_dups(spark, sf_dir):
@@ -2587,9 +2568,11 @@ def test_sorted_neighborhood_finds_planted_exact_dups(spark, sf_dir):
         )
 
 
-def test_vocab_growth_distributed_bit_equal_and_totals(spark, sf_dir):
-    """X16: the distributed two-phase rank path must be bit-identical to
-    the window path, and per source the panel's totals must reconcile
+def test_vocab_growth_distributed_bit_equal_and_totals(
+    spark, sf_dir, two_phase_equal
+):
+    """X16: the two-phase rank must be bit-identical to the operator's
+    window rank, and per source the panel's totals must reconcile
     exactly: Σnew_types == distinct types, Σn_tokens == occurrences,
     Σn_docs == docs."""
     from pyspark.sql import functions as F
@@ -2605,15 +2588,11 @@ def test_vocab_growth_distributed_bit_equal_and_totals(spark, sf_dir):
     )
 
     docs = load_tables(spark, sf_dir)["documents"]
-    a = sorted((tuple(r) for r in vocab_growth(docs).collect()), key=str)
-    b = sorted(
-        (tuple(r) for r in vocab_growth(docs, distributed=True).collect()), key=str
-    )
-    assert a == b and a
+    panel = vocab_growth(docs)
+    two_phase_equal.swap(lambda: vocab_growth(docs))
     got = {
         r.source: r
-        for r in vocab_growth(docs)
-        .groupBy("source")
+        for r in panel.groupBy("source")
         .agg(
             F.sum("new_types").alias("types"),
             F.sum("n_tokens").alias("toks"),
@@ -2937,10 +2916,10 @@ def test_attribution_multitouch_sign_safe_and_only_label(spark):
     assert got[5].position == "only" and got[5].credit_cents == 250
 
 
-def test_export_order_plan_contracts(spark, sf_dir):
+def test_export_order_plan_contracts(spark, sf_dir, two_phase_equal):
     """P21: ranks are a permutation (1..N, no gaps), shard/offset are
-    consistent integer arithmetic on the rank, the distributed rank path
-    is bit-identical to the window path, and the order is reproducible
+    consistent integer arithmetic on the rank, the operator's two-phase
+    rank is bit-identical to a window rank, and the order is reproducible
     (two runs produce identical plans)."""
     from pyspark.sql import functions as F
 
@@ -2967,12 +2946,8 @@ def test_export_order_plan_contracts(spark, sf_dir):
     ).collect()[0]
     assert (agg.rows, agg.lo, agg.hi, agg.d, agg.bad) == (n, 1, n, n, 0)
     a = sorted((tuple(r) for r in plan.collect()), key=str)
-    b = sorted(
-        (tuple(r) for r in export_order_plan(docs, distributed=False).collect()),
-        key=str,
-    )
-    c = sorted((tuple(r) for r in export_order_plan(docs).collect()), key=str)
-    assert a == b == c
+    b = two_phase_equal.swap(lambda: export_order_plan(docs), two_phase=True)
+    assert a == b
 
 
 def test_decontaminate_neardup_finds_every_planted_copy(spark, sf_dir):
@@ -3112,9 +3087,9 @@ def test_dup_fraction_hand_case(spark):
         assert abs(v - 1.0) < 1e-12, (s, v)
 
 
-def test_red_panel_contracts(spark, sf_dir):
-    """O79: the distributed rank path is bit-identical to the window path,
-    error shares honor the cross-multiplied breach rule, and duration
+def test_red_panel_contracts(spark, sf_dir, two_phase_equal):
+    """O79: the two-phase rank is bit-identical to the operator's window
+    rank, error shares honor the cross-multiplied breach rule, and duration
     percentiles are monotone p50<=p75<=p99."""
     from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
         red_panel,
@@ -3133,9 +3108,7 @@ def test_red_panel_contracts(spark, sf_dir):
         assert r.p50_ms <= r.p75_ms <= r.p99_ms
         assert r.err_breach == int(r.n_errors * 100 > 5 * r.n_logs)
         assert 0 <= r.n_errors <= r.n_logs
-    a = sorted((tuple(r) for r in red_panel(tm, distributed=False).collect()), key=str)
-    b = sorted((tuple(r) for r in red_panel(tm, distributed=True).collect()), key=str)
-    assert a == b
+    two_phase_equal.swap(lambda: red_panel(tm))
 
 
 def test_ntile_from_rank_matches_spark_ntile(spark):

@@ -515,17 +515,21 @@ ORDER_STAT_FAMILY = [
 
 
 @pytest.mark.parametrize("name", ORDER_STAT_FAMILY)
-def test_order_stat_family_distributed_bit_equal(spark, sf_dir, name):
-    """r8: every order-statistic operator's ``distributed=True`` path
-    (the shared `_ranked_with_n` two-phase rank / `_prefix_sum` running
-    sum) must be BIT-identical to the window formulation, and its plan
-    must actually avoid the single-partition group sort: the two-phase
-    plan carries the `_pid` slice column; the window plan must not."""
+def test_order_stat_family_distributed_bit_equal(
+    spark, sf_dir, name, two_phase_equal
+):
+    """Every order-statistic operator ranks with one window per group; the
+    O44 two-phase rank over the same group key and total order must be
+    BIT-identical, and only its plan carries the `_pid` slice column. The
+    `_ranked_with_n` members are rebuilt with the shared rank swapped;
+    cusum_drift's extremes are rebuilt from a `_prefix_sum` running sum."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     from guidance_for_analytics_observability_on_aws_spark.operators import (
         observability as obs,
-    )
-    from guidance_for_analytics_observability_on_aws_spark.operators.tpch import (
-        orders_ship_latency,
+        pipeline,
+        tpch,
     )
     from guidance_for_analytics_observability_on_aws_spark.sources.tables import (
         load_tables,
@@ -534,24 +538,39 @@ def test_order_stat_family_distributed_bit_equal(spark, sf_dir, name):
         task_metrics,
     )
 
-    tables = load_tables(spark, sf_dir)
+    t = load_tables(spark, sf_dir)
+    tm = task_metrics(t["events"])
     if name == "orders_ship_latency":
-        def build(d):
-            return orders_ship_latency(tables["lineitem"], tables["orders"], d)
+        li, orders = t["lineitem"], t["orders"]
+        two_phase_equal.swap(lambda: tpch.orders_ship_latency(li, orders))
+    elif name != "cusum_drift":
+        two_phase_equal.swap(lambda: getattr(obs, name)(tm))
     else:
-        tm = task_metrics(tables["events"])
+        per_type = Window.partitionBy("event_type")
+        n, x = F.count(F.lit(1)).over(per_type), F.col("x")
+        dev = n * x - F.sum(x).over(per_type)
+        deved = tm.select(
+            "event_type",
+            "task_id",
+            "metric_time_ms",
+            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("x"),
+        ).select("*", n.alias("n_events"), dev.alias("dev"))
+        cum = pipeline._prefix_sum(
+            deved, "event_type", ["metric_time_ms", "task_id"], "dev", "s"
+        ).select(
+            "*",
+            F.max("s").over(per_type).alias("cum_peak"),
+            F.min("s").over(per_type).alias("cum_trough"),
+        )
 
-        def build(d):
-            return getattr(obs, name)(tm, d)
+        def first_at(c):
+            return F.min(F.when(F.col("s") == F.col(c), F.col("metric_time_ms")))
 
-    win, dist = build(False), build(True)
-    rows_w = sorted((tuple(r) for r in win.collect()), key=str)
-    rows_d = sorted((tuple(r) for r in dist.collect()), key=str)
-    assert rows_w == rows_d, f"{name}: distributed path diverged"
-    assert rows_w, f"{name}: empty result"
-    plan_w, plan_d = _executed_plan(win), _executed_plan(dist)
-    assert "_pid" in plan_d, f"{name}: distributed plan lacks slice ranks"
-    assert "_pid" not in plan_w, f"{name}: window plan unexpectedly sliced"
+        dist = cum.groupBy("event_type", "n_events", "cum_peak", "cum_trough").agg(
+            first_at("cum_peak").alias("peak_time_ms"),
+            first_at("cum_trough").alias("trough_time_ms"),
+        )
+        two_phase_equal(obs.cusum_drift(tm).select(*dist.columns), dist)
 
 
 GLOBAL_RANK_FAMILY = [
@@ -564,23 +583,25 @@ GLOBAL_RANK_FAMILY = [
 
 
 @pytest.mark.parametrize("name", GLOBAL_RANK_FAMILY)
-def test_global_rank_family_distributed_bit_equal(spark, sf_dir, name):
-    """r9: the five operators that rank data-dependent cardinalities
+def test_global_rank_family_distributed_bit_equal(
+    spark, sf_dir, name, two_phase_equal
+):
+    """The five operators that rank data-dependent cardinalities
     (customers, vocabulary types, sketch keys, executors — all of which
-    GROW with the corpus) now take ``distributed=True`` through the
-    shared `_ranked_with_n`/`_prefix_sum` two-phase rank: bit-identical
-    to the global-window formulation, and the distributed plan carries
-    the `_pid` slice ranks while the window plan must not."""
-    from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
-        heavy_hitters_cms,
-        top_movers,
+    GROW with the corpus) rank with one global window; the shared
+    two-phase rank (`_prefix_sum`/`_global_desc_ranked`/`_ntile_from_rank`)
+    over the frame each one ranks must give bit-identical ranks, and only
+    its plan carries the `_pid` slice ranks."""
+    from pyspark.sql import functions as F
+
+    from guidance_for_analytics_observability_on_aws_spark.functions.text import (
+        corpus,
+        tokens,
     )
-    from guidance_for_analytics_observability_on_aws_spark.operators.pipeline import (
-        vocab_coverage,
-    )
-    from guidance_for_analytics_observability_on_aws_spark.operators.tpch import (
-        customers_abc_pareto,
-        customers_rfm_segments,
+    from guidance_for_analytics_observability_on_aws_spark.operators import (
+        observability as obs,
+        pipeline,
+        tpch,
     )
     from guidance_for_analytics_observability_on_aws_spark.sources.tables import (
         load_tables,
@@ -589,32 +610,70 @@ def test_global_rank_family_distributed_bit_equal(spark, sf_dir, name):
         task_metrics,
     )
 
-    tables = load_tables(spark, sf_dir)
+    t = load_tables(spark, sf_dir)
+    one = F.lit(1)
+
+    def rank_and_sum(df, value, tiebreak, outs):  # desc by value, one pass
+        neg = df.withColumns({"_g": one, "_neg": -F.col(value), "_one": one})
+        ranked = pipeline._prefix_sum(
+            neg, "_g", ["_neg", tiebreak], ["_one", value], outs
+        )
+        return ranked.withColumn(outs[0], F.col(outs[0]).cast("long"))
+
+    def abc():
+        out = tpch.customers_abc_pareto(t["orders"])
+        dist = rank_and_sum(
+            out, "revenue_cents", "o_custkey", ["revenue_rank", "cum_cents"]
+        ).select("o_custkey", "revenue_rank", "cum_cents")
+        return out.select(*dist.columns), dist
+
+    def rfm():
+        out = tpch.customers_rfm_segments(t["orders"])
+        last = t["orders"].groupBy("o_custkey").agg(F.max("o_orderdate").alias("d"))
+        per_cust = out.join(last, "o_custkey").withColumn("_g", one)
+        dist = per_cust.select("o_custkey")
+        for key_col, score in (
+            ("d", "r_score"), ("n_orders", "f_score"), ("revenue_cents", "m_score")
+        ):
+            ranked = obs._ranked_with_n(
+                per_cust, "_g", [key_col, "o_custkey"], distributed=True
+            ).select("o_custkey", obs._ntile_from_rank(5).alias(score))
+            dist = dist.join(ranked, "o_custkey")
+        return out.select(*dist.columns), dist
+
+    def vocab():
+        freq = (
+            corpus(t["documents"])
+            .select(F.explode(tokens(F.col("text"))).alias("token"))
+            .groupBy("token")
+            .agg(F.count(one).alias("n_occ"))
+        )
+        dist = rank_and_sum(freq, "n_occ", "token", ["vocab_size", "cum_occ"])
+        dist = dist.filter(F.col("vocab_size").isin(pipeline.VOCAB_POINTS))
+        win = pipeline.vocab_coverage(t["documents"]).select("vocab_size", "cum_occ")
+        return win, dist.select(*win.columns)
+
+    def top_k(op, k, value, tiebreak):
+        # the operator ranking every row (k unbounded) is the frame it
+        # ranks; the two-phase top-k over it must equal the operator's
+        tm = task_metrics(t["events"])
+        win = op(tm, k)
+        every = op(tm, 1 << 30).drop("rank").withColumn("_v", value)
+        dist = obs._global_desc_ranked(every, "_v", tiebreak)
+        return win, dist.filter(F.col("rank") <= k).select(*win.columns)
+
     builders = {
-        "customers_abc_pareto": lambda d: customers_abc_pareto(
-            tables["orders"], distributed=d
+        "customers_abc_pareto": abc,
+        "customers_rfm_segments": rfm,
+        "vocab_coverage": vocab,
+        "heavy_hitters_cms": lambda: top_k(
+            obs.heavy_hitters_cms, 20, F.col("est_n"), "key"
         ),
-        "customers_rfm_segments": lambda d: customers_rfm_segments(
-            tables["orders"], distributed=d
-        ),
-        "vocab_coverage": lambda d: vocab_coverage(
-            tables["documents"], distributed=d
-        ),
-        "heavy_hitters_cms": lambda d: heavy_hitters_cms(
-            task_metrics(tables["events"]), distributed=d
-        ),
-        "top_movers": lambda d: top_movers(
-            task_metrics(tables["events"]), distributed=d
+        "top_movers": lambda: top_k(
+            obs.top_movers, 10, F.abs(F.col("delta_ms")), "executor_id"
         ),
     }
-    win, dist = builders[name](False), builders[name](True)
-    rows_w = sorted((tuple(r) for r in win.collect()), key=str)
-    rows_d = sorted((tuple(r) for r in dist.collect()), key=str)
-    assert rows_w == rows_d, f"{name}: distributed path diverged"
-    assert rows_w, f"{name}: empty result"
-    plan_w, plan_d = _executed_plan(win), _executed_plan(dist)
-    assert "_pid" in plan_d, f"{name}: distributed plan lacks slice ranks"
-    assert "_pid" not in plan_w, f"{name}: window plan unexpectedly sliced"
+    two_phase_equal(*builders[name]())
 
 
 def test_r8_operator_plan_shapes(spark, sf_dir):

@@ -877,6 +877,13 @@ def test_streaming_alert_flap_matches_batch(spark, sf_dir):
     assert got == want and got
 
 
+def _red_rate_error_rows(panel):
+    """Sorted rate/error rows of a RED panel (batch O79 or its O80 twin)."""
+    cols = ["app_id", "hour_ms", "n_logs", "n_errors"]
+    cols += ["rate_per_min", "err_share", "err_breach"]
+    return sorted((tuple(r) for r in panel.select(*cols).collect()), key=str)
+
+
 def test_streaming_red_panel_matches_batch_halves(spark, sf_dir):
     """O80: the merged rate/error columns must be BIT-identical to batch
     O79's (counts are sums, verdict shared arithmetic), and the duration
@@ -898,29 +905,8 @@ def test_streaming_red_panel_matches_batch_halves(spark, sf_dir):
     got = run_streaming_red_panel(spark, sf_dir)
     tm = task_metrics(spark.read.parquet(f"{sf_dir}/events.parquet"))
     # rate/error half vs batch O79
-    a = sorted(
-        (
-            tuple(r)
-            for r in got.select(
-                "app_id", "hour_ms", "n_logs", "n_errors",
-                "rate_per_min", "err_share", "err_breach",
-            ).collect()
-        ),
-        key=str,
-    )
-    b = sorted(
-        (
-            tuple(r)
-            for r in red_panel(tm)
-            .select(
-                "app_id", "hour_ms", "n_logs", "n_errors",
-                "rate_per_min", "err_share", "err_breach",
-            )
-            .collect()
-        ),
-        key=str,
-    )
-    assert a == b and a
+    a = _red_rate_error_rows(got)
+    assert a == _red_rate_error_rows(red_panel(tm)) and a
     # duration half vs a direct batch histogram of the same bins
     direct = (
         tm.withColumn(
@@ -979,6 +965,39 @@ def test_streaming_red_panel_matches_batch_halves(spark, sf_dir):
                 assert eb == 99 and lo <= v <= lo + eb
                 checked += 1
     assert checked > 0
+
+
+def test_streaming_red_panel_pre_epoch_hours_match_batch(spark, sf_dir, tmp_path):
+    """O80 vs O79 before 1970: with every event moved before the epoch by
+    a non-whole number of hours, the twin's rate/error half must still
+    equal the batch panel's, whose ``DIV`` hour truncates toward zero
+    (a floored bucket would put each row one hour earlier)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
+        red_panel,
+    )
+    from guidance_for_analytics_observability_on_aws_spark.sources.telemetry import (
+        task_metrics,
+    )
+    from guidance_for_analytics_observability_on_aws_spark.streaming.collector import (
+        run_streaming_red_panel,
+    )
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    shift_us = (60 * 365 * 86400 + 1234) * 1_000_000 + 567_891  # ~60 years
+    ts = events["ts"]
+    moved = pc.subtract(pc.cast(ts, pa.int64()), shift_us).cast(ts.type)
+    events = events.set_column(events.schema.get_field_index("ts"), "ts", moved)
+    assert pc.max(moved).as_py().year < 1970
+    pq.write_table(events, tmp_path / "events.parquet")
+
+    a = _red_rate_error_rows(run_streaming_red_panel(spark, str(tmp_path)))
+    tm = task_metrics(spark.read.parquet(str(tmp_path / "events.parquet")))
+    assert a == _red_rate_error_rows(red_panel(tm)) and a
+    assert all(r[1] < 0 for r in a)
 
 
 def test_streaming_media_dedup_matches_batch(spark, sf_dir):

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MINHASH_AB, MINHASH_BANDS, MINHASH_P, MINHASH_ROWS, md5_int
 from ..functions.text import corpus, shingles, tokens
+from .similarity import _shared_frame
 
 
 def _group_output(by: DataFrame, key: str) -> DataFrame:
@@ -55,58 +56,6 @@ def _shingle_base(documents: DataFrame) -> DataFrame:
         .select("doc_id", toks.alias("toks"))
         .filter(F.size("toks") >= 3)
     )
-
-
-def _doc_shared_frame(
-    tag: str,
-    documents: DataFrame | None,
-    build,
-    *params,
-    fallback_checkpoint: bool = False,
-):
-    """Serve ``build()`` through the session shared-frame registry, keyed
-    on the ``documents`` corpus frame (r16, guide §2.4/§5 — the
-    r12/r15-sanctioned D39/D40/D20–D23 pattern applied to the dedup/CC
-    family): the MinHash-LSH candidate graph and the banded-scored pair
-    set are each derived by HALF A DOZEN registry queries per corpus
-    (P4/P5/P10/P11/P15/P17/P19/P27, D3, D15, D18), and every one of them
-    recomputed the identical frame per call. The registry is in-process
-    session state keyed by plan hash + file footprint + owning session —
-    a fresh process always recomputes from parquet (never cross-run), and
-    a registry miss (non-parquet input, unkeyable plan) returns
-    ``build()`` unchanged — lazily, or checkpointed when
-    ``fallback_checkpoint`` preserves a caller's pre-r16 materialization
-    contract — so test corpora and in-memory frames keep their exact
-    pre-r16 behavior. ``build`` must return the LAZY frame; the registry
-    put performs the one materialization."""
-
-    def _fallback() -> DataFrame:
-        out = build()
-        return out.localCheckpoint(eager=True) if fallback_checkpoint else out
-
-    if documents is None:
-        return _fallback()
-    from .similarity import (
-        _input_footprint,
-        _model_key,
-        _shared_frame_get,
-        _shared_frame_put,
-    )
-
-    # Footprint-gated: two DIFFERENT in-memory corpora both digest to 0,
-    # and a key collision would serve one corpus's pairs to the other —
-    # only file-backed frames (the only ones worth sharing) participate.
-    if _input_footprint(documents) == 0:
-        return _fallback()
-    spark = documents.sparkSession
-    key = _model_key(tag, documents, *params)
-    hit = _shared_frame_get(key, spark)
-    if hit is not None:
-        return hit
-    put = _shared_frame_put(key, spark, build())
-    if put is not None:
-        return put[0]
-    return _fallback()
 
 
 def _shingle_rows(
@@ -330,10 +279,10 @@ def dedup_minhash_lsh(
     smaller).
 
     ``sig`` lets a caller that already materialized the signatures (D18,
-    P17) feed them in. The default-parameter candidate graph is served
-    through the session shared-frame registry (see
-    :func:`_doc_shared_frame`): P4/P5/P10/P15/P19 and D15's candidate
-    stage all consume this exact frame per corpus.
+    P17) feed them in. The candidate graph is served through the session
+    shared-frame registry, one entry per ``n_splits`` (see
+    :func:`~.similarity._shared_frame`): P4/P5/P10/P15/P19 and D15's
+    candidate stage all consume this exact frame per corpus.
     """
     def _build() -> DataFrame:
         return _lsh_candidate_pairs(
@@ -341,7 +290,7 @@ def dedup_minhash_lsh(
             n_splits=n_splits,
         )
 
-    return _doc_shared_frame("lsh-cand", documents, _build) if n_splits == 1 else _build()
+    return _shared_frame("lsh-cand", documents, _build, n_splits)
 
 
 def dedup_minhash_estimate(
@@ -373,11 +322,8 @@ def dedup_minhash_estimate(
     # The materialized signatures are session-shared (r16 — P17's panel
     # needs this identical frame), and the candidate graph comes from
     # D3's shared frame instead of a private banding join.
-    sig = _doc_shared_frame(
-        "mh-sig",
-        documents,
-        lambda: minhash_signatures(documents, base=base),
-        fallback_checkpoint=True,
+    sig = _shared_frame(
+        "mh-sig", documents, lambda: minhash_signatures(documents, base=base)
     )
     pairs = dedup_minhash_lsh(documents, base=base, sig=sig)
     sa = sig.select(
@@ -498,9 +444,10 @@ def dedup_containment_banded(
     # the candidate-restricted exact-scoring pass — previously each
     # re-derived it from raw documents (two full corpus scans; at 100 TB
     # the second scan is pure object-storage cost). `cand` is likewise
-    # materialized: without it the LSH subtree re-executes once per
-    # downstream reference (~5×, 41-Exchange plan measured). `cand` is the
-    # LSH edge list; `base` one row per CANDIDATE doc — both ≪ corpus.
+    # materialized (D3's shared frame): without it the LSH subtree
+    # re-executes once per downstream reference (~5×, 41-Exchange plan
+    # measured). `cand` is the LSH edge list; `base` one row per
+    # CANDIDATE doc — both ≪ corpus.
     def _build() -> DataFrame:
         base_all = (
             base
@@ -510,9 +457,7 @@ def dedup_containment_banded(
         pairs = (
             cand
             if cand is not None
-            else dedup_minhash_lsh(documents, base=base_all).select(
-                "doc_a", "doc_b"
-            ).localCheckpoint(eager=True)
+            else dedup_minhash_lsh(documents, base=base_all).select("doc_a", "doc_b")
         )
         cand_docs = (
             pairs.select(F.col("doc_a").alias("doc_id"))
@@ -555,7 +500,7 @@ def dedup_containment_banded(
     # lets a caller (P17) that already materialized the candidate graph
     # feed it in on a miss — the output is cand-invariant (the same
     # candidate SET either way).
-    return _doc_shared_frame(
+    return _shared_frame(
         "banded-pairs",
         documents,
         _build,

@@ -1298,11 +1298,8 @@ def dup_groups_nightly_report(
         )
 
     def pairs_over(df: DataFrame) -> DataFrame:
-        return (
-            dedup_minhash_lsh(None, base=shingle_base(df))
-            .select("doc_a", "doc_b")
-            .localCheckpoint(eager=True)
-        )
+        # materialized by dedup_minhash_lsh's shared-frame path
+        return dedup_minhash_lsh(None, base=shingle_base(df)).select("doc_a", "doc_b")
 
     def label_sets_equal(a: DataFrame, b: DataFrame) -> bool:
         cols = ["src", "group_id"]
@@ -1652,7 +1649,6 @@ def dedup_eval_report(documents: DataFrame) -> DataFrame:
     between — the monotonicity is pinned in tests.
     """
     from .dedup import (
-        _doc_shared_frame,
         _shingle_base,
         dedup_containment_banded,
         dedup_minhash_estimate,
@@ -1660,6 +1656,7 @@ def dedup_eval_report(documents: DataFrame) -> DataFrame:
         dedup_sorted_neighborhood,
         minhash_signatures,
     )
+    from .similarity import _shared_frame
 
     # ONE (doc_id, toks) corpus materialization shared by ALL graded
     # methods — without it each of the five re-derives the corpus union
@@ -1705,11 +1702,8 @@ def dedup_eval_report(documents: DataFrame) -> DataFrame:
                 )
             )
         )
-        sig = _doc_shared_frame(
-            "mh-sig",
-            documents,
-            lambda: minhash_signatures(documents, base=shared),
-            fallback_checkpoint=True,
+        sig = _shared_frame(
+            "mh-sig", documents, lambda: minhash_signatures(documents, base=shared)
         )
         cand = ck(
             dedup_minhash_lsh(documents, base=shared, sig=sig).select(

@@ -147,12 +147,22 @@ def _cache_get(key: tuple | None):
     return model
 
 
+def _bounded_put(store: dict, key: tuple, value) -> None:
+    """Insert into a session store capped at ``_TRAINED_CACHE_MAX``
+    entries, evicting the oldest (FIFO). Eviction drops the REFERENCE
+    only: a caller may still hold an alias of an evicted shared frame,
+    and unpersisting a local checkpoint under a live handle is
+    unrecoverable (truncated lineage), not a recompute. Orphaned blocks
+    are reclaimed by Spark's ContextCleaner; the explicit release path
+    is :func:`trained_cache_clear`."""
+    if key not in store and len(store) >= _TRAINED_CACHE_MAX:
+        store.pop(next(iter(store)))
+    store[key] = value
+
+
 def _cache_put(key: tuple | None, value) -> None:
-    if key is None:
-        return
-    if key not in _TRAINED_CACHE and len(_TRAINED_CACHE) >= _TRAINED_CACHE_MAX:
-        _TRAINED_CACHE.pop(next(iter(_TRAINED_CACHE)))
-    _TRAINED_CACHE[key] = value
+    if key is not None:
+        _bounded_put(_TRAINED_CACHE, key, value)
 
 
 def trained_cache_clear(loaded_too: bool = True) -> None:
@@ -176,8 +186,9 @@ def trained_cache_clear(loaded_too: bool = True) -> None:
 #: case: D39 and D40 both need the full SemDeDup removal frame; without
 #: sharing, D40 re-runs the whole assignment + pair join D39 just computed
 #: (the r12 bench's one flagged regression). Each entry carries the
-#: checkpoint's persistent-RDD ids so eviction/clear can UNPERSIST the
+#: checkpoint's persistent-RDD ids so an explicit clear can UNPERSIST the
 #: executor blocks instead of leaking them for the session lifetime.
+#: Written only by :func:`_shared_frame`.
 _SHARED_FRAMES: dict[tuple, tuple[object, DataFrame, list[int]]] = {}
 
 
@@ -206,7 +217,7 @@ def _checkpointed_tracked(df: DataFrame) -> tuple[DataFrame, list[int]]:
 
 
 def _shared_frame_release(entry: tuple[object, DataFrame, list[int]]) -> None:
-    """Unpersist an evicted/cleared entry's checkpoint RDD blocks (best
+    """Unpersist a cleared entry's checkpoint RDD blocks (best
     effort — a stopped session simply has nothing left to release)."""
     spark, _, rdd_ids = entry
     try:
@@ -219,34 +230,30 @@ def _shared_frame_release(entry: tuple[object, DataFrame, list[int]]) -> None:
         pass
 
 
-def _shared_frame_get(key: tuple | None, spark) -> DataFrame | None:
-    """Serve a cache hit as a defensive ALIAS of the stored handle: the
-    checkpoint blocks are shared session state, and an alias makes a
-    caller's ``unpersist()`` a plan-local no-op instead of poisoning
-    every later hit."""
-    if key is None:
-        return None
-    hit = _SHARED_FRAMES.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1].alias("shared")
-    return None
+def _shared_frame(tag: str, df: DataFrame | None, build, *params) -> DataFrame:
+    """``build()`` materialized once per (tag, ``df``, params) per session
+    and served to every later caller — THE one share path for frames that
+    several registry queries reuse (the MinHash-LSH candidate graph, the
+    normalized ANN corpus, the SemDeDup removal set, the ingest-gate
+    bases). ``build`` returns the LAZY frame; this helper performs the
+    one materialization.
 
-
-def _shared_frame_put(key: tuple | None, spark, df: DataFrame) -> tuple[DataFrame, list[int]] | None:
-    if key is None:
-        return None
-    out, rdd_ids = _checkpointed_tracked(df)
-    if len(_SHARED_FRAMES) >= _TRAINED_CACHE_MAX:
-        # Capacity eviction drops the REFERENCE only — a caller may still
-        # hold an alias of the evicted frame, and unpersisting a local
-        # checkpoint under a live handle is unrecoverable (truncated
-        # lineage), not a recompute. Orphaned blocks are reclaimed by
-        # Spark's ContextCleaner once the last reference is collected;
-        # the explicit release path is trained_cache_clear(), whose
-        # contract invalidates outstanding handles.
-        _SHARED_FRAMES.pop(next(iter(_SHARED_FRAMES)))
-    _SHARED_FRAMES[key] = (spark, out, rdd_ids)
-    return out, rdd_ids
+    A frame is shared only when ``df`` is file-backed and its plan is
+    keyable (:func:`_model_key`): two different in-memory frames both
+    have footprint 0, and a key collision would serve one frame's result
+    to the other. Any other input still gets a materialized frame, just
+    never registered. Either way the caller receives a defensive ALIAS of
+    the checkpoint, so a caller's ``unpersist()`` is a plan-local no-op
+    instead of poisoning every later hit."""
+    key = _model_key(tag, df, *params) if df is not None else None
+    shared = key is not None and key[2] != 0
+    entry = _SHARED_FRAMES.get(key) if shared else None
+    if entry is None or entry[0] is not df.sparkSession:
+        out, rdd_ids = _checkpointed_tracked(build())
+        entry = (out.sparkSession, out, rdd_ids)
+        if shared:
+            _bounded_put(_SHARED_FRAMES, key, entry)
+    return entry[1].alias("shared")
 
 
 def _key_json(key: tuple) -> str:
@@ -1389,16 +1396,7 @@ def _shared_nv(embeddings: DataFrame) -> DataFrame:
     passes per bench sweep. Same sanctioned pattern as the D39/D40
     removal frame; a fresh process still computes it once from parquet
     (the cache is session state, never cross-run)."""
-    spark = embeddings.sparkSession
-    key = _model_key("nv-norm-aug", embeddings)
-    hit = _shared_frame_get(key, spark)
-    if hit is not None:
-        return hit
-    nv = _normalized_aug(embeddings)  # built once for both paths below
-    put = _shared_frame_put(key, spark, nv)
-    if put is not None:
-        return put[0]
-    return nv.localCheckpoint(eager=True)
+    return _shared_frame("nv-norm-aug", embeddings, lambda: _normalized_aug(embeddings))
 
 
 def _coarse_cells_norm(
@@ -1416,13 +1414,12 @@ def _coarse_cells_norm(
     (a centroid-cache hit still paid a full assignment pass + checkpoint
     per caller — three redundant corpus passes per bench sweep across
     D21/D22/D23)."""
-    spark = embeddings.sparkSession
     nv = _shared_nv(embeddings)
     kkey = _model_key("coarse-norm-aug", embeddings, n_cells, max_iter)
-    akey = _model_key("coarse-assigned", embeddings, n_cells, max_iter)
-    assigned = _shared_frame_get(akey, spark)
-    cents = _cache_get(kkey) if assigned is not None else None
-    if assigned is None or cents is None:
+    cents = _cache_get(kkey)
+
+    def _build() -> DataFrame:
+        nonlocal cents
         raw, cents = _kmeans_assignments(
             None,
             k=n_cells,
@@ -1432,8 +1429,13 @@ def _coarse_cells_norm(
             return_centroids=True,
             materialized=True,  # nv is the shared checkpointed corpus
         )
-        put = _shared_frame_put(akey, spark, raw)
-        assigned = put[0] if put is not None else raw.localCheckpoint(eager=True)
+        return raw
+
+    assigned = _shared_frame("coarse-assigned", embeddings, _build, n_cells, max_iter)
+    if cents is None:
+        # a replayed assignment whose centroids were evicted: retraining
+        # is deterministic, so it recovers the centroids that built it
+        _build()
     return nv, assigned, cents
 
 
@@ -2064,9 +2066,7 @@ def _resolve_centroids(embeddings: DataFrame, n_centroids: int | None) -> int:
     if n is None:
         n = augmented_embeddings(embeddings).count()
         if key is not None:
-            if len(_CORPUS_COUNTS) >= _TRAINED_CACHE_MAX:
-                _CORPUS_COUNTS.pop(next(iter(_CORPUS_COUNTS)))
-            _CORPUS_COUNTS[key] = n
+            _bounded_put(_CORPUS_COUNTS, key, n)
     return derive_semantic_centroids(n)
 
 
@@ -2111,24 +2111,20 @@ def semantic_dedup(
     — the checkpoint is a materialization barrier, not a plan change.
     """
     n_centroids = _resolve_centroids(embeddings, n_centroids)
-    key = _model_key(
-        "semantic-removals", embeddings, float(threshold), n_centroids, n_splits
+
+    def _build() -> DataFrame:
+        q = _quantized(augmented_embeddings(embeddings), barrier_key="vec_id")
+        cells = assign_cells(q, semantic_centroids(q, n_centroids))
+        return semantic_removals(cells, cells, threshold, n_splits)
+
+    return _shared_frame(
+        "semantic-removals",
+        embeddings,
+        _build,
+        float(threshold),
+        n_centroids,
+        n_splits,
     )
-    spark = embeddings.sparkSession
-    cached = _shared_frame_get(key, spark)
-    if cached is not None:
-        return cached
-    q = _quantized(augmented_embeddings(embeddings), barrier_key="vec_id")
-    cells = assign_cells(q, semantic_centroids(q, n_centroids))
-    out = semantic_removals(cells, cells, threshold, n_splits)
-    put = _shared_frame_put(key, spark, out)
-    if put is None:
-        # key-less plans (semanticHash unavailable) still MATERIALIZE —
-        # D40 consumes this frame twice, and an un-checkpointed return
-        # would re-run the assignment + pair join per reference (the r12
-        # flagged regression class); only the registry insert is skipped.
-        return out.localCheckpoint(eager=True)
-    return put[0].alias("shared")
 
 
 def semantic_centroids(q: DataFrame, n_centroids: int = SEMANTIC_CENTROIDS) -> DataFrame:

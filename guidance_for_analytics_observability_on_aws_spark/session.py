@@ -43,8 +43,8 @@ def get_spark(app_name: str = "analytics-observability-spark") -> SparkSession:
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-        # UI serves the status REST API the live collector reads
-        # (sources/live_metrics.py); port 0 = pick any free port.
+        # UI serves the status REST API that perfbench's --trace reads
+        # (perfbench/tracing.py); port 0 = pick any free port.
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "0")
         .config("spark.ui.showConsoleProgress", "false")

@@ -4,57 +4,29 @@ This is the direct functional counterpart of the reference's collector
 (``source/collector/src/main/scala/com/amazonaws/sparkobservability/
 CustomMetricsListener.scala:41-104``): where the reference registers a
 SparkListener and accumulates ``CustomTaskMetrics`` per finished task, we
-read the SAME metrics from Spark's status REST API (served by the app's own
-UI endpoint) and normalize them into the engine's task-metrics record
-layout (``CustomMetrics.scala:28-49`` parity — the 16-field record).
+read the SAME metrics from the driver's in-process ``AppStatusStore`` (the
+store that backs the status REST API and the UI) and normalize them into
+the engine's task-metrics record layout (``CustomMetrics.scala:28-49``
+parity — the 16-field record).
 
 The stage→job mapping the reference maintains in its listener
-(``onJobStart`` bookkeeping) is reconstructed from ``/jobs``, which lists
-each job's stage ids.
+(``onJobStart`` bookkeeping) is reconstructed from the store's job list,
+which carries each job's stage ids.
 
 PySpark cannot host a JVM SparkListener without a py4j callback server
-(fragile in production); the status API exposes the identical
-``TaskMetrics`` values the listener would see, pull-style. Pulling is also
-the right shape for a Spark-first collector: the fetch itself is driver-side
-and tiny (metrics volume is O(tasks), unrelated to data volume), and the
-resulting DataFrame feeds every group-O dashboard query unchanged.
+(fragile in production); the ``AppStatusListener`` that populates the
+store always runs, with or without ``spark.ui.enabled``, so the identical
+``TaskMetrics`` values are reachable pull-style through plain driver-side
+py4j getter calls. Pulling is also the right shape for a Spark-first
+collector: the fetch itself is driver-side and tiny (metrics volume is
+O(tasks), unrelated to data volume), and the resulting DataFrame feeds
+every group-O dashboard query unchanged.
 """
 
 from __future__ import annotations
 
-import json
-import urllib.request
-from datetime import datetime, timezone
-
 from pyspark.sql import DataFrame, SparkSession
 
-
-#: Timestamp layouts the status REST API has been observed to emit
-#: (with and without fractional seconds; GMT suffix or bare).
-_REST_TIME_FORMATS = (
-    "%Y-%m-%dT%H:%M:%S.%fGMT",
-    "%Y-%m-%dT%H:%M:%SGMT",
-    "%Y-%m-%dT%H:%M:%S.%f",
-    "%Y-%m-%dT%H:%M:%S",
-)
-
-
-def _epoch_ms(launch_time) -> int:
-    """REST reports launchTime as ISO text with a GMT suffix.
-
-    Raises on an unrecognized value rather than silently returning epoch 0,
-    which would quietly skew every time-bucketed rollup built on it.
-    """
-    if isinstance(launch_time, (int, float)):
-        return int(launch_time)
-    if isinstance(launch_time, str):
-        for fmt in _REST_TIME_FORMATS:
-            try:
-                dt = datetime.strptime(launch_time, fmt)
-            except ValueError:
-                continue
-            return int(dt.replace(tzinfo=timezone.utc).timestamp() * 1000)
-    raise ValueError(f"unrecognized REST launchTime value: {launch_time!r}")
 
 #: Output schema — field-for-field CustomTaskMetrics parity.
 LIVE_TASK_METRICS_SCHEMA = (
@@ -68,22 +40,12 @@ LIVE_TASK_METRICS_SCHEMA = (
 )
 
 
-def _get(base: str, path: str):
-    with urllib.request.urlopen(f"{base}/api/v1/{path}", timeout=30) as r:
-        return json.load(r)
-
-
-def _task_metrics_via_status_store(spark: SparkSession, max_stages: int) -> list:
-    """Collect the same per-task rows from the driver's in-process
-    ``AppStatusStore`` — the store that BACKS the REST API and UI.
-
-    This is the fallback when ``spark.ui.enabled=false`` leaves no HTTP
-    endpoint to poll: the ``AppStatusListener`` that populates this store
-    always runs, so the identical TaskMetrics values remain reachable via
-    plain driver-side py4j getter calls (no callback server involved).
-    Functional parity target is unchanged: the reference listener's
-    per-finished-task accumulation (``CustomMetricsListener.scala:41-104``).
-    """
+def live_task_metrics(spark: SparkSession, max_stages: int = 200) -> DataFrame:
+    """Collect real per-task metrics for this application's completed
+    stages (at most ``max_stages``), as a DataFrame in the canonical
+    task-metrics layout. Functional parity target: the reference
+    listener's per-finished-task accumulation
+    (``CustomMetricsListener.scala:41-104``)."""
     sc = spark.sparkContext
     app_id, app_name = sc.applicationId, sc.appName
     store = sc._jsc.sc().statusStore()
@@ -141,73 +103,6 @@ def _task_metrics_via_status_store(spark: SparkSession, max_stages: int) -> list
                     shw.recordsWritten(),
                 )
             )
-    return rows
-
-
-def stage_to_job_map(spark: SparkSession) -> dict[int, int]:
-    """Reconstruct the listener's stage→job bookkeeping from /jobs."""
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    mapping: dict[int, int] = {}
-    for job in _get(base, f"applications/{app_id}/jobs"):
-        for sid in job.get("stageIds", []):
-            mapping[sid] = job["jobId"]
-    return mapping
-
-def live_task_metrics(spark: SparkSession, max_stages: int = 200) -> DataFrame:
-    """Collect real per-task metrics for this application's completed
-    stages, as a DataFrame in the canonical task-metrics layout."""
-    sc = spark.sparkContext
-    base, app_id, app_name = sc.uiWebUrl, sc.applicationId, sc.appName
-    rows = []
-    if not base:
-        # UI disabled — no REST endpoint, but the AppStatusStore that backs
-        # it still runs in-process.  Read the same values from there rather
-        # than silently reporting an empty metrics frame (which would make a
-        # spark.ui.enabled=false deployment look like a dead collector).
-        rows = _task_metrics_via_status_store(spark, max_stages)
-        return spark.createDataFrame(rows, LIVE_TASK_METRICS_SCHEMA)
-    jobs = stage_to_job_map(spark)
-    stages = _get(base, f"applications/{app_id}/stages?status=complete")
-    for st in stages[:max_stages]:
-        detail = _get(
-            base,
-            f"applications/{app_id}/stages/{st['stageId']}/"
-            f"{st['attemptId']}?details=true",
-        )
-        attempts = detail if isinstance(detail, list) else [detail]
-        for att in attempts:
-            for tid, t in (att.get("tasks") or {}).items():
-                m = t.get("taskMetrics") or {}
-                inp = m.get("inputMetrics") or {}
-                outp = m.get("outputMetrics") or {}
-                shr = m.get("shuffleReadMetrics") or {}
-                shw = m.get("shuffleWriteMetrics") or {}
-                rows.append(
-                    (
-                        app_name,
-                        app_id,
-                        jobs.get(st["stageId"], -1),
-                        st["stageId"],
-                        int(tid),
-                        t.get("executorId", "driver"),
-                        t.get("index", -1),
-                        "taskMetrics",
-                        _epoch_ms(t.get("launchTime", 0)),
-                        int(inp.get("bytesRead", 0)),
-                        int(inp.get("recordsRead", 0)),
-                        int(m.get("executorRunTime", 0)),
-                        # REST reports cpuTime in ns; the reference ships ms
-                        int(m.get("executorCpuTime", 0)) // 1_000_000,
-                        int(m.get("peakExecutionMemory", 0)),
-                        int(outp.get("bytesWritten", 0)),
-                        int(outp.get("recordsWritten", 0)),
-                        int(shr.get("localBytesRead", 0)) + int(shr.get("remoteBytesRead", 0)),
-                        int(shr.get("recordsRead", 0)),
-                        int(shw.get("bytesWritten", 0)),
-                        int(shw.get("recordsWritten", 0)),
-                    )
-                )
     return spark.createDataFrame(rows, LIVE_TASK_METRICS_SCHEMA)
 
 
@@ -233,8 +128,7 @@ def live_stage_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
         # instead of emitting a 0-row "success".
         raise RuntimeError(
             "live collector returned no task metrics after the marker "
-            "workload; neither the REST endpoint (uiWebUrl="
-            f"{spark.sparkContext.uiWebUrl!r}) nor the in-process "
-            "AppStatusStore yielded completed-task rows"
+            "workload; the in-process AppStatusStore yielded no "
+            "completed-task rows"
         )
     return stage_agg_skewness(tm)

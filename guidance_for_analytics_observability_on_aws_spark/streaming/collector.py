@@ -656,7 +656,6 @@ def run_streaming_rolling_wau(
     spark: SparkSession,
     sf_dir: str,
     window_days: int = 7,
-    bounded_state: bool = False,
     lateness_days: int = 1,
     events_glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
@@ -674,8 +673,8 @@ def run_streaming_rolling_wau(
     emitted pairs — mergeable across batches with no distinct
     re-aggregation, which is what makes the live dashboard cheap.
 
-    ``bounded_state=True`` wires the PRODUCTION watermark: an event-time
-    watermark of ``window_days + lateness_days`` drives
+    State is bounded by the PRODUCTION watermark: an event-time watermark
+    of ``window_days + lateness_days`` drives
     ``dropDuplicatesWithinWatermark``, so a (user, report_day) key's state
     expires once the watermark passes its first-seen event time + delay.
     This is EXACT, not approximate: the events able to generate a given
@@ -683,9 +682,9 @@ def run_streaming_rolling_wau(
     (report days only look backward), so with in-order-within-lateness
     arrival every potential duplicate lands inside the delay and no
     expired key can ever be legitimately re-emitted — state stays bounded
-    by the active window's keys while the emitted rows are identical.
-    Both modes are parity-asserted against batch T42, and the bounded
-    mode's state-row ceiling is asserted across micro-batches, in
+    by the active window's keys while the emitted rows equal an unbounded
+    first-seen dedup's. Parity against batch T42 and the state-row
+    ceiling across micro-batches are asserted in
     ``tests/test_streaming.py``.
 
     ``progress_out`` (a list) receives per-micro-batch
@@ -711,12 +710,9 @@ def run_streaming_rolling_wau(
             F.sequence(F.col("day"), F.col("day") + (window_days - 1))
         ).alias("report_day"),
     )
-    if bounded_state:
-        firsts = covered.withWatermark(
-            "ts", f"{window_days + lateness_days} days"
-        ).dropDuplicatesWithinWatermark(["user_id", "report_day"])
-    else:
-        firsts = covered.dropDuplicates(["user_id", "report_day"])
+    firsts = covered.withWatermark(
+        "ts", f"{window_days + lateness_days} days"
+    ).dropDuplicatesWithinWatermark(["user_id", "report_day"])
     with _AvailableNow(spark, sf_dir, events_glob) as run:
         emitted = run.memory(firsts.drop("ts"), "append")
     if progress_out is not None:
@@ -1255,11 +1251,11 @@ def run_streaming_repeated_spans(
     """
     from ..functions.text import corpus
     from ..operators.dedup import (
-        _doc_shared_frame,
         _span_rows,
         apply_span_scrub,
         non_canonical_spans,
     )
+    from ..operators.similarity import _shared_frame
 
     w = span_tokens
     docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
@@ -1280,13 +1276,12 @@ def run_streaming_repeated_spans(
     # batch — two corpus-sized round-trips per run that carried zero
     # information beyond the frame itself. Index semantics are unchanged:
     # the gate's view is always base ∪ deltas-before-this-batch.
-    idx0 = _doc_shared_frame(
+    idx0 = _shared_frame(
         "stream-span-index",
         old_docs,
         lambda: _span_rows(old_docs, w).select("span_hash").distinct(),
         w,
         corpus_boundary,
-        fallback_checkpoint=True,
     )
     with _AvailableNow(spark, sf_dir, "documents.parquet") as run:
         index_path = f"{run.dir}/span_index"
@@ -1408,22 +1403,17 @@ def run_streaming_prefix_dedup(
     # whole at bootstrap and re-read + re-materialized per batch. The
     # gate's view stays base ∪ deltas-before-this-batch, so verdicts are
     # unchanged (the D31 parity pin covers this).
-    from ..operators.dedup import _doc_shared_frame
+    from ..operators.similarity import _shared_frame
 
-    arrays0 = _doc_shared_frame(
-        "stream-prefix-arrays",
-        old_docs,
-        lambda: sorted_arrays(old_docs),
-        corpus_boundary,
-        fallback_checkpoint=True,
+    arrays0 = _shared_frame(
+        "stream-prefix-arrays", old_docs, lambda: sorted_arrays(old_docs), corpus_boundary
     )
-    prefix0 = _doc_shared_frame(
+    prefix0 = _shared_frame(
         "stream-prefix-postings",
         old_docs,
         lambda: lex_prefix_rows(arrays0, pct),
         pct,
         corpus_boundary,
-        fallback_checkpoint=True,
     )
     with _AvailableNow(spark, src, docs_glob) as run:
         arr_path, pre_path = f"{run.dir}/index_arrays", f"{run.dir}/index_prefix"
@@ -1548,9 +1538,9 @@ def semantic_gate_batch(
     vecs_path: str,
     out_dir: str,
     tau: float,
+    base_codes: DataFrame,
+    base_vecs: DataFrame,
     crash_between_appends: bool = False,
-    base_codes: DataFrame | None = None,
-    base_vecs: DataFrame | None = None,
 ) -> None:
     """One D41 gate batch (the ``foreachBatch`` body of
     :func:`run_streaming_semantic_dedup`, module-level so the crash-seam
@@ -1568,12 +1558,9 @@ def semantic_gate_batch(
     ``crash_between_appends`` is the test hook that aborts exactly on
     that seam.
 
-    ``base_codes``/``base_vecs`` (r16): optional committed-side BASE
-    frames for the split-index layout — when given, ``codes_path`` /
-    ``vecs_path`` hold only delta appends and the gate's index view is
-    base ∪ deltas (identical set to the pre-split whole-table layout,
-    which remains the behavior when they are None — the crash-seam
-    tests drive that layout directly)."""
+    ``base_codes``/``base_vecs``: the committed-side BASE frames of the
+    split index — ``codes_path`` / ``vecs_path`` hold only the per-batch
+    delta appends, and the gate's index view is base ∪ deltas."""
     from ..functions.vectors import cosine6, dot
     from ..operators.similarity import (
         N_SPLITS,
@@ -1596,17 +1583,13 @@ def semantic_gate_batch(
         ),
         centroids,
     ).localCheckpoint(eager=True)
-    # Materialize the index reads BEFORE this batch appends to them —
-    # the whole table pre-split, only the (small) delta when a base
-    # frame carries the committed side as an already-fixed checkpoint.
-    if base_codes is not None:
-        index_codes = base_codes.unionByName(
-            spark.read.schema(base_codes.schema)
-            .parquet(codes_path)
-            .localCheckpoint(eager=True)
-        )
-    else:
-        index_codes = spark.read.parquet(codes_path).localCheckpoint(eager=True)
+    # Materialize the (small) delta read BEFORE this batch appends to it;
+    # the base carries the committed side as an already-fixed checkpoint.
+    index_codes = base_codes.unionByName(
+        spark.read.schema(base_codes.schema)
+        .parquet(codes_path)
+        .localCheckpoint(eager=True)
+    )
     new_rows = arriving.join(
         index_codes.select("vec_id"), "vec_id", "left_anti"
     ).localCheckpoint(eager=True)
@@ -1673,14 +1656,9 @@ def semantic_gate_batch(
         )
         .filter(F.col("ub_cos") >= tau - 1e-6)
     )
-    stored_vecs = (
-        base_vecs.unionByName(
-            spark.read.schema(base_vecs.schema).parquet(vecs_path)
-        )
-        if base_vecs is not None
-        else spark.read.parquet(vecs_path)
-    )
-    vecs = stored_vecs.unionByName(new_rows.select("vec_id", "qv"))
+    vecs = base_vecs.unionByName(
+        spark.read.schema(base_vecs.schema).parquet(vecs_path)
+    ).unionByName(new_rows.select("vec_id", "qv"))
     # dropDuplicates on the SHORTLIST-sized frame absorbs the one
     # reachable half-applied state (vecs appended, codes not — see the
     # append order below): duplicate a_id rows carry identical vectors,

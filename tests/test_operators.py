@@ -2530,15 +2530,35 @@ def test_histogram_rollup_percentile_semantics(spark):
 def test_sorted_neighborhood_distributed_bit_equal(spark, sf_dir, two_phase_equal):
     """D30: the operator's two-phase global rank must reproduce a
     single-window rank bit-for-bit (the _ranked_with_n family
-    convention) — same candidates, same scores."""
+    convention) — same ranks over D30's own sort frame, and the same
+    candidates and scores. The rank comparison covers every document: a
+    rank that skips a number at a slice boundary changes no reported
+    pair unless a near-dup pair straddles that boundary."""
+    from pyspark.sql import functions as F
+
     from guidance_for_analytics_observability_on_aws_spark.operators.dedup import (
+        _shingle_base,
         dedup_sorted_neighborhood,
+    )
+    from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
+        _ranked_with_n,
     )
     from guidance_for_analytics_observability_on_aws_spark.sources.tables import (
         load_tables,
     )
 
     docs = load_tables(spark, sf_dir)["documents"]
+    sort_frame = _shingle_base(docs).select(
+        "doc_id",
+        F.substring(F.concat_ws(" ", F.col("toks")), 1, 40).alias("skey"),
+        F.lit(0).alias("_g"),
+    )
+    ranks = [
+        _ranked_with_n(sort_frame, "_g", ["skey", "doc_id"], distributed=d)
+        .select("doc_id", "rn", "n")
+        for d in (False, True)
+    ]
+    two_phase_equal(*ranks)
     two_phase_equal.swap(lambda: dedup_sorted_neighborhood(docs), two_phase=True)
 
 
@@ -4142,10 +4162,11 @@ def test_dedup_family_shared_frames(spark, sf_dir):
     """r16 session sharing for the dedup/CC family: D3's candidate graph,
     the MinHash signatures and D15's verified pairs are served through
     the session shared-frame registry — a second call is a replay (its
-    plan scans the checkpoint RDD), the served output equals a
-    registry-cleared recompute row-for-row, and in-memory corpora
-    (footprint 0) bypass the registry entirely so two different local
-    frames can never share a candidate graph."""
+    plan scans the checkpoint RDD), a salted (``n_splits``) call keys its
+    own entry, the served output equals a registry-cleared recompute
+    row-for-row, and in-memory corpora (footprint 0) get a materialized
+    frame that is never registered, so two different local frames can
+    never share a candidate graph."""
     from guidance_for_analytics_observability_on_aws_spark.operators import (
         dedup as D,
     )
@@ -4168,12 +4189,17 @@ def test_dedup_family_shared_frames(spark, sf_dir):
     assert len(_SHARED_FRAMES) == n_keys  # hit, not a second entry
     assert got2 is not got1  # defensive alias
     assert "LogicalRDD" in got2._jdf.queryExecution().optimizedPlan().toString()
+    # the salted graph is its own entry, never the unsalted frame
+    D.dedup_minhash_lsh(docs, n_splits=8)
+    lsh_keys = [k for k in _SHARED_FRAMES if k[0] == "lsh-cand"]
+    assert len(_SHARED_FRAMES) == n_keys + 1 and len(lsh_keys) == 2
+    assert {k[-1] for k in lsh_keys} == {1, 8}
     # shared banded output ≡ a from-scratch recompute (cleared registry)
     rows1 = {tuple(r) for r in D.dedup_containment_banded(docs).collect()}
     trained_cache_clear(loaded_too=False)
     rows2 = {tuple(r) for r in D.dedup_containment_banded(docs).collect()}
     assert rows1 == rows2
-    # in-memory corpus: no registry participation, lazy plan unchanged
+    # in-memory corpus: no registry participation, but still materialized
     local = spark.createDataFrame(
         [(1, "a b c d e f g", "en", "s1"), (2, "a b c d e f g", "en", "s1")],
         "doc_id long, text string, lang string, source string",
@@ -4181,8 +4207,8 @@ def test_dedup_family_shared_frames(spark, sf_dir):
     n_keys = len(_SHARED_FRAMES)
     out = D.dedup_minhash_lsh(local)
     assert len(_SHARED_FRAMES) == n_keys
-    # still the full lazy pipeline (tokenization visible), not a replay
-    # of some checkpoint (a createDataFrame source is itself a LogicalRDD,
-    # so probe for the computation instead)
-    assert "split(" in out._jdf.queryExecution().optimizedPlan().toString()
+    # a checkpoint scan, not the lazy pipeline (tokenization gone)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan and "split(" not in plan
+    assert [tuple(r) for r in out.collect()] == [(1, 2, 4)]
     trained_cache_clear(loaded_too=False)

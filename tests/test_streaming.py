@@ -396,8 +396,8 @@ def test_streaming_rolling_wau_matches_batch(spark, sf_dir):
 
 
 def test_streaming_rolling_wau_bounded_state(spark, sf_dir, tmp_path):
-    """stream_rolling_wau(bounded_state=True): the production watermark
-    path must (a) stay row-for-row equal to batch T42, and (b) actually
+    """stream_rolling_wau: the production watermark path must (a) stay
+    row-for-row equal to batch T42, and (b) actually
     EXPIRE (user, report_day) state — the per-batch state row count must
     stay strictly below the full key population once the watermark has
     advanced past old keys. Driven by a day-ordered multi-file drop dir
@@ -443,7 +443,6 @@ def test_streaming_rolling_wau_bounded_state(spark, sf_dir, tmp_path):
         for r in run_streaming_rolling_wau(
             spark,
             drop_dir,
-            bounded_state=True,
             events_glob="*.parquet",
             max_files_per_trigger=1,
             progress_out=progress,
@@ -1466,7 +1465,10 @@ def test_streaming_semantic_dedup_crash_seam_replay(spark, sf_dir, tmp_path):
     final index byte-identical to a never-crashed run. This pins the r14
     append-order fix — with the old codes-first order the replay saw no
     new rows, the vectors never backfilled, and every future pair
-    against those ids silently vanished (permanent under-removal)."""
+    against those ids silently vanished (permanent under-removal).
+    Driven on the production index layout: checkpointed committed-side
+    base frames plus per-batch delta dirs, which start empty, so the
+    on-disk counts and sets below are the deltas'."""
     import os
 
     import pytest
@@ -1491,11 +1493,13 @@ def test_streaming_semantic_dedup_crash_seam_replay(spark, sf_dir, tmp_path):
     centroids = semantic_centroids(committed, k).localCheckpoint(eager=True)
     cells = assign_cells(committed, centroids).localCheckpoint(eager=True)
     mns, rngs = sq8_stats(cells)
+    base_codes = sq8_encode(cells, mns, rngs).localCheckpoint(eager=True)
+    base_vecs = cells.select("vec_id", "qv")
 
     def fresh_index(tag):
         codes, vecs = str(tmp_path / f"codes_{tag}"), str(tmp_path / f"vecs_{tag}")
-        sq8_encode(cells, mns, rngs).write.mode("overwrite").parquet(codes)
-        cells.select("vec_id", "qv").write.mode("overwrite").parquet(vecs)
+        os.makedirs(codes)
+        os.makedirs(vecs)
         return codes, vecs
 
     def gate(batch, tag, codes, vecs, crash=False):
@@ -1503,8 +1507,12 @@ def test_streaming_semantic_dedup_crash_seam_replay(spark, sf_dir, tmp_path):
             spark, batch, 0, centroids=centroids, mns=mns, rngs=rngs,
             codes_path=codes, vecs_path=vecs,
             out_dir=str(tmp_path / f"out_{tag}"), tau=float(SEMANTIC_TAU),
+            base_codes=base_codes, base_vecs=base_vecs,
             crash_between_appends=crash,
         )
+
+    def read(path, like):  # a delta dir, possibly still empty
+        return spark.read.schema(like.schema).parquet(path)
 
     batch = raw  # the gate filters to the planted +100000 arrivals itself
     # clean run
@@ -1515,8 +1523,8 @@ def test_streaming_semantic_dedup_crash_seam_replay(spark, sf_dir, tmp_path):
     with pytest.raises(RuntimeError, match="injected crash"):
         gate(batch, "crash", c2, v2, crash=True)
     # half-applied state: vecs grew, codes did not
-    n_codes = spark.read.parquet(c2).count()
-    n_vecs = spark.read.parquet(v2).count()
+    n_codes = read(c2, base_codes).count()
+    n_vecs = read(v2, base_vecs).count()
     assert n_vecs > n_codes, "crash must leave the vecs-superset state"
     gate(batch, "crash", c2, v2)  # at-least-once re-delivery
 
@@ -1533,16 +1541,16 @@ def test_streaming_semantic_dedup_crash_seam_replay(spark, sf_dir, tmp_path):
     # (vec_id, qv) — the replayed append duplicates rows, which the
     # shortlist dropDuplicates absorbs by design
     codes_set = lambda p: {  # noqa: E731
-        (r.vec_id, tuple(r.codes)) for r in spark.read.parquet(p).collect()
+        (r.vec_id, tuple(r.codes)) for r in read(p, base_codes).collect()
     }
-    assert codes_set(c2) == codes_set(c1)
+    assert codes_set(c2) == codes_set(c1) and codes_set(c1)
     vec_set = lambda p: {  # noqa: E731
-        (r.vec_id, tuple(r.qv)) for r in spark.read.parquet(p).collect()
+        (r.vec_id, tuple(r.qv)) for r in read(p, base_vecs).collect()
     }
     assert vec_set(v2) == vec_set(v1)
     # and distinct vec_ids match the codes index exactly (no stranded ids)
-    ids = lambda p: {r.vec_id for r in spark.read.parquet(p).select("vec_id").distinct().collect()}  # noqa: E731
-    assert ids(v2) == ids(c2)
+    ids = lambda p, like: {r.vec_id for r in read(p, like).select("vec_id").distinct().collect()}  # noqa: E731
+    assert ids(v2, base_vecs) == ids(c2, base_codes)
 
 
 def test_streaming_semantic_dedup_appends_index_across_batches(spark, tmp_path):

@@ -364,26 +364,6 @@ def _global_desc_ranked(
     return ranked.withColumn("rank", F.col("rn").cast("long")).drop("_g", "_negv")
 
 
-def _ntile_from_rank(k: int):
-    """Spark's ``ntile(k)`` recomputed from the :func:`_ranked_with_n`
-    contract columns ``rn``/``n`` in pure integer arithmetic — the
-    two-phase counterpart of one global NTILE window sort (T40's scores),
-    bit-identical: with ``q = n DIV k`` and ``r = n % k``, the first
-    ``r`` tiles hold ``q+1`` rows and the rest ``q`` (exactly Spark's
-    split), hence tile = ``ceil(rn/(q+1))`` up to the boundary
-    ``r·(q+1)`` and ``r + ceil((rn-boundary)/q)`` past it
-    (``greatest(q,1)`` guards the n < k case, where the boundary covers
-    every row and the ELSE branch is unreachable).
-    """
-    k = int(k)
-    return F.expr(
-        f"CASE WHEN rn <= (n % {k}) * (n DIV {k} + 1) "
-        f"THEN (rn + n DIV {k}) DIV (n DIV {k} + 1) "
-        f"ELSE n % {k} + (rn - (n % {k}) * (n DIV {k} + 1) + n DIV {k} - 1) "
-        f"DIV greatest(n DIV {k}, 1) END"
-    ).cast("long")
-
-
 def task_percentiles(tm: DataFrame) -> DataFrame:
     """O8: p25/50/75/99 per event_type via explicit lower order statistics
     (:func:`_order_stat_aggs`), one ranked window per type."""

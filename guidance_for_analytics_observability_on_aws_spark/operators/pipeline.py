@@ -10,13 +10,12 @@ Scale posture:
 - Split/sample/pack are all hash- or window-based per-row arithmetic over a
   single shuffle keyed by a bounded-cardinality column (``source``) — no
   driver-side state, no skewable joins.
-- ``dup_groups`` is the one genuinely iterative operator: min-label
-  propagation over the candidate-pair graph. The edge list is the OUTPUT of
-  LSH banding (orders of magnitude smaller than the corpus), each iteration
-  is one self-join + aggregation on that small edge set, and convergence is
-  bounded by component diameter (tiny for dup clusters — dups of a doc are
-  dups of each other). Lineage is truncated per iteration with
-  ``localCheckpoint`` so plans stay flat.
+- ``dup_groups`` is connected components over the candidate-pair graph,
+  through the one CC function :func:`dup_labels_star`. The edge list is
+  the OUTPUT of LSH banding (orders of magnitude smaller than the corpus):
+  under a size gate it is collected once and resolved by a driver
+  union-find; above it, large-star/small-star rounds run on the edge set
+  alone, O(log diameter) rounds with lineage truncated per round.
 
 Every op is engine-portable-exact: md5-derived hash buckets, BIGINT token
 arithmetic, and ASCII-ordered hex-string sampling keys reproduce
@@ -59,26 +58,10 @@ DRIVER_CC_EDGE_MAX = 200_000
 
 
 def _cc_partitions(n_edges: int, floor: int = 8) -> int:
-    """The ONE size-derived partition rule for the CC loops:
-    ``max(floor, ⌈n_edges / CC_EDGE_ROWS_PER_PARTITION⌉)`` — shared by
-    :func:`_edge_coalesce` (min-label P4) and :func:`dup_labels_star`
-    (which materializes earlier for its driver-dispatch gate), so a
-    tuning reaches both."""
+    """The ONE size-derived partition rule for the distributed star loop
+    of :func:`dup_labels_star`: ``max(floor, ⌈n_edges /
+    CC_EDGE_ROWS_PER_PARTITION⌉)``."""
     return max(floor, -(-n_edges // CC_EDGE_ROWS_PER_PARTITION))
-
-
-def _edge_coalesce(edges: DataFrame, floor: int = 8) -> DataFrame:
-    """Materialize the CC edge list and coalesce it to a partition count
-    derived from its ACTUAL size (:func:`_cc_partitions`), never more
-    than the checkpointed partitioning (coalesce is narrow — it cannot
-    grow).
-
-    The checkpoint runs first at the upstream (LSH-output) partitioning,
-    so the count that sizes the loop is a cheap scan of materialized
-    blocks, not a recompute of the MinHash job; the per-round tasks then
-    scale with the edge list instead of a hard-coded 8."""
-    ckpt = edges.localCheckpoint(eager=True)
-    return ckpt.coalesce(_cc_partitions(ckpt.count(), floor))
 
 
 def train_val_split(documents: DataFrame) -> DataFrame:
@@ -159,19 +142,16 @@ def pack_sequences(documents: DataFrame) -> DataFrame:
 
 def dup_groups(documents: DataFrame, max_iter: int = 50) -> DataFrame:
     """P4: transitive duplicate groups — connected components over the
-    MinHash-LSH candidate graph (D3's output).
+    MinHash-LSH candidate graph (D3's output), one row per group of two
+    or more docs.
 
-    Iterative min-label propagation: every vertex repeatedly takes the
-    minimum label among itself and its neighbors until fixpoint. Converges
-    in <= diameter iterations; duplicate clusters are near-cliques so this
-    is 2-3 rounds in practice. Each round is one join edge->label + one
-    groupBy on the (small) edge list, with ``localCheckpoint`` truncating
-    lineage so the plan does not grow with iterations — the standard
-    scalable CC formulation when components are small (the dup-cluster
-    regime); large-diameter graphs would use large-star/small-star.
+    The labels come from :func:`dup_labels_star`, the one CC function:
+    under its edge-count gate one collect + driver union-find, above it
+    the large-star/small-star loop. Either way every doc is labelled with
+    its component minimum, which the recursive-CTE oracle reproduces.
     """
     return (
-        dup_labels(documents, max_iter)
+        dup_labels_star(documents, max_iter)
         .groupBy("group_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -181,84 +161,6 @@ def dup_groups(documents: DataFrame, max_iter: int = 50) -> DataFrame:
         )
         .filter(F.col("n_docs") >= 2)
     )
-
-
-def dup_labels(
-    documents: DataFrame, max_iter: int = 50, pairs: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id=src, group_id) membership labels for every doc that appears
-    in the MinHash-LSH candidate graph — the converged min-label state P4
-    summarizes and P5's curation pipeline consumes.
-
-    ``pairs`` lets a caller that ALSO needs the candidate pairs (P10's
-    cross-split audit) compute the expensive MinHash/LSH job once and
-    share it, instead of the label pass re-deriving it.
-    """
-    if pairs is None:
-        pairs = dedup_minhash_lsh(documents).select("doc_a", "doc_b")
-    # The edge list is the LSH OUTPUT — small relative to the corpus but
-    # not fixed-size; partition it by its measured row count so each
-    # propagation round schedules size-proportional tasks (8 at sf0.1,
-    # hundreds at 100 TB) instead of a hard-coded handful.
-    edges = _edge_coalesce(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    )
-    # init: label(v) = min(v, min neighbor) — one propagation round for
-    # free. NOT checkpointed: it is one tiny groupBy over the checkpointed
-    # edge list, so recomputing it inside the convergence probe (and in the
-    # caller's final aggregation when the probe converges immediately — the
-    # common near-clique case) is cheaper than an extra materialization job.
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("nbr_min"))
-        .select("src", F.least(F.col("src"), F.col("nbr_min")).alias("group_id"))
-    )
-    for it in range(max_iter + 1):
-        nbr = (
-            edges.join(labels.withColumnRenamed("src", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("group_id").alias("nbr_group"))
-        )
-        # Convergence probe BEFORE materializing: dup clusters are
-        # near-cliques, so the free init round usually already converged —
-        # in that common case this is the loop's ONLY job (a count over the
-        # tiny joined edge list), with no checkpoint write and no second
-        # label table. Deliberate tradeoff: a round that DOES improve
-        # re-evaluates the (tiny, checkpointed-input) nbr join once more
-        # when materializing — cheaper than taxing the common converged
-        # round with an nbr checkpoint job.
-        changed = (
-            labels.join(nbr, "src")
-            .filter(F.col("nbr_group") < F.col("group_id"))
-            .count()
-        )
-        if changed == 0:
-            break
-        if it == max_iter:
-            # Non-convergence must FAIL, not silently emit split groups:
-            # the oracles compute the full transitive closure, so a
-            # diameter > max_iter component would hash-mismatch anyway —
-            # loudly is better. Unreachable for dup graphs in practice
-            # (diameter ≈ cluster width), reachable only adversarially.
-            raise RuntimeError(
-                f"dup_labels: min-label propagation still improving after "
-                f"{max_iter} iterations ({changed} labels changed) — "
-                "component diameter exceeds max_iter; raise max_iter or "
-                "switch to large-star/small-star for this graph"
-            )
-        labels = (
-            labels.join(nbr, "src", "left")
-            .select(
-                "src",
-                F.least(
-                    F.col("group_id"),
-                    F.coalesce(F.col("nbr_group"), F.col("group_id")),
-                ).alias("group_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return labels
 
 
 def curation_pipeline(documents: DataFrame) -> DataFrame:
@@ -274,9 +176,10 @@ def curation_pipeline(documents: DataFrame) -> DataFrame:
     funnel report a curation run publishes. Each stage is the existing
     operator's semantics verbatim, so the whole funnel inherits their
     exact-oracle arithmetic and scale shapes (hash dedup: one shuffle;
-    CC: iterative over the tiny pair graph; quality: narrow map).
+    CC: one collect + union-find over the tiny pair graph; quality:
+    narrow map).
     """
-    return _curation_funnel(documents, dup_labels(documents))
+    return _curation_funnel(documents, dup_labels_star(documents))
 
 
 def curation_pipeline_v2(documents: DataFrame) -> DataFrame:
@@ -296,7 +199,7 @@ def curation_pipeline_v2(documents: DataFrame) -> DataFrame:
     from .dedup import dedup_containment_banded
 
     pairs = dedup_containment_banded(documents).select("doc_a", "doc_b")
-    return _curation_funnel(documents, dup_labels(None, pairs=pairs))
+    return _curation_funnel(documents, dup_labels_star(None, pairs=pairs))
 
 
 def _per_doc_signals(documents: DataFrame) -> DataFrame:
@@ -685,7 +588,7 @@ def split_leak_proof(documents: DataFrame) -> DataFrame:
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )
-    labels = dup_labels(documents, pairs=pairs).select(
+    labels = dup_labels_star(documents, pairs=pairs).select(
         F.col("src").alias("doc_id"), "group_id"
     )
     keyed = c.join(F.broadcast(labels), "doc_id", "left").withColumn(
@@ -916,6 +819,8 @@ def _dup_labels_driver(spark, rows, utype: str) -> DataFrame:
             else:
                 parent[ru] = rv
     labels = [(x, find(x)) for x in parent]
+    # explicit schema: an empty edge list must still give a typed frame
+    schema = f"src {utype}, group_id {utype}"
     if utype == "bigint":
         # Arrow-batched local-rows path (~4x faster than the row-at-a-
         # time tuple converter, measured r15) — ids are bigint for every
@@ -924,11 +829,10 @@ def _dup_labels_driver(spark, rows, utype: str) -> DataFrame:
         import pandas as pd
 
         return spark.createDataFrame(
-            pd.DataFrame(labels, columns=["src", "group_id"]).astype("int64")
+            pd.DataFrame(labels, columns=["src", "group_id"]).astype("int64"),
+            schema,
         )
-    return spark.createDataFrame(
-        labels, f"src {utype}, group_id {utype}"
-    )
+    return spark.createDataFrame(labels, schema)
 
 
 def dup_labels_star(
@@ -938,14 +842,24 @@ def dup_labels_star(
     driver_max_edges: int | None = DRIVER_CC_EDGE_MAX,
     pairs_distinct: bool = False,
 ) -> DataFrame:
-    """(src, group_id) labels via LARGE-STAR / SMALL-STAR connected
-    components (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the arbitrary-diameter CC :func:`dup_labels`'s docstring
-    defers to.
+    """(src, group_id) connected-component labels over a pair graph —
+    the ONE CC function every dup-label caller takes its labels from.
+    Every vertex that appears in a non-self pair is labelled with its
+    component MINIMUM (roots label themselves). ``pairs`` (doc_a, doc_b)
+    defaults to the MinHash-LSH candidates of ``documents``.
 
-    Min-label propagation needs ~diameter rounds; alternating star
-    rounds converge in O(log d) because every round REWIRES edges toward
-    component minima instead of diffusing labels one hop:
+    Physical dispatch is one size gate, the broadcast-join analogy: when
+    the DISTINCT canonical edge list has at most ``driver_max_edges``
+    rows, one ``take(gate+1)`` over the lazy distinct frame both probes
+    the size and collects the edges, and a driver union-find labels them
+    — one job, no checkpoint. Above the gate the edges are checkpointed
+    and the distributed LARGE-STAR / SMALL-STAR loop runs (Kiveris et
+    al., "Connected Components in MapReduce and Beyond") — the 100 TB
+    path (pass ``driver_max_edges=0`` to force it; the equality of the
+    two paths is pinned in tests).
+
+    Star rounds converge in O(log d), because every round REWIRES edges
+    toward component minima instead of diffusing labels one hop:
 
     - large-star: for each center u, connect every LARGER neighbor
       directly to ``m = min(N(u) ∪ {u})``;
@@ -957,15 +871,6 @@ def dup_labels_star(
     ONE action: the two-sided exceptAll union short-circuits at the first
     differing row via isEmpty's take-1). At the fixpoint every non-root
     points directly at its component minimum, which IS the label table.
-
-    Physical dispatch (r14): when the DISTINCT canonical edge list is at
-    or under ``driver_max_edges`` (the size is already measured for the
-    partition derivation), the labels come from a driver union-find over
-    the collected list instead — identical output, microseconds instead
-    of ~10 shuffle stages per round whose fixed overhead dominates at
-    small sizes. The distributed loop is the 100 TB path and engages
-    unchanged above the gate (pass ``driver_max_edges=0`` to force it —
-    the equality of the two paths is pinned in tests).
     """
     if pairs is None:
         pairs = dedup_minhash_lsh(documents).select("doc_a", "doc_b")
@@ -987,18 +892,19 @@ def dup_labels_star(
                 F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
     if driver_max_edges:
         # take(gate+1) doubles as the size probe AND the collect: when it
         # comes back short, those rows ARE the whole edge list (one job
-        # instead of count + collect); an overflow costs one truncated
-        # scan of the checkpoint before the distributed loop takes over.
+        # instead of checkpoint + count + collect); an overflow costs one
+        # truncated evaluation before the distributed loop takes over.
         head = canon.take(driver_max_edges + 1)
         if len(head) <= driver_max_edges:
             return _dup_labels_driver(
                 canon.sparkSession, head, canon.schema[0].dataType.simpleString()
             )
+    if not pairs_distinct:
+        canon = canon.localCheckpoint(eager=True)
     n_edges = canon.count()
     # Size-derived partitioning (the shared _cc_partitions rule): reused
     # for every star round — rounds only shrink the edge set, so the
@@ -1060,21 +966,12 @@ def dup_labels_star(
 
 
 def dup_groups_star(documents: DataFrame, max_iter: int = 30) -> DataFrame:
-    """P15: P4's dup groups computed by the star algorithm — identical
-    output (shares P4's recursive-CTE oracle), O(log diameter) rounds at
-    any component shape. Equality with :func:`dup_groups` and the
-    log-round advantage on a planted path graph are pinned in tests."""
-    return (
-        dup_labels_star(documents, max_iter)
-        .groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.array_join(
-                F.sort_array(F.collect_list("src")).cast("array<string>"), ","
-            ).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") >= 2)
-    )
+    """P15: P4's dup groups under the star loop's round budget — the
+    same :func:`dup_labels_star` labels, so identical output (shares P4's
+    recursive-CTE oracle). Equality of the union-find gate path with the
+    forced distributed loop, and the loop's log-round advantage on a
+    planted path graph, are pinned in tests."""
+    return dup_groups(documents, max_iter)
 
 
 def dup_labels_incremental_fold(
@@ -2619,7 +2516,7 @@ def curation_pipeline_v3(documents: DataFrame) -> DataFrame:
     from .dedup import dedup_containment_banded, dedup_repeated_spans_scrub
 
     pairs = dedup_containment_banded(documents).select("doc_a", "doc_b")
-    labels = dup_labels(None, pairs=pairs)
+    labels = dup_labels_star(None, pairs=pairs)
     per_doc = _per_doc_signals(documents).select(
         "doc_id", "fingerprint", "n_tokens", "quality"
     )

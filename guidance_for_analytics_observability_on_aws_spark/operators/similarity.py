@@ -1167,15 +1167,15 @@ def embedding_dup_groups(embeddings: DataFrame) -> DataFrame:
     not the group minimum. Scale shape inherited wholesale: the edge list
     (≪ corpus) comes from D8's Arrow Gram-matrix scorer — bit-identical
     pairs to the declarative D5 (asserted in tests), ~5× faster measured —
-    and the shared min-label propagation (pipeline.dup_labels) converges
-    in near-clique time over that edge list alone.
+    and the shared CC (pipeline.dup_labels_star) resolves that edge list
+    alone, by one collect + driver union-find under its size gate.
     """
-    from .pipeline import dup_labels
+    from .pipeline import dup_labels_star
 
     pairs = embedding_near_dups_blas(embeddings).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    labels = dup_labels(None, pairs=pairs)
+    labels = dup_labels_star(None, pairs=pairs)
     return (
         labels.groupBy("group_id")
         .agg(
@@ -1185,7 +1185,7 @@ def embedding_dup_groups(embeddings: DataFrame) -> DataFrame:
             ).alias("vec_ids"),
         )
         .filter(F.col("n_vecs") >= 2)
-        # min-label CC labels every component with its minimum member, so
+        # the CC labels every component with its minimum member, so
         # the canonical survivor IS the group id — stated once, not
         # re-aggregated as a second always-equal column.
         .select(

@@ -3,7 +3,7 @@
 Mirrors ``operators/pipeline.py`` op-for-op. ``dup_groups`` reuses the
 MinHash-LSH pair pipeline CTEs from ``dedup_oracles`` verbatim and resolves
 transitive closure with a recursive CTE — DuckDB's declarative equivalent of
-the Spark side's iterative min-label propagation.
+the Spark side's connected components (``dup_labels_star``).
 """
 
 from ..functions.hashing import md5_int_sql
@@ -74,7 +74,7 @@ FROM binned GROUP BY 1, 2
 
 # dup_groups: the D3 bucket CTE chain feeds a pair CTE; transitive closure +
 # min-label resolved with a recursive CTE (DuckDB's declarative equivalent of
-# the Spark side's iterative min-label propagation).
+# the Spark side's connected components).
 # CC label chain: bucket CTEs + pair/edge/transitive-closure/label CTEs —
 # shared by dup_groups and the curation-pipeline funnel.
 from .dedup_oracles import closure_ctes  # noqa: E402

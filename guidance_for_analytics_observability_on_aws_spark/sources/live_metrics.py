@@ -124,7 +124,7 @@ def live_stage_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not tm.head(1):
         # The marker workload above GUARANTEES completed stages exist, so an
         # empty collection here means the collector itself is broken — fail
-        # loudly (repo convention, cf. dup_labels' non-convergence raise)
+        # loudly (repo convention, cf. dup_labels_star's non-convergence raise)
         # instead of emitting a 0-row "success".
         raise RuntimeError(
             "live collector returned no task metrics after the marker "

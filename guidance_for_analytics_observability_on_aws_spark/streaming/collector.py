@@ -223,7 +223,9 @@ class _AvailableNow:
         return self.spark.table(self._name)
 
     def collected(self, df: DataFrame) -> DataFrame:
-        return self.spark.createDataFrame(df.collect(), df.schema)
+        """``df`` materialized in the JVM before the run dir is removed;
+        later reads run no Python-worker stage."""
+        return df.localCheckpoint(eager=True)
 
     def __exit__(self, *exc) -> None:
         try:

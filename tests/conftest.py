@@ -50,6 +50,28 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.fast)
 
 
+def ntile_from_rank(k: int):
+    """Spark's ``ntile(k)`` recomputed from the ``_ranked_with_n``
+    contract columns ``rn``/``n`` in pure integer arithmetic — the
+    two-phase counterpart of one global NTILE window sort (T40's scores),
+    bit-identical: with ``q = n DIV k`` and ``r = n % k``, the first
+    ``r`` tiles hold ``q+1`` rows and the rest ``q`` (exactly Spark's
+    split), hence tile = ``ceil(rn/(q+1))`` up to the boundary
+    ``r·(q+1)`` and ``r + ceil((rn-boundary)/q)`` past it
+    (``greatest(q,1)`` guards the n < k case, where the boundary covers
+    every row and the ELSE branch is unreachable).
+    """
+    from pyspark.sql import functions as F
+
+    k = int(k)
+    return F.expr(
+        f"CASE WHEN rn <= (n % {k}) * (n DIV {k} + 1) "
+        f"THEN (rn + n DIV {k}) DIV (n DIV {k} + 1) "
+        f"ELSE n % {k} + (rn - (n % {k}) * (n DIV {k} + 1) + n DIV {k} - 1) "
+        f"DIV greatest(n DIV {k}, 1) END"
+    ).cast("long")
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")

@@ -1246,21 +1246,31 @@ def test_vocab_coverage_monotone(spark, sf_dir):
 
 
 def test_star_cc_matches_min_label_and_handles_long_paths(spark, sf_dir):
-    """P15: the star algorithm's groups equal P4's min-label groups on
-    the real corpus, and on a planted 64-node PATH (diameter 63 — the
-    shape min-label propagation needs ~diameter rounds for) it converges
+    """P15: the driver union-find gate path gives the same labels as the
+    forced distributed star loop on the real corpus's LSH pair graph and
+    on ``dedup_containment_banded``'s verified graph (the one curation
+    v2 feeds it), and on a planted 64-node PATH (diameter 63 — the shape
+    min-label propagation needs ~diameter rounds for) the loop converges
     within the round budget and returns one component."""
+    from guidance_for_analytics_observability_on_aws_spark.operators.dedup import (
+        dedup_containment_banded,
+        dedup_minhash_lsh,
+    )
     from guidance_for_analytics_observability_on_aws_spark.operators.pipeline import (
-        dup_groups,
-        dup_groups_star,
         dup_labels_star,
     )
     from guidance_for_analytics_observability_on_aws_spark.sources.tables import load_tables
 
     docs = load_tables(spark, sf_dir)["documents"]
-    a = {r.group_id: r.doc_ids for r in dup_groups(docs).collect()}
-    b = {r.group_id: r.doc_ids for r in dup_groups_star(docs).collect()}
-    assert a == b
+    for graph in (dedup_minhash_lsh, dedup_containment_banded):
+        pairs = graph(docs).select("doc_a", "doc_b").localCheckpoint(eager=True)
+        gate = {tuple(r) for r in dup_labels_star(None, pairs=pairs).collect()}
+        loop = {
+            tuple(r)
+            for r in dup_labels_star(None, pairs=pairs, driver_max_edges=0).collect()
+        }
+        assert gate, graph.__name__
+        assert gate == loop, graph.__name__
     # planted path 0-1-2-...-63: the DISTRIBUTED star loop (forced past
     # the r14 driver union-find gate) must resolve it in <= 10 rounds
     # (log2(64)=6 plus slack), where min-label would need ~63.
@@ -1282,6 +1292,30 @@ def test_star_cc_matches_min_label_and_handles_long_paths(spark, sf_dir):
         for r in dup_labels_star(None, max_iter=10, pairs=path).collect()
     }
     assert drv == dist
+
+
+def test_dup_labels_star_gate_path_never_checkpoints(spark, monkeypatch):
+    """Under the edge-count gate the labels come from one take over the
+    lazy distinct edge frame and a driver union-find: no checkpoint is
+    taken, so a ``localCheckpoint`` that raises cannot stop it. Duplicate,
+    reversed and self pairs collapse to the component minima."""
+    from pyspark.sql import DataFrame
+
+    from guidance_for_analytics_observability_on_aws_spark.operators.pipeline import (
+        dup_labels_star,
+    )
+
+    pairs = spark.createDataFrame(
+        [(5, 3), (3, 5), (3, 9), (9, 9), (20, 11), (11, 20), (11, 14), (7, 7)],
+        "doc_a long, doc_b long",
+    )
+
+    def _no_checkpoint(self, eager=True):
+        raise AssertionError("sub-gate CC path checkpointed")
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", _no_checkpoint)
+    got = {tuple(r) for r in dup_labels_star(None, pairs=pairs).collect()}
+    assert got == {(3, 3), (5, 3), (9, 3), (11, 11), (14, 11), (20, 11)}
 
 
 def test_pq_planted_copy_and_ranking_signal(spark, sf_dir):
@@ -3132,15 +3166,13 @@ def test_red_panel_contracts(spark, sf_dir, two_phase_equal):
 
 
 def test_ntile_from_rank_matches_spark_ntile(spark):
-    """`_ntile_from_rank` must reproduce Spark's ntile() split exactly
-    for every (n, k) shape — including n < k, where every row gets its
-    own tile and the ELSE branch (guarded q=0 division) is unreachable."""
+    """`ntile_from_rank` (conftest) must reproduce Spark's ntile() split
+    exactly for every (n, k) shape — including n < k, where every row gets
+    its own tile and the ELSE branch (guarded q=0 division) is
+    unreachable."""
+    from conftest import ntile_from_rank
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-
-    from guidance_for_analytics_observability_on_aws_spark.operators.observability import (
-        _ntile_from_rank,
-    )
 
     for n in (1, 2, 3, 4, 5, 6, 11, 13, 25):
         for k in (2, 3, 5, 7):
@@ -3149,7 +3181,7 @@ def test_ntile_from_rank_matches_spark_ntile(spark):
             )
             got = {
                 r.rn: r.tile
-                for r in df.select("rn", _ntile_from_rank(k).alias("tile")).collect()
+                for r in df.select("rn", ntile_from_rank(k).alias("tile")).collect()
             }
             want = {
                 r.rn: r.tile

@@ -589,9 +589,11 @@ def test_global_rank_family_distributed_bit_equal(
     """The five operators that rank data-dependent cardinalities
     (customers, vocabulary types, sketch keys, executors — all of which
     GROW with the corpus) rank with one global window; the shared
-    two-phase rank (`_prefix_sum`/`_global_desc_ranked`/`_ntile_from_rank`)
-    over the frame each one ranks must give bit-identical ranks, and only
-    its plan carries the `_pid` slice ranks."""
+    two-phase rank (`_prefix_sum`/`_global_desc_ranked`, with conftest's
+    `ntile_from_rank` for the RFM tiles) over the frame each one ranks
+    must give bit-identical ranks, and only its plan carries the `_pid`
+    slice ranks."""
+    from conftest import ntile_from_rank
     from pyspark.sql import functions as F
 
     from guidance_for_analytics_observability_on_aws_spark.functions.text import (
@@ -637,7 +639,7 @@ def test_global_rank_family_distributed_bit_equal(
         ):
             ranked = obs._ranked_with_n(
                 per_cust, "_g", [key_col, "o_custkey"], distributed=True
-            ).select("o_custkey", obs._ntile_from_rank(5).alias(score))
+            ).select("o_custkey", ntile_from_rank(5).alias(score))
             dist = dist.join(ranked, "o_custkey")
         return out.select(*dist.columns), dist
 

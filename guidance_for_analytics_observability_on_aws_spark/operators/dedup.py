@@ -87,15 +87,13 @@ def _containment_cols() -> list:
     ]
 
 
-def _shingle_pair_intersections(
-    documents: DataFrame, base: DataFrame | None = None
-) -> DataFrame:
+def _shingle_pair_intersections(documents: DataFrame) -> DataFrame:
     """(doc_a, doc_b, intersection_size, size_a, size_b) for every document
-    pair sharing ≥1 shingle — the scaffolding D2 (Jaccard), D14
-    (containment) and D15 (banded) all normalize; ONE definition so the
-    join/size semantics can never diverge between them. ``base`` lets D15
-    substitute a candidate-restricted (doc_id, toks) base while keeping
-    the identical join/size arithmetic.
+    pair sharing ≥1 shingle — the all-pairs scaffolding D2 (Jaccard) and
+    D14 (containment) both normalize; ONE definition so the join/size
+    semantics can never diverge between them. Operators that already hold
+    candidate pairs score them with :func:`_verify_pairs`, the same
+    arithmetic per pair.
 
     The (doc_id, toks) base is materialized ONCE (localCheckpoint): it is
     referenced four times below (both self-join sides + both size lookups)
@@ -103,10 +101,9 @@ def _shingle_pair_intersections(
     otherwise (16 parquet scans measured vs 1). Local timing is unchanged
     (page cache absorbs the re-scans); the point is object-storage reads
     at scale, where 4× corpus scans are 4× the cost. The self-join
-    fan-out, not the scans, dominates compute — which is D15's job to
-    prune."""
-    if base is None:
-        base = _shingle_base(documents).localCheckpoint(eager=True)
+    fan-out, not the scans, dominates compute — which is what candidate
+    blocking (D15, D30, D31) prunes."""
+    base = _shingle_base(documents).localCheckpoint(eager=True)
     sizes = base.select(
         "doc_id", F.size(shingles(F.col("toks"))).cast("long").alias("sz")
     )
@@ -135,19 +132,64 @@ def _shingle_pair_intersections(
     )
 
 
-def dedup_ngram_jaccard(
-    documents: DataFrame, threshold: float = 0.8, base: DataFrame | None = None
-) -> DataFrame:
+def _verify_pairs(pairs: DataFrame, base: DataFrame) -> DataFrame:
+    """``pairs`` (doc_a, doc_b, …) with each pair's exact D2 overlap
+    appended: ``intersection_size`` = ``size(array_intersect)`` of the two
+    distinct-shingle arrays, ``size_a`` and ``size_b`` — the values
+    :func:`_shingle_pair_intersections` counts through its co-shingle
+    self-join, computed per candidate pair instead, so the work is linear
+    in the candidates. ``base`` is either (doc_id, toks), whose arrays are
+    then built after the join (candidate docs only), or (doc_id, sh) with
+    the arrays already built. A pair sharing no shingle keeps
+    ``intersection_size`` 0 where the self-join would drop it.
+
+    shuffle_hash, NOT broadcast: Catalyst's size estimate undercounts the
+    array payload and elects to broadcast it — measured 8–10 s vs 1.5–2 s
+    for the hash-partitioned join at 10× sf0.1 (D30), and at 100 TB a
+    corpus-sized array broadcast is impossible outright; hash-partitioning
+    ships each array once per scoring side."""
+    col = "sh" if "sh" in base.columns else "toks"
+    arr = F.col if col == "sh" else (lambda c: shingles(F.col(c)))
+    # Both sides join the SAME unrenamed frame, so the second side's
+    # exchange is a reuse of the first (one shuffle of the base, not two).
+    side = base.select("doc_id", col).hint("shuffle_hash")
+    a, b = side.alias("va"), side.alias("vb")
+    joined = pairs.join(a, pairs["doc_a"] == F.col("va.doc_id")).join(
+        b, pairs["doc_b"] == F.col("vb.doc_id")
+    )
+    arrays = joined.select(
+        *[pairs[c] for c in pairs.columns],
+        arr(f"va.{col}").alias("sh_a"),
+        arr(f"vb.{col}").alias("sh_b"),
+    )
+    return arrays.select(
+        *pairs.columns,
+        F.size(F.array_intersect("sh_a", "sh_b")).cast("long").alias(
+            "intersection_size"
+        ),
+        F.size("sh_a").cast("long").alias("size_a"),
+        F.size("sh_b").cast("long").alias("size_b"),
+    )
+
+
+def _shared_shingle_base(documents: DataFrame) -> DataFrame:
+    """The (doc_id, toks) :func:`_shingle_base` of ``documents``,
+    materialized once per session and corpus (see
+    :func:`~.similarity._shared_frame`): the default base of D3's
+    signatures, D15's verification and P17's graded methods, so one
+    corpus scan tokenizes for all of them."""
+    return _shared_frame("shingle-base", documents, lambda: _shingle_base(documents))
+
+
+def dedup_ngram_jaccard(documents: DataFrame, threshold: float = 0.8) -> DataFrame:
     """D2: exact 3-gram-shingle Jaccard candidate pairs (≥ threshold).
 
     Correctness baseline (all-pairs within shared shingles — quadratic in
     shingle document frequency). The wired production path at scale is
     :func:`dedup_containment_banded` (D15), which runs this exact scoring
-    arithmetic over D3's LSH candidate pairs only. ``base`` lets a
-    multi-method caller (P17) share one materialized (doc_id, toks)
-    corpus pass across every method it grades.
+    arithmetic over D3's LSH candidate pairs only.
     """
-    out = _shingle_pair_intersections(documents, base=base).select(
+    out = _shingle_pair_intersections(documents).select(
         "doc_a",
         "doc_b",
         "intersection_size",
@@ -279,15 +321,19 @@ def dedup_minhash_lsh(
     smaller).
 
     ``sig`` lets a caller that already materialized the signatures (D18,
-    P17) feed them in. The candidate graph is served through the session
-    shared-frame registry, one entry per ``n_splits`` (see
+    P17) feed them in. Without ``base`` the signatures read the
+    session-shared shingle base (:func:`_shared_shingle_base`), which
+    D15's verification then reuses. The candidate graph is served through
+    the session shared-frame registry, one entry per ``n_splits`` (see
     :func:`~.similarity._shared_frame`): P4/P5/P10/P15/P19 and D15's
     candidate stage all consume this exact frame per corpus.
     """
     def _build() -> DataFrame:
+        if sig is not None:
+            return _lsh_candidate_pairs(sig, n_splits=n_splits)
+        b = base if base is not None else _shared_shingle_base(documents)
         return _lsh_candidate_pairs(
-            sig if sig is not None else minhash_signatures(documents, base=base),
-            n_splits=n_splits,
+            minhash_signatures(documents, base=b), n_splits=n_splits
         )
 
     return _shared_frame("lsh-cand", documents, _build, n_splits)
@@ -417,11 +463,11 @@ def dedup_containment_banded(
 
     Why this shape survives 100×: the all-pairs scaffold
     (:func:`_shingle_pair_intersections`) is quadratic in shared-shingle
-    fan-out, while here the expensive shingle self-join runs ONLY over
-    documents that appear in some LSH bucket pair — the corpus is first
-    cut to candidate docs (LSH output, orders of magnitude smaller than
-    the corpus), then scored exactly, then intersected with the candidate
-    PAIR set. Every surviving pair carries the same exact
+    fan-out, while here each LSH candidate PAIR (LSH output, orders of
+    magnitude smaller than the corpus) is scored directly: both docs'
+    distinct-shingle arrays are joined onto the pair and intersected
+    (:func:`_verify_pairs`), so no co-shingle pair outside the candidates
+    is ever generated. Every surviving pair carries the same exact
     jaccard/containment arithmetic as D2/D14, so precision vs the exact
     baselines is 1.0 by construction; recall is the LSH banding bound
     ``1-(1-s^r)^b`` (b=4 bands, r=4 rows), asserted against the exact
@@ -438,53 +484,28 @@ def dedup_containment_banded(
     data is sublinear, steeper than cheap queries only because this is
     real compute with no fixed overhead to amortize.
     """
-    # ONE corpus scan: the (doc_id, toks) base is derived from documents
-    # exactly once and materialized (localCheckpoint, the split_leak_proof
-    # pattern), then shared into BOTH the MinHash/LSH candidate pass and
-    # the candidate-restricted exact-scoring pass — previously each
-    # re-derived it from raw documents (two full corpus scans; at 100 TB
-    # the second scan is pure object-storage cost). `cand` is likewise
-    # materialized (D3's shared frame): without it the LSH subtree
-    # re-executes once per downstream reference (~5×, 41-Exchange plan
-    # measured). `cand` is the LSH edge list; `base` one row per
-    # CANDIDATE doc — both ≪ corpus.
+    # ONE corpus scan: without ``base`` the (doc_id, toks) base is the
+    # session-shared shingle base D3's signatures already materialized,
+    # so the candidate pass and the verification read one checkpoint.
+    # `cand` is likewise materialized (D3's shared frame): without it the
+    # LSH subtree re-executes once per downstream reference (~5×,
+    # 41-Exchange plan measured).
     def _build() -> DataFrame:
-        base_all = (
-            base
-            if base is not None
-            else _shingle_base(documents).localCheckpoint(eager=True)
-        )
         pairs = (
             cand
             if cand is not None
-            else dedup_minhash_lsh(documents, base=base_all).select("doc_a", "doc_b")
+            else dedup_minhash_lsh(documents, base=base).select("doc_a", "doc_b")
         )
-        cand_docs = (
-            pairs.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        restricted = (
-            base_all.join(cand_docs, "doc_id")
-            .localCheckpoint(eager=True)
-        )
-        # The EXACT D2/D14 join/size arithmetic over the candidate-
-        # restricted base (one shared definition — see
-        # _shingle_pair_intersections), then pruned to candidate PAIRS:
-        # co-shingle pairs among candidate docs that are not LSH
-        # candidates drop here.
-        scored = (
-            _shingle_pair_intersections(documents, base=restricted)
-            .join(pairs, ["doc_a", "doc_b"])
-            .select(
-                "doc_a",
-                "doc_b",
-                "intersection_size",
-                "size_a",
-                "size_b",
-                _jaccard_col(),
-                *_containment_cols(),
-            )
+        scored = _verify_pairs(
+            pairs, base if base is not None else _shared_shingle_base(documents)
+        ).select(
+            "doc_a",
+            "doc_b",
+            "intersection_size",
+            "size_a",
+            "size_b",
+            _jaccard_col(),
+            *_containment_cols(),
         )
         return scored.filter(
             (F.col("jaccard") >= jaccard_threshold)
@@ -580,8 +601,9 @@ def dedup_paragraph_minhash(
     SAME single definitions: :func:`_paragraph_base` re-keys the corpus
     as (pid, tokens), :func:`minhash_signatures` + banding generate
     CROSS-DOCUMENT candidate paragraph pairs (same-doc repetition is
-    D34's territory), the exact D2 shingle arithmetic re-scores
-    candidates at Jaccard ≥ ``threshold``, and a per-document rollup
+    D34's territory), :func:`_verify_pairs` re-scores each candidate
+    pair with the exact D2 shingle arithmetic at Jaccard ≥
+    ``threshold``, and a per-document rollup
     reports the duplicated-paragraph mass (the X17 shape at paragraph
     level): paragraphs and tokens total vs in some verified cross-doc
     duplicate pair. Only docs carrying dup mass emit a row — the
@@ -589,7 +611,7 @@ def dedup_paragraph_minhash(
 
     100 TB: everything rides the already-bounded D3/D15 machinery —
     per-shingle signature compute, (band, hash)-bucketed candidate
-    generation (never all-pairs), candidate-restricted exact scoring;
+    generation (never all-pairs), per-candidate-pair exact scoring;
     the rollup is one groupBy over paragraph rows. Fully hash-exact
     (md5 minhash + exact Jaccard in both engines).
     """
@@ -601,15 +623,8 @@ def dedup_paragraph_minhash(
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )
-    cand_pids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    para_cand = para.join(cand_pids, "doc_id").localCheckpoint(eager=True)
     verified = (
-        _shingle_pair_intersections(None, base=para_cand)
-        .join(cand, ["doc_a", "doc_b"])
+        _verify_pairs(cand, para)
         .select("doc_a", "doc_b", _jaccard_col())
         .filter(F.col("jaccard") >= threshold)
     )
@@ -1050,11 +1065,11 @@ def dedup_sorted_neighborhood(
     rank-band self-join is rewritten as an EQUI-join: docs bucket by
     ``(rn−1) DIV window`` and each left row probes exactly its own and the
     next bucket, so the neighborhood condition ``0 < rn_b − rn_a <
-    window`` never plans a non-equi join. Each candidate is scored by one
-    JVM-side ``array_intersect`` over the two distinct-shingle arrays —
-    D2's exact Jaccard arithmetic (identical intersection/union algebra),
-    threshold applied as the cross-multiplied integer inequality
-    ``inter·100 ≥ pct·union``. All-integer until the final reported
+    window`` never plans a non-equi join. Each candidate is scored by
+    :func:`_verify_pairs`, one JVM-side ``array_intersect`` over the two
+    distinct-shingle arrays — D2's exact Jaccard arithmetic (identical
+    intersection/union algebra), threshold applied as the cross-multiplied
+    integer inequality ``inter·100 ≥ pct·union``. All-integer until the final reported
     ratio; full hash-exact DuckDB oracle.
 
     SCALE_r8 attribution: the 10× cold-first-pass ratio (~5×) is NOT
@@ -1064,7 +1079,7 @@ def dedup_sorted_neighborhood(
     remaining time the LINEAR checkpoint materialization of the
     (skey, shingle-array) corpus pass — per-candidate work is
     rank-bounded (N·(w−1) pairs) and every shuffle is linear in corpus
-    size. The scoring joins are pinned shuffle-hash (see inline note):
+    size. The scoring joins are pinned shuffle-hash (:func:`_verify_pairs`):
     auto-broadcast of the array table measured 8–10 s vs 1.5–2 s and
     cannot exist at 100 TB.
     """
@@ -1111,31 +1126,9 @@ def dedup_sorted_neighborhood(
             (F.col("rn_b") - F.col("rn_a")).cast("long").alias("rank_gap"),
         )
     )
-    # shuffle_hash, NOT broadcast: Catalyst's size estimate undercounts the
-    # shingle-array payload and elects to broadcast it — measured 8–10 s vs
-    # 1.5–2 s for the hash-partitioned join at 10× sf0.1, and at 100 TB an
-    # array-table broadcast is impossible outright; hash-partitioning
-    # ships each array once per scoring side.
-    sh = base.select("doc_id", "sh").hint("shuffle_hash")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
     union = F.col("size_a") + F.col("size_b") - F.col("intersection_size")
     return (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "rank_gap",
-            inter.alias("intersection_size"),
-            F.size("sh_a").cast("long").alias("size_a"),
-            F.size("sh_b").cast("long").alias("size_b"),
-        )
+        _verify_pairs(cand, base)
         .filter(
             F.col("intersection_size") * 100 >= F.lit(int(threshold_pct)) * union
         )
@@ -1161,7 +1154,8 @@ def dedup_prefix_filter(
     the bound gives |r∩s| ≤ ceil(t·|r|) − 1, a contradiction — so the
     smallest common token lies inside BOTH prefixes and the prefix join
     finds every qualifying pair. Candidates are then exact-verified with
-    D2's scoring (array_intersect + the identical float Jaccard filter),
+    D2's scoring (:func:`_verify_pairs` + the identical float Jaccard
+    filter),
     so the output EQUALS ``dedup_ngram_jaccard`` row-for-row (pinned in
     tests) at a fraction of the join fan-out: D2's inverted-index join
     explodes on every shared shingle, the prefix join only on the
@@ -1172,7 +1166,7 @@ def dedup_prefix_filter(
     pass each (the rank window partitions per doc — bounded by doc
     size); the candidate join keys on prefix tokens whose document
     frequency the ordering deliberately minimizes; scoring joins are
-    shuffle-hash on the checkpointed array table (the D30 pin —
+    shuffle-hash on the checkpointed array table (:func:`_verify_pairs` —
     broadcasting arrays measured 5× slower and is impossible at 100 TB).
     Prefix length is all-integer (``n − (pct·n + 99) DIV 100 + 1``);
     full hash-exact DuckDB oracle mirrors the same algorithm.
@@ -1193,27 +1187,10 @@ def dedup_prefix_filter(
         "doc_id", shingles(F.col("toks")).alias("sh")
     ).localCheckpoint(eager=True)
     cand = prefix_filter_candidates(base, threshold_pct)
-    pct = int(threshold_pct)
-    sh = base.hint("shuffle_hash")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
     return (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            inter.alias("intersection_size"),
-            F.size("sh_a").cast("long").alias("size_a"),
-            F.size("sh_b").cast("long").alias("size_b"),
-        )
+        _verify_pairs(cand, base)
         .withColumn("jaccard", _jaccard_col())
-        .filter(F.col("jaccard") >= pct / 100.0)
+        .filter(F.col("jaccard") >= int(threshold_pct) / 100.0)
     )
 
 

@@ -1546,7 +1546,7 @@ def dedup_eval_report(documents: DataFrame) -> DataFrame:
     between — the monotonicity is pinned in tests.
     """
     from .dedup import (
-        _shingle_base,
+        _shared_shingle_base,
         dedup_containment_banded,
         dedup_minhash_estimate,
         dedup_prefix_filter,
@@ -1558,8 +1558,9 @@ def dedup_eval_report(documents: DataFrame) -> DataFrame:
     # ONE (doc_id, toks) corpus materialization shared by ALL graded
     # methods — without it each of the five re-derives the corpus union
     # (five full corpus scans at object-store cost; ~2× the report's
-    # wall-clock measured at sf0.1 when snm_exact joined the panel).
-    shared = _shingle_base(documents).localCheckpoint(eager=True)
+    # wall-clock measured at sf0.1 when snm_exact joined the panel). It is
+    # the session-shared shingle base, so a warm D3/D15 call leaves it.
+    shared = _shared_shingle_base(documents)
     # The five frames are mutually independent GIVEN the sig/cand chain —
     # r15 materialized them concurrently (§2.6), but each MinHash-family
     # method still derived its own signature + banding frames (the

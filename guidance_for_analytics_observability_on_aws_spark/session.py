@@ -51,6 +51,11 @@ def get_spark(app_name: str = "analytics-observability-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Spark merges this with the worker's own PYTHONPATH.
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        # No Python call-site capture: with it on, every functions.* call
+        # and Column method walks the Python stack and makes ~5 py4j round
+        # trips while the plan is built. The cost of turning it off: Spark
+        # error messages lose their Python file:line query context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
 
@@ -63,7 +68,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
     comparisons go through naive timestamps. ``spark.executorEnv.PYTHONPATH``
     (set by :func:`get_spark`) is NOT runtime-settable: an external session
     must put this package on its executors' path itself, or by-reference
-    UDFs fail in the workers with ``ModuleNotFoundError``.
+    UDFs fail in the workers with ``ModuleNotFoundError``. Nor is
+    ``spark.python.sql.dataFrameDebugging.enabled`` (static; ``get_spark``
+    sets it false): an external session keeps its own setting, and with
+    it on every ``functions.*`` call and ``Column`` method captures its
+    Python call site over py4j while plans are built.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:

@@ -23,7 +23,7 @@ FAST_ORACLE_SPOTS = {
     "tpch_q1_pricing_summary",     # T: scan-agg
     "tpch_q3_shipping_priority",   # T: join strategy
     "dedup_minhash_lsh",           # D: signature + banding join
-    "dedup_containment_banded",    # D: candidate-restricted exact scoring
+    "dedup_containment_banded",    # D: per-candidate-pair exact scoring
     "similarity_eval_report",      # D: concurrent-materialization report
     "dup_groups",                  # P: CC over the candidate graph
     "dedup_eval_report",           # P: the composed grading report

@@ -682,6 +682,45 @@ def test_banded_containment_precision_and_recall(spark, sf_dir):
         assert r.containment_a <= 1.0 and r.containment_b <= 1.0
 
 
+def test_verify_pairs_keeps_pair_intersection_arithmetic(spark, sf_dir):
+    """The per-pair verifier (D15, D30, D31, D43) scores with D2's
+    arithmetic: over every co-shingle pair of the corpus, and over D3's
+    LSH candidates that share a shingle, its (intersection_size, size_a,
+    size_b) equal :func:`_shingle_pair_intersections`' row for row, with
+    the same dtypes, from a (doc_id, toks) base and from a (doc_id, sh)
+    array base alike."""
+    from pyspark.sql import functions as F
+
+    from guidance_for_analytics_observability_on_aws_spark.operators.dedup import (
+        _shingle_base,
+        _shingle_pair_intersections,
+        _verify_pairs,
+        dedup_minhash_lsh,
+        shingles,
+    )
+    from guidance_for_analytics_observability_on_aws_spark.sources.tables import load_tables
+
+    docs = load_tables(spark, sf_dir)["documents"]
+    base = _shingle_base(docs)
+    arrays = base.select("doc_id", shingles(F.col("toks")).alias("sh"))
+    cols = ["doc_a", "doc_b", "intersection_size", "size_a", "size_b"]
+    ref = _shingle_pair_intersections(docs).select(cols)
+    want = sorted(ref.collect())
+    assert want, "no co-shingle pairs — test data changed?"
+    for b in (base, arrays):
+        got = _verify_pairs(ref.select("doc_a", "doc_b"), b).select(cols)
+        assert got.dtypes == ref.dtypes
+        assert sorted(got.collect()) == want
+    cand = dedup_minhash_lsh(docs).select("doc_a", "doc_b")
+    on_cand = (
+        _verify_pairs(cand, base)
+        .filter(F.col("intersection_size") > 0)
+        .select(cols)
+    )
+    want_cand = sorted(ref.join(cand, ["doc_a", "doc_b"]).select(cols).collect())
+    assert want_cand and sorted(on_cand.collect()) == want_cand
+
+
 def test_paragraph_minhash_planted_recovery(spark, sf_dir):
     """D43: every corpus exact-copy pair (source ≡ 0 mod 25 and its +1M
     plant) must surface with dup_frac EXACTLY 1.0 on both sides —

@@ -406,11 +406,12 @@ def test_stratified_sample_uses_window_group_limit(spark, sf_dir):
 
 
 def test_banded_dedup_plan_reads_only_checkpoints(spark, sf_dir):
-    """D15's scoring join must consume ONLY the two localCheckpoint
-    materializations (candidate pairs + candidate-doc shingle base) — a
-    parquet scan in the final plan would mean the MinHash/LSH subtree is
-    being re-derived per reference (the 41-Exchange regression this
-    operator's checkpoints exist to prevent)."""
+    """D15's scoring join must consume ONLY checkpointed frames (the LSH
+    candidate pairs and the session-shared shingle base, the verified
+    pairs served as a checkpoint of their own) — a parquet scan in the
+    final plan would mean the MinHash/LSH subtree is being re-derived per
+    reference (the 41-Exchange regression these checkpoints exist to
+    prevent)."""
     plan = _executed_plan(REGISTRY["dedup_containment_banded"].builder(spark, sf_dir))
     assert "Scan parquet" not in plan
     assert "Scan ExistingRDD" in plan  # the checkpointed inputs
@@ -419,8 +420,8 @@ def test_banded_dedup_plan_reads_only_checkpoints(spark, sf_dir):
 def test_banded_dedup_single_corpus_scan(spark, sf_dir, monkeypatch):
     """The (doc_id, toks) shingle base must be DERIVED FROM documents
     exactly once and shared into both the MinHash/LSH pass and the
-    candidate-restricted scoring pass — a second _shingle_base call means
-    a second full corpus scan at 100 TB."""
+    per-pair verification pass — a second _shingle_base call means a
+    second full corpus scan at 100 TB."""
     from guidance_for_analytics_observability_on_aws_spark.operators import dedup
 
     calls = []
@@ -443,6 +444,45 @@ def test_banded_dedup_single_corpus_scan(spark, sf_dir, monkeypatch):
     dedup.dedup_containment_banded(docs)
     assert len(calls) == 1, f"_shingle_base derived {len(calls)}× from documents"
     trained_cache_clear(loaded_too=False)
+
+
+def test_curation_v2_job_dispatch_after_lsh(spark, sf_dir):
+    """P11 after D3 on the same corpus dispatches at most 10 Spark jobs:
+    D15 verifies the LSH candidates pair by pair over the session-shared
+    shingle base D3 left, with no checkpoint of its own base or of a
+    candidate-restricted base (the former path ran 17 jobs here)."""
+    from guidance_for_analytics_observability_on_aws_spark.operators import (
+        dedup,
+        pipeline,
+    )
+    from guidance_for_analytics_observability_on_aws_spark.operators.similarity import (
+        trained_cache_clear,
+    )
+
+    sc = spark.sparkContext
+    group = "test-curation-v2-dispatch"
+    trained_cache_clear(loaded_too=False)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    dedup.dedup_minhash_lsh(docs).toPandas()
+    sc.setJobGroup(group, "curation_pipeline_v2 after dedup_minhash_lsh")
+    try:
+        pipeline.curation_pipeline_v2(docs).toPandas()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+        trained_cache_clear(loaded_too=False)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 10, f"curation_pipeline_v2 ran {len(jobs)} jobs"
+
+
+def test_session_skips_python_call_site_capture(spark):
+    """``get_spark`` turns off PySpark's DataFrame query-context capture,
+    which walks the Python stack and makes py4j round trips on every
+    ``functions.*`` call and ``Column`` method while plans are built."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
 
 
 def test_log_sample_uses_window_group_limit(spark, sf_dir):
